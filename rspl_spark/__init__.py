@@ -7,7 +7,8 @@ Layers:
 - ``rspl_spark.dsl``       — the rspl language: Get/Put stream processors,
   combinators (map, filter, compose, alternate, bind, generate), a compiler
   lowering stateless terms to native DataFrame expressions, and a stateful
-  interpreter running residual terms via applyInPandas.
+  interpreter running residual terms over key-sorted partitions via
+  mapInArrow.
 - ``rspl_spark.operators`` — relational operator surface (joins, aggs,
   windows, set ops, as-of join, dedup, similarity, text analysis).
 - ``rspl_spark.streaming`` — Structured Streaming sources/sinks and the

@@ -13,7 +13,7 @@ reference switches to. Two facades:
 
 The pipeline records an rspl term (compose of combinators, reference
 semantics exactly); ``to_df`` tries the Catalyst compiler first and falls
-back to the keyed applyInPandas interpreter for stateful terms.
+back to the keyed mapInArrow interpreter for stateful terms.
 
 **Tables** (the engine's analytic operator families — graph, behavioral,
 time-series, rolling sketches — discoverable in one place instead of

@@ -11,9 +11,9 @@ Two execution paths:
   expressions — Catalyst fuses them (its analog of the reference's Put/Get
   fusion, src/combinators.rs:101-120).
 - **interpret** (rspl_spark.dsl.interpreter): runs ANY term, including
-  stateful ones (alternate, multi-Get windows, FSMs), via applyInPandas
-  over seq-ordered partitions — the Spark analog of the trampolined
-  ``eval`` (src/lib.rs:249-285).
+  stateful ones (alternate, multi-Get windows, FSMs), via one mapInArrow
+  pass over partitions sorted by (key, seq), one ``eval_sp`` per key run —
+  the Spark analog of the trampolined ``eval`` (src/lib.rs:249-285).
 """
 
 from rspl_spark.dsl.core import Get, Put, StreamProcessor, eval_sp  # noqa: F401

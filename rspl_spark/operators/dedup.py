@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StringType
 
 MERSENNE_P = 2147483647  # 2^31 - 1
 
@@ -443,7 +444,9 @@ def _cc_union_find_driver(e: DataFrame) -> DataFrame:
     frame (columns u, v; no self-loops), computed driver-side by
     union-find with path compression. Returns the same (doc_id,
     cluster) rows the star fixpoint yields: one row per node appearing
-    in any edge, labeled with its component's minimum id."""
+    in any edge, labeled with its component's minimum id. Raising
+    spark.rspl.ccDriverMaxEdges grows what this holds in driver memory
+    and the rows it pickles back through createDataFrame."""
     parent: dict = {}
 
     def find(x):
@@ -516,23 +519,31 @@ def connected_components_star(
     # profile showed 3 star rounds over a 173-EDGE graph costing ~6s of
     # pure per-stage scheduling: ~5 shuffles + 2 jobs per round over
     # sub-KB data). Below the cutover the canonical edge set is
-    # collected (bounded: 64k edges ≈ 2 MB — the broadcast-threshold
-    # class, not a data-sized collect) and labeled by exact union-find
-    # with min-id roots, which is BIT-IDENTICAL to the star fixpoint
-    # (each node keyed to its component minimum — integer labels, no
-    # floats, no ties). Above the cutover, or under a small caller
-    # iteration budget (where the legacy path could return a partial
-    # non-converged labeling that exact union-find would NOT
-    # reproduce: star CC converges in ~log2(diameter) rounds and
-    # diameter <= n_edges, so a budget of log2(n_edges)+4 guarantees
-    # the legacy path converges and the two agree), the distributed
-    # path is byte-for-byte the one that always ran. Crossover measured
-    # in docs/bench/r16_cc_path_ab.json; override with
+    # collected (bounded: 262144 edges ≈ 4 MB of long pairs — the
+    # broadcast-threshold class, not a data-sized collect) and labeled
+    # by exact union-find with min-id roots, which is BIT-IDENTICAL to
+    # the star fixpoint (each node keyed to its component minimum —
+    # integer labels, no floats, no ties). Above the cutover, or under
+    # a small caller iteration budget (where the legacy path could
+    # return a partial non-converged labeling that exact union-find
+    # would NOT reproduce: star CC converges in ~log2(diameter) rounds
+    # and diameter <= n_edges; on all measured graphs the legacy path
+    # converges within a budget of log2(n_edges)+4, where the two
+    # agree), the distributed path is byte-for-byte the one that always
+    # ran. Only integral and string ids take the fast path: union-find
+    # orders ids with Python's `<`, which matches Spark's ordering for
+    # those but not for floats (Spark puts NaN above every number and
+    # treats NaN = NaN; Python NaN comparisons are all False).
+    # Crossover measured in docs/bench/r16_cc_path_ab.json; override with
     # spark.rspl.ccDriverMaxEdges (0 disables).
     import math as _math
 
     _iters_safe = _math.ceil(_math.log2(max(n_edges, 2))) + 4
-    if 0 < n_edges <= _cc_driver_max_edges(edges.sparkSession) and max_iters >= _iters_safe:
+    if (
+        isinstance(e.schema["u"].dataType, (IntegralType, StringType))
+        and 0 < n_edges <= _cc_driver_max_edges(edges.sparkSession)
+        and max_iters >= _iters_safe
+    ):
         return _cc_union_find_driver(e)
     converged = False
     for _ in range(max_iters):

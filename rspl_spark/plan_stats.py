@@ -38,12 +38,6 @@ def leaf_input_bytes(df: DataFrame) -> int:
         return -1
 
 
-def _parse_bytes(v: str) -> int:
-    from rspl_spark.streaming.sources import _parse_bytes as p
-
-    return p(v)
-
-
 def materialize_mode(spark, conf_key: str, default: str = "auto") -> str:
     """Read a tri-state materialization conf: "on" / "off" / "auto"
     (case-insensitive; unknown values fall back to ``default``)."""

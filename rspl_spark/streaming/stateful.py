@@ -109,8 +109,10 @@ def run_mealy_stream_tws(
             )
 
         def _load(self):
-            if self._state.exists():
-                return pickle.loads(self._state.get()[0])
+            # one state-server round trip: get() is None for a new key
+            row = self._state.get()
+            if row is not None:
+                return pickle.loads(row[0])
             return sp_factory(), 0, 0
 
         def _save(self, sp, n_out, worker_free) -> None:

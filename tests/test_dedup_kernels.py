@@ -132,3 +132,37 @@ def test_cc_driver_fast_path_parity_and_gating(spark):
     slow_plan = connected_components_star(df, max_iters=5)._jdf.queryExecution().optimizedPlan().toString()
     assert "LogicalRDD" in fast_plan or "LocalRelation" in fast_plan
     assert "Union" in slow_plan
+
+
+def test_cc_float_ids_with_nan_stay_on_distributed_path(spark):
+    """Float ids are gated off the driver union-find: Python's `<` and
+    dict keys treat every NaN as distinct and unordered, while Spark
+    treats NaN = NaN and orders it above every number. Default labels
+    must equal the forced-distributed ones, NaN node included."""
+    from rspl_spark.operators.dedup import connected_components_star
+
+    nan = float("nan")
+    pairs = [(1.0, 2.0), (2.0, nan), (nan, 5.0), (7.0, 8.0), (8.0, 9.5)]
+    df = spark.createDataFrame(pairs, "doc_a double, doc_b double")
+
+    def labels(out):
+        # NaN != NaN in tuples: compare NaN as a sentinel string
+        key = lambda x: "nan" if x != x else x  # noqa: E731
+        return {(key(d), key(c)) for d, c in out.collect()}
+
+    spark.conf.set("spark.rspl.ccDriverMaxEdges", "0")  # force distributed
+    try:
+        want = labels(connected_components_star(df))
+    finally:
+        spark.conf.unset("spark.rspl.ccDriverMaxEdges")
+    spark.conf.set("spark.rspl.ccDriverMaxEdges", "1000000")  # size gate open
+    try:
+        default = connected_components_star(df)
+        got = labels(default)
+    finally:
+        spark.conf.unset("spark.rspl.ccDriverMaxEdges")
+    assert got == want
+    assert want == {
+        (1.0, 1.0), (2.0, 1.0), (5.0, 1.0), ("nan", 1.0), (7.0, 7.0), (8.0, 7.0), (9.5, 7.0)
+    }
+    assert "Union" in default._jdf.queryExecution().optimizedPlan().toString()

@@ -180,9 +180,9 @@ def test_interpreter_rejects_null_stream_values(spark):
 def test_interpreter_rejects_null_in_float_streams(spark):
     """r14 ADVICE fix: a TRUE Spark NULL in a double-typed column must
     still fail loudly — pandas can't tell NULL from NaN after Arrow
-    conversion, but Spark can BEFORE the grouped map, via the projected
-    isNull flag. (Pre-fix, float streams lost the fail-loud contract
-    entirely: a genuine NULL silently entered the FSM as NaN.)"""
+    conversion, but the Arrow value column's null count can. (Pre-fix,
+    float streams lost the fail-loud contract entirely: a genuine NULL
+    silently entered the FSM as NaN.)"""
     import pytest
 
     from rspl_spark.dsl.interpreter import interpret_batch
@@ -199,8 +199,8 @@ def test_interpreter_rejects_null_in_float_streams(spark):
 def test_interpreter_allows_nan_in_float_streams(spark):
     """r13 ADVICE fix (mechanism updated r14): a legitimate NaN VALUE
     in a double-typed column must flow through, not raise — the NULL
-    guard keys on Spark-side isNull (NaN is not NULL), not on pandas
-    isna (which conflates the two)."""
+    guard keys on Arrow nulls (NaN is not NULL), not on pandas isna
+    (which conflates the two)."""
     import math
 
     from rspl_spark.dsl.interpreter import interpret_batch
@@ -239,3 +239,103 @@ def test_interpreter_multikey_parallelism_pinned(spark):
     assert "RepartitionByExpression" in plan, plan
     rows = {(r["k"], r["seq"]): r["value"] for r in out.collect()}
     assert rows[(2, 0)] == 21 and rows[(3, 2)] == 33
+
+
+def _swap_forever():
+    """Pairwise swap, built from local closures so Spark's workers get
+    it by value (a module-level test function pickles by reference)."""
+
+    def swap():
+        return Get(lambda n1: Get(lambda n2: Put(n2, lambda: Put(n1, swap))))
+
+    return swap()
+
+
+def _per_key(out, key_col="key"):
+    """{key: [value, ...] in output-seq order}; NaN keys map to "nan"."""
+    got = {}
+    for r in out.orderBy(key_col, "seq").collect():
+        k = r[key_col]
+        k = "nan" if isinstance(k, float) and k != k else k
+        got.setdefault(k, []).append(r["value"])
+    return got
+
+
+def test_interpreter_key_runs_cross_arrow_batches(spark):
+    """A key's rows span several Arrow batches (7 rows per batch): the
+    run left open at a batch edge carries over, so each key still sees
+    its whole stream in one eval_sp (the swap pairs straddle edges)."""
+    rows = [(k, i, k * 100 + i) for k in range(5) for i in range(23)]
+    df = spark.createDataFrame(rows, "key long, seq long, value long")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        got = _per_key(interpret_batch(_swap_forever(), df, "long", key_col="key"))
+    finally:
+        spark.conf.set(conf, old)
+    want = {k: list(eval_sp(_swap_forever(), [k * 100 + i for i in range(23)])) for k in range(5)}
+    assert got == want
+
+
+def test_interpreter_null_and_nan_keys_form_one_group_each(spark):
+    """As with groupBy, all NULL keys are one key and all NaN keys are
+    one key; a plain elementwise != would split them row by row."""
+    keys = [1.0, float("nan"), None, 2.0]
+    rows = [(k, i, i) for i in range(6) for k in keys]
+    df = spark.createDataFrame(rows, "key double, seq long, value long")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "4")
+    try:
+        got = _per_key(interpret_batch(_swap_forever(), df, "long", key_col="key"))
+    finally:
+        spark.conf.set(conf, old)
+    want = list(eval_sp(_swap_forever(), list(range(6))))
+    assert got == {1.0: want, "nan": want, None: want, 2.0: want}
+
+
+@pytest.mark.parametrize(
+    "key_type, keys",
+    [("string", ("a", None, "b")), ("struct<id: long>", ((1,), None, (2,)))],
+)
+def test_interpreter_null_string_and_struct_keys(spark, key_type, keys):
+    """NULL string keys group together; struct keys (no Arrow compare
+    kernel) fall back to comparing Python values."""
+    rows = [(k, i, i) for i in range(4) for k in keys]
+    df = spark.createDataFrame(rows, f"key {key_type}, seq long, value long")
+    got = _per_key(interpret_batch(_swap_forever(), df, "long", key_col="key"))
+    want = [1, 0, 3, 2]
+    assert got == {k: want for k in keys}
+
+
+def test_interpreter_silent_key_and_empty_input(spark):
+    """A key whose term emits nothing contributes no rows; an empty
+    input gives an empty result with the declared schema."""
+    sp = filter_sp(lambda v: v >= 10)
+    rows = [(k, i, k * 10 + i) for k in range(3) for i in range(4)]
+    df = spark.createDataFrame(rows, "key long, seq long, value long")
+    got = _per_key(interpret_batch(sp, df, "long", key_col="key"))
+    assert got == {1: [10, 11, 12, 13], 2: [20, 21, 22, 23]}
+
+    empty = interpret_batch(sp, df.limit(0), "long", key_col="key")
+    assert empty.collect() == []
+    assert empty.columns == ["key", "seq", "value"]
+    assert interpret_batch(sp, to_stream_df(spark, []), "long").collect() == []
+
+
+def test_interpreter_string_and_struct_out_types(spark):
+    """Struct values arrive as dicts, and outputs are cast to the
+    declared out_type: strings, and structs built from dicts."""
+    df = spark.createDataFrame(
+        [(0, "x", 1.5), (1, "y", 2.5)], "seq long, kind string, v double"
+    ).select("seq", F.struct("kind", "v").alias("value"))
+    as_str = interpret_batch(map_sp(lambda e: f"{e['kind']}={e['v']}"), df, "string")
+    assert collect_values(as_str) == ["x=1.5", "y=2.5"]
+
+    flip = map_sp(lambda e: {"name": e["kind"].upper(), "n": int(e["v"])})
+    as_struct = interpret_batch(flip, df, "struct<name: string, n: long>")
+    assert [r.asDict() for r in collect_values(as_struct)] == [
+        {"name": "X", "n": 1},
+        {"name": "Y", "n": 2},
+    ]
