@@ -7,6 +7,14 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 Headline set (BASELINE.md): scan-agg (Q1), 3-way join + top-k (Q3),
 6-way join (Q5), rollup, running-total window, as-of join, MinHash-LSH
 dedup pairs, brute-force cosine top-k, compiled DSL chain.
+
+Host-noise probes (``tools/ab.probes``) bracket the timed queries
+(additive keys, read relative to the idle readings): ``cpu_probe_sec``
+is ``perfbench.probes.cpu_probe`` (one 2M-iteration pure-Python loop)
+and ``cpu_probe_mc_sec`` is ``cpu_probe_parallel`` with one loop per
+core Spark was given ($SPARK_GRAFT_CPUS). Idle on a 4-vCPU Xeon host
+at local[4]: ~0.11-0.15 s and ~0.33-0.39 s. Multiples of those mean
+host throttle contaminated the totals; -1 means the probe failed.
 """
 
 from __future__ import annotations
@@ -20,6 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from rspl_spark.queries import load_registry
 from rspl_spark.session import get_spark
+from tools.ab import probes, steady
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -38,57 +47,12 @@ HEADLINE = [
 ]
 
 
-def cpu_probe() -> float:
-    """Pure-Python CPU reference (sum over range(20M)) — self-diagnosing
-    artifact for host throttle: on this box it reads ~0.35-0.4s idle and
-    2-3s under the observed host-level throttle (r8/r9 both recorded
-    throttle-contaminated totals that took judge re-runs to adjudicate).
-    Interpret headline seconds RELATIVE to this probe: if cpu_probe_sec
-    is multiples of ~0.4s, scale the totals down accordingly."""
-    t0 = time.time()
-    s = 0
-    for i in range(20_000_000):
-        s += i
-    assert s == 199999990000000
-    return round(time.time() - t0, 3)
-
-
-def _mc_work(n: int) -> int:
-    s = 0
-    for i in range(n):
-        s += i
-    return s
-
-
-def cpu_probe_mc() -> dict:
-    """Parallel twin of cpu_probe (r15 verdict ask #2): one sum-loop per
-    CPU, all at once via fork'd processes. The single-thread probe
-    demonstrably under-detects multi-core host throttle (r14/r15: probe
-    0.89s while 32-core stages ran 3.6x slow and the 8-core run beat 32
-    cores) — this probe saturates every core for ~1s, so contention that
-    only bites multi-core stages shows up as multiples of the ~0.4-0.5s
-    idle reading. Keys are ADDITIVE to the bench contract; interpret
-    sec/idle-sec as the effective core-availability factor."""
-    import multiprocessing as mp
-
-    n_procs = os.cpu_count() or 1
-    t0 = time.time()
-    try:
-        with mp.get_context("fork").Pool(n_procs) as pool:
-            results = pool.map(_mc_work, [20_000_000] * n_procs)
-        assert all(r == 199999990000000 for r in results)
-    except Exception:
-        return {"n_procs": n_procs, "sec": -1.0}
-    return {"n_procs": n_procs, "sec": round(time.time() - t0, 3)}
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-    probe_start = cpu_probe()
-    probe_mc_start = cpu_probe_mc()
     reg = load_registry()
     spark = get_spark("rspl-bench")
+    probe_start = probes(spark)
     # Warm the JVM/codegen paths so measured times are query time, not
     # first-call JIT/session setup: a scan-agg at the smallest SF, the
     # same at the TARGET SF (file listing + parquet footers + C2-compiling
@@ -122,20 +86,22 @@ def main() -> None:
               f"{[round(s, 3) for s in sorted(samples)]})", file=sys.stderr)
 
     total = round(sum(times.values()), 3)
+    probe_end = probes(spark)
+    cores = spark.sparkContext.defaultParallelism
     result = {
         "metric": "headline_queries_total_sec",
         "value": total,
         "unit": "sec",
         "queries": times,
         "sf": sf,
-        # host-health reference, measured BEFORE and AFTER the timed
-        # queries (see cpu_probe docstring): ~0.35-0.4s on this box
-        # idle; larger multiples = host throttle contaminating totals
-        "cpu_probe_sec": {"start": probe_start, "end": cpu_probe()},
-        # multi-core probe (additive key, r15 verdict ask #2): ~0.4-0.5s
-        # idle on this box; multiples = host-level multi-core throttle
-        # that the single-thread probe cannot see
-        "cpu_probe_mc_sec": {"start": probe_mc_start, "end": cpu_probe_mc()},
+        # host-health references before and after the timed queries
+        # (module docstring); the parallel one sees multi-core throttle
+        # that the single-thread probe cannot
+        "cpu_probe_sec": {"start": probe_start["single_s"], "end": probe_end["single_s"]},
+        "cpu_probe_mc_sec": {
+            when: {"n_procs": cores, "sec": p["parallel_s"]}
+            for when, p in (("start", probe_start), ("end", probe_end))
+        },
     }
     try:
         result["bucketed_join"] = bucketed_join_delta(spark, sf_dir)
@@ -167,22 +133,10 @@ def partsupp_probe(spark, reg, sf_dir: str) -> dict[str, float]:
     exact-cents aggregate). Noop-write timing, steady-state min of 2.
     Kept OUT of the headline total to preserve r1-baseline
     comparability."""
-    out: dict[str, float] = {}
-    for key, name in (
-        ("q9_sec", "q9_product_type_profit"),
-        ("q11_sec", "q11_important_stock"),
-    ):
-        fn = reg[name].fn
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = None
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None or dt < best else best
-        out[key] = round(best, 3)
-    return out
+    return {
+        key: steady(spark, lambda name=name: reg[name].fn(spark, sf_dir))[1]
+        for key, name in (("q9_sec", "q9_product_type_profit"), ("q11_sec", "q11_important_stock"))
+    }
 
 
 def sketch_trio_probe(spark, reg, sf_dir: str) -> dict[str, float]:
@@ -191,23 +145,14 @@ def sketch_trio_probe(spark, reg, sf_dir: str) -> dict[str, float]:
     noop write — NOT count(), which Catalyst can hollow out by pruning
     value columns through the aggregates (DEVNOTES r6). Steady-state
     min of 2, one number per sketch."""
-    out: dict[str, float] = {}
-    for key, name in (
-        ("cms_sec", "q_heavy_hitters_cms"),
-        ("hll_sec", "q_approx_distinct_hll"),
-        ("hist_sec", "q_approx_percentile_hist"),
-    ):
-        fn = reg[name].fn
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = None
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None or dt < best else best
-        out[key] = round(best, 3)
-    return out
+    return {
+        key: steady(spark, lambda name=name: reg[name].fn(spark, sf_dir))[1]
+        for key, name in (
+            ("cms_sec", "q_heavy_hitters_cms"),
+            ("hll_sec", "q_approx_distinct_hll"),
+            ("hist_sec", "q_approx_percentile_hist"),
+        )
+    }
 
 
 def _warm_python_workers(spark) -> None:
@@ -228,27 +173,18 @@ def embedding_pairs_probe(spark, reg, sf_dir: str) -> dict[str, float]:
     (fit + Arrow assignment + in-cell BLAS). Reported separately from the
     headline total so round-over-round comparisons stay stable; cold =
     first run in the session (includes the Lloyd fit), steady = min of 2
-    with the trained codebook memoized — the repeated-pipeline number."""
-    q = reg["q_embedding_cosine_pairs"].fn
-    t0 = time.time()
-    q(spark, sf_dir).count()
-    cold = time.time() - t0
-    best = None
-    for _ in range(2):
-        spark.catalog.clearCache()
-        t0 = time.time()
-        q(spark, sf_dir).count()
-        dt = time.time() - t0
-        best = dt if best is None or dt < best else best
-    return {"cold_sec": round(cold, 3), "steady_sec": round(best, 3)}
+    with the trained codebook memoized — the repeated-pipeline number.
+    Noop-write timing."""
+    cold, best = steady(spark, lambda: reg["q_embedding_cosine_pairs"].fn(spark, sf_dir))
+    return {"cold_sec": cold, "steady_sec": best}
 
 
 def mealy_throughput(spark) -> dict[str, float]:
     """Supplementary metric: the arbitrary-stateful-operator path
-    (applyInPandas keyed Mealy interpreter — the Python escape hatch for
-    semantics Catalyst can't express). 1M synthetic events across 1000
-    keys; reports rows/sec so regressions in the Arrow/chunk-ordering
-    machinery show up in the round-over-round record."""
+    (keyed Mealy interpreter, one sorted mapInArrow pass — the Python
+    escape hatch for semantics Catalyst can't express). 1M synthetic
+    events across 1000 keys; reports rows/sec so regressions in the
+    Arrow/key-run machinery show up in the round-over-round record."""
     from pyspark.sql import functions as F
 
     from rspl_spark.dsl import compose, filter_sp, map_sp
@@ -276,7 +212,7 @@ def bucketed_join_delta(spark, sf_dir: str) -> dict[str, float]:
     lineitem⋈orders fact join against bucketed-CTAS tables vs the plain
     parquet scan. Bucketed+sorted on the join key, the SortMergeJoin
     needs no Exchange and no Sort — the saved shuffle is the first-order
-    win at 100 TB. Plan snapshot: docs/plans/bucketed_join.txt.
+    win at 100 TB. The bucketed plan goes to stderr.
     """
     from pyspark.sql import functions as F
 
@@ -311,9 +247,7 @@ def bucketed_join_delta(spark, sf_dir: str) -> dict[str, float]:
         plan = shape(lb, ob)._jdf.queryExecution().executedPlan().toString()
         n_exchange = plan.count("Exchange")
         out["bucketed_plan_exchanges"] = n_exchange - 1  # 1 = the final 5-row agg
-        os.makedirs("docs/plans", exist_ok=True)
-        with open("docs/plans/bucketed_join.txt", "w") as f:
-            f.write(plan)
+        print(f"# bucketed_join plan:\n{plan}", file=sys.stderr)
         return out
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)

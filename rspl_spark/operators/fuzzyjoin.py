@@ -154,9 +154,7 @@ def fuzzy_self_join(
     # many fuzzy joins retains each call's (id, toks) blocks until then;
     # and localCheckpoint is non-recoverable on executor loss, fine in
     # local mode — a cluster deployment should swap in persist() or a
-    # reliable checkpoint dir (same call shape). The plan below from here
-    # down is hand-copied in tools/fuzzyjoin_gram_ab.py::_join_body —
-    # keep the two in sync when editing.
+    # reliable checkpoint dir (same call shape).
     tg = base.select(
         "id", char_trigrams(F.col("s"), q).alias("toks")
     ).localCheckpoint(eager=False)

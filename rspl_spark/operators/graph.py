@@ -372,32 +372,6 @@ def khop_distances(
     return visited.withColumnRenamed("node", node_col)
 
 
-def _triangle_materialize(edges: DataFrame) -> str:
-    """A/B hook ONLY (tools/triangle_mat_ab.py): force materialization
-    of the triangle intermediates via ``spark.rspl.triangleMaterialize``
-    ∈ {und, o, both}; anything else (including unset — the default)
-    keeps the plain single plan.
-
-    Materialization was PROBED and DECLINED twice, with committed
-    evidence: r12 measured checkpointing losing 1.4-4x at 1.2M-120M
-    constant-degree edges; the r16 sweep
-    (docs/bench/r16_triangle_mat_sweep.json — gate shape at 5
-    interleaved reps, probe-stable, plus parquet-backed 1.2M/12M-edge
-    graphs) measured every variant WITHIN NOISE at gate scale (off
-    7.97 / und 8.24 / o 8.15 s median) and "o"/"both" losing up to 2x
-    at 12M edges (off 22.3 vs both 41.6 s). ReusedExchange already
-    shares the distinct/degree exchanges; what materialization saves is
-    only the post-exchange re-aggregation, and the blocks cost more
-    than that at every measured scale. The r15 −16% und reading did not
-    reproduce under a longer probe-stable A/B."""
-    spark = edges.sparkSession
-    try:
-        raw = (spark.conf.get("spark.rspl.triangleMaterialize", "") or "").strip().lower()
-    except Exception:
-        raw = ""
-    return raw if raw in ("und", "o", "both") else "off"
-
-
 def triangle_counts(
     edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
 ) -> DataFrame:
@@ -419,9 +393,6 @@ def triangle_counts(
         .where(F.col("a").isNotNull() & F.col("b").isNotNull())
         .distinct()
     )
-    mat = _triangle_materialize(edges)
-    if mat in ("und", "both"):
-        und = und.localCheckpoint(eager=False)
     deg = (
         und.select(F.col("a").alias("n"))
         .union(und.select(F.col("b").alias("n")))
@@ -435,17 +406,18 @@ def triangle_counts(
     kb = F.struct(F.col("db").alias("d"), F.col("b").alias("n"))
     # orient from the (degree, node)-smaller endpoint; carry v's rank
     # key so wedges order their two spokes without re-joining degrees.
-    # NOT materialized by default, by MEASUREMENT TWICE (r12 + the r16
-    # sweep, docs/bench/r16_triangle_mat_sweep.json): every checkpoint
-    # variant is within noise at gate scale and "o"/"both" lose up to
-    # 2x at 12M edges — see _triangle_materialize (A/B hook only)
+    # Neither `und` nor `o` is materialized, by measurement twice: r12
+    # saw checkpointing lose 1.4-4x at 1.2M-120M constant-degree edges,
+    # and in docs/bench/r16_triangle_mat_sweep.json every checkpoint
+    # variant is within noise at gate scale while checkpointing `o`
+    # loses up to 2x at 12M edges. ReusedExchange already shares the
+    # distinct/degree exchanges; the blocks cost more than the
+    # re-aggregation they save.
     o = e2.select(
         F.when(ka < kb, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(ka < kb, F.col("b")).otherwise(F.col("a")).alias("v"),
         F.when(ka < kb, kb).otherwise(ka).alias("kv"),
     )
-    if mat in ("o", "both"):
-        o = o.localCheckpoint(eager=False)
     wedges = (
         o.alias("x")
         .join(

@@ -1,9 +1,12 @@
-"""Dump physical plans for the flagship queries → docs/plans/*.txt.
+"""Dump formatted physical plans → docs/plans/<query>[_<suffix>].txt.
 
 Evidence artifacts: PushedFilters / ReadSchema / join strategies /
 exchange counts are visible without running anything.
 
-Usage: python tools/dump_plans.py [sf_dir]
+Usage: python tools/dump_plans.py [--suffix before|after] [sf_dir [query ...]]
+
+No query list dumps the flagship set below. A suffix keeps before/after
+snapshots of an optimization side by side.
 """
 
 from __future__ import annotations
@@ -80,19 +83,26 @@ FLAGSHIPS = [
 
 
 def main() -> None:
+    suffix = ""
+    if "--suffix" in sys.argv:
+        i = sys.argv.index("--suffix")
+        suffix = "_" + sys.argv[i + 1]
+        del sys.argv[i : i + 2]
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "docs", "plans")
     os.makedirs(out_dir, exist_ok=True)
     reg = load_registry()
     spark = get_spark("plans")
-    for name in FLAGSHIPS:
-        df = reg[name].fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+    for name in sys.argv[2:] or FLAGSHIPS:
+        try:
+            plan = reg[name].fn(spark, sf_dir)._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+            )
+        except Exception as e:
+            plan = f"ERROR dumping plan: {e}"
+        with open(os.path.join(out_dir, f"{name}{suffix}.txt"), "w") as f:
             f.write(plan)
-        print(f"wrote {name} ({len(plan)} chars)")
+        print(f"wrote {name}{suffix} ({len(plan)} chars)")
 
 
 if __name__ == "__main__":
