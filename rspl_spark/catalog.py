@@ -114,16 +114,6 @@ def _load_uncached(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each table as a temp view for spark.sql queries."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def repo_warehouse_path(table: str) -> str:
     """The repo-pinned warehouse location for ``table`` — the ONE copy
     of the rule (dedup_store and ensure_bucketed both pin here): the
@@ -195,16 +185,12 @@ def register_external_bucketed(
     or unusable — caller falls back to the CTAS. Safe because the bucket
     id is encoded in each written file name, so files + matching DDL
     reproduce the exact table Spark wrote."""
+    from rspl_spark.operators.store import register_at
+
     if not os.path.isfile(os.path.join(path, "_SUCCESS")):
         return False
     try:
-        schema = spark.read.parquet(path).schema
-        cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-        spark.sql(
-            f"CREATE TABLE {name} ({cols}) USING PARQUET "
-            f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) INTO {n_buckets} BUCKETS "
-            f"LOCATION '{path}'"
-        )
+        register_at(spark, name, path, [key], n_buckets)
         return True
     except Exception:
         return False

@@ -18,18 +18,21 @@ folds each increment in with one small join:
 - ``read_final``: partials → final measures (avg derived).
 
 The same partials discipline Spark's own partial/final hash aggregation
-uses inside one query, lifted across runs. Sibling of
-``operators/dedup_store.py`` (same store lifecycle, different payload).
+uses inside one query, lifted across runs. The store lifecycle (the
+crash-safe swap, properties, layout) is ``operators/store.py``; this
+module owns the partials payload and its path, the repo warehouse.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
+import functools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from rspl_spark.catalog import repo_warehouse_path
+from rspl_spark.operators import store as S
+from rspl_spark.operators.store import table_buckets as _table_buckets
 
 # measure kinds → (partial aggregate, pairwise merge)
 _KINDS = ("sum", "count", "min", "max")
@@ -59,44 +62,6 @@ def partial_agg(
     return df.groupBy(*keys).agg(*aggs)
 
 
-def _refresh_store(spark: SparkSession, name: str) -> None:
-    """Drop every cached plan/file-listing for ``name`` after a swap.
-
-    The DROP→RENAME swap (and the create path's rmtree of a prior
-    layout) changes the physical directory behind a live table name,
-    but a session that already read the store holds a cached
-    LogicalRelation + InMemoryFileIndex for it — the next read can
-    plan against part-files the swap just rmtree'd
-    (FAILED_READ_FILE.FILE_NOT_EXIST under full-suite order; a real
-    long-lived-session bug on a cluster, not test noise). REFRESH
-    TABLE invalidates both the relation cache and the file-status
-    cache for the name; tolerate a missing table so crash-recovery
-    paths can call this unconditionally."""
-    try:
-        spark.sql(f"REFRESH TABLE {name}")
-    except Exception:
-        pass
-
-
-def _store_path(name: str) -> str:
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    return os.path.join(repo_root, "spark-warehouse", name.lower())
-
-
-def _write_bucketed(
-    df: DataFrame, name: str, path: str, keys: list[str], n_buckets: int
-) -> None:
-    (
-        df.repartition(n_buckets, *keys)
-        .write.bucketBy(n_buckets, *keys)
-        .sortBy(*keys)
-        .mode("overwrite")
-        .format("parquet")
-        .option("path", path)
-        .saveAsTable(name)
-    )
-
-
 def create_agg_store(
     spark: SparkSession,
     df: DataFrame,
@@ -111,17 +76,11 @@ def create_agg_store(
         if not overwrite:
             return name
         spark.sql(f"DROP TABLE {name}")
-    path = _store_path(name)
-    if os.path.isdir(path):
-        shutil.rmtree(path, ignore_errors=True)
-    # reap versioned dirs a dead session's merges left behind
-    parent, base = os.path.dirname(path), os.path.basename(path)
-    if os.path.isdir(parent):
-        for d in os.listdir(parent):
-            if d.startswith(f"{base}.__v_"):
-                shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
-    _write_bucketed(partial_agg(df, keys, measures), name, path, keys, n_buckets)
-    _refresh_store(spark, name)
+    path = repo_warehouse_path(name)
+    # also reaps versioned dirs a dead session's merges left behind
+    S.clear_layout(path)
+    S.write_table(partial_agg(df, keys, measures), name, path, keys, n_buckets)
+    S.refresh(spark, name)
     return name
 
 
@@ -154,120 +113,47 @@ def merge_increment(
     is folded in" with no window where the data committed but the
     record didn't (the streaming exactly-once guard rides on this).
     ``known_props``: the store's current properties if the caller
-    already read them, saving the swap's own re-read.
-
-    Property persistence rule: only ``rspl.``-prefixed properties are
-    carried forward across LATER rewrites (merge/retract/compaction) —
-    namespace any property that must survive as ``rspl.<yours>``; other
-    keys are stamped on this rewrite only.
+    already read them, saving the swap's own re-read. Only ``rspl.*``
+    properties carry forward across LATER rewrites (``store.carried``);
+    other keys are stamped on this rewrite only.
     """
     n_buckets = _table_buckets(spark, store) or n_buckets
     merged = merged_view(
         spark, new_df, store, keys, measures, n_buckets, resolve_buckets=False
     )
-    _rewrite_swap(
-        spark, merged, store, keys, n_buckets, props=props,
-        known_props=known_props,
+    S.swap(
+        spark, store, merged, repo_warehouse_path(store), keys, n_buckets,
+        stamp=lambda old, _tmp: {**S.carried(old), **(props or {})},
+        old_props=known_props,
     )
 
 
-def table_properties(spark: SparkSession, table: str) -> dict[str, str] | None:
-    """All table properties as a dict (None only when the table does
-    not exist — any OTHER failure propagates, because a guard that
-    reads a transient metastore error as "no properties" would re-merge
-    an already-committed batch)."""
-    if not spark.catalog.tableExists(table):
-        return None
-    rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
-    return {r["key"]: r["value"] for r in rows}
-
-
-def table_property(spark: SparkSession, table: str, key: str) -> str | None:
-    """Read one table property (None when absent or table missing)."""
-    props = table_properties(spark, table)
-    return None if props is None else props.get(key)
-
-
-def _sql_str(v: str) -> str:
-    """Escape a value for a single-quoted Spark SQL string literal
-    (backslash is an escape character there, so it must double too —
-    a Windows checkpoint path must round-trip byte-identical or the
-    exactly-once identity comparison never matches again)."""
-    return str(v).replace("\\", "\\\\").replace("'", "''")
-
-
-def _set_table_props(
-    spark: SparkSession, table: str, props: dict[str, str]
-) -> None:
-    if not props:
-        return
-    kv = ", ".join(
-        f"'{_sql_str(k)}' = '{_sql_str(v)}'" for k, v in props.items()
+def _key_cond(keys: list[str], a: str, b: str, null_safe: bool = True):
+    eq = (lambda x, y: x.eqNullSafe(y)) if null_safe else (lambda x, y: x == y)
+    return functools.reduce(
+        lambda c, k: c & k, [eq(F.col(f"{a}.{k}"), F.col(f"{b}.{k}")) for k in keys]
     )
-    spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({kv})")
 
 
-def _rewrite_swap(
-    spark: SparkSession,
-    df: DataFrame,
-    store: str,
-    keys: list[str],
-    n_buckets: int,
-    props: dict[str, str] | None = None,
-    known_props: dict[str, str] | None = None,
-) -> None:
-    """Materialize ``df`` (whose plan reads ``store``) to a versioned
-    tmp table BEFORE touching the store, then swap the catalog entry
-    and reap the superseded directory. ``props`` are set on the tmp
-    table pre-swap so they commit atomically with the data; the
-    store's existing ``rspl.`` properties are CARRIED FORWARD (new
-    values win) so a prop-less batch rewrite — daily merge, retract,
-    compaction — cannot wipe the streaming exactly-once record.
-    ``known_props`` lets a caller that already read the store's
-    properties (the per-batch streaming guard) skip the second
-    metastore round trip."""
-    old_path = _table_location(spark, store)
-    existing = (
-        known_props
-        if known_props is not None
-        else (table_properties(spark, store) or {})
-    )
-    carried = {k: v for k, v in existing.items() if k.startswith("rspl.")}
-    merged_props = {**carried, **(props or {})}
-    tmp_name = f"{store}__merge_{uuid.uuid4().hex[:8]}"
-    tmp_path = f"{_store_path(store)}.__v_{uuid.uuid4().hex[:8]}"
-    _write_bucketed(df, tmp_name, tmp_path, keys, n_buckets)
-    _set_table_props(spark, tmp_name, merged_props)
-    spark.sql(f"DROP TABLE {store}")
-    try:
-        spark.sql(f"ALTER TABLE {tmp_name} RENAME TO {store}")
-    except Exception:
-        # close the DROP→RENAME window: re-register the ORIGINAL data
-        # under the store name so the table never vanishes — WITH its
-        # original rspl.* properties (the exactly-once record must
-        # survive the recovery, or a replayed batch double-counts);
-        # the merged tmp table stays behind for inspection
-        if old_path:
-            _register_bucketed_at(spark, store, old_path, keys, n_buckets)
-            _set_table_props(spark, store, carried)
-            _refresh_store(spark, store)
-        raise
-    _refresh_store(spark, store)
-    if old_path and os.path.isdir(old_path):
-        shutil.rmtree(old_path, ignore_errors=True)
+def _join_partials(
+    st: DataFrame, inc: DataFrame, keys: list[str], n_buckets: int, how: str, cols
+) -> DataFrame:
+    """Join store partials ``st`` (alias s) to increment partials
+    ``inc`` (alias i) and select ``cols``: bucket-aligned on plain
+    equality, plus a null-safe path for null keys (``merge_increment``)."""
 
+    def any_null(df):
+        return functools.reduce(lambda c, k: c | df[k].isNull(), keys, F.lit(False))
 
-def _register_bucketed_at(
-    spark: SparkSession, name: str, path: str, keys: list[str], n_buckets: int
-) -> None:
-    schema = spark.read.parquet(path).schema
-    cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
-    ks = ", ".join(f"`{k}`" for k in keys)
-    spark.sql(
-        f"CREATE TABLE {name} ({cols}) USING PARQUET "
-        f"CLUSTERED BY ({ks}) SORTED BY ({ks}) INTO {n_buckets} BUCKETS "
-        f"LOCATION '{path}'"
-    )
+    def join(s, i, null_safe: bool):
+        cond = _key_cond(keys, "s", "i", null_safe)
+        return s.alias("s").join(i.alias("i"), cond, how).select(*cols)
+
+    return join(
+        st.filter(~any_null(st)),
+        inc.filter(~any_null(inc)).repartition(n_buckets, *keys),
+        null_safe=False,
+    ).unionByName(join(st.filter(any_null(st)), inc.filter(any_null(inc)), True))
 
 
 def merged_view(
@@ -288,46 +174,19 @@ def merged_view(
     # merge_increment resolves once and passes resolve_buckets=False.
     if resolve_buckets:
         n_buckets = _table_buckets(spark, store) or n_buckets
-    inc_all = partial_agg(new_df, keys, measures)
-    st_all = spark.table(store)
-
-    def any_null(df):
-        c = F.lit(False)
-        for k in keys:
-            c = c | df[k].isNull()
-        return c
-
-    def merged_select(s, i, null_safe: bool):
-        cond = None
-        for k in keys:
-            kc = (
-                F.col(f"s.{k}").eqNullSafe(F.col(f"i.{k}"))
-                if null_safe
-                else F.col(f"s.{k}") == F.col(f"i.{k}")
-            )
-            cond = kc if cond is None else (cond & kc)
-        cols = [F.coalesce(F.col(f"s.{k}"), F.col(f"i.{k}")).alias(k) for k in keys]
-        for name, (_col, kind) in measures.items():
-            a, b = F.col(f"s.{name}"), F.col(f"i.{name}")
-            if kind in ("sum", "count"):
-                m = F.when(a.isNull(), b).when(b.isNull(), a).otherwise(a + b)
-            elif kind == "min":
-                m = F.least(a, b)  # least/greatest skip NULLs
-            else:
-                m = F.greatest(a, b)
-            cols.append(m.alias(name))
-        return s.join(i, cond, "full").select(*cols)
-
-    return merged_select(
-        st_all.filter(~any_null(st_all)).alias("s"),
-        inc_all.filter(~any_null(inc_all)).repartition(n_buckets, *keys).alias("i"),
-        null_safe=False,
-    ).unionByName(
-        merged_select(
-            st_all.filter(any_null(st_all)).alias("s"),
-            inc_all.filter(any_null(inc_all)).alias("i"),
-            null_safe=True,
-        )
+    cols = [F.coalesce(F.col(f"s.{k}"), F.col(f"i.{k}")).alias(k) for k in keys]
+    for name, (_col, kind) in measures.items():
+        a, b = F.col(f"s.{name}"), F.col(f"i.{name}")
+        if kind in ("sum", "count"):
+            m = F.when(a.isNull(), b).when(b.isNull(), a).otherwise(a + b)
+        elif kind == "min":
+            m = F.least(a, b)  # least/greatest skip NULLs
+        else:
+            m = F.greatest(a, b)
+        cols.append(m.alias(name))
+    return _join_partials(
+        spark.table(store), partial_agg(new_df, keys, measures), keys, n_buckets,
+        "full", cols,
     )
 
 
@@ -360,17 +219,10 @@ def retracted_view(
     inc_all = partial_agg(old_df, keys, measures).localCheckpoint()
     st_all = spark.table(store)
 
-    def nullsafe_cond(s, i):
-        cond = None
-        for k in keys:
-            kc = F.col(f"s.{k}").eqNullSafe(F.col(f"i.{k}"))
-            cond = kc if cond is None else (cond & kc)
-        return cond
-
     # a retraction for a group the store never ingested is a caller
     # bug (wrong old_df) — fail loudly, never silently drop it.
     stray = inc_all.alias("i").join(
-        st_all.alias("s"), nullsafe_cond("s", "i"), "left_anti"
+        st_all.alias("s"), _key_cond(keys, "s", "i"), "left_anti"
     )
     if stray.take(1):
         raise ValueError(
@@ -378,64 +230,32 @@ def retracted_view(
             "store — the retracted rows were never merged in"
         )
 
-    def retract_select(s, i, null_safe: bool):
-        cond = None
-        for k in keys:
-            kc = (
-                F.col(f"s.{k}").eqNullSafe(F.col(f"i.{k}"))
-                if null_safe
-                else F.col(f"s.{k}") == F.col(f"i.{k}")
-            )
-            cond = kc if cond is None else (cond & kc)
-        cols = [F.col(f"s.{k}").alias(k) for k in keys]
-        dirty = F.lit(False)
-        for name, (_col, kind) in measures.items():
-            a, b = F.col(f"s.{name}"), F.col(f"i.{name}")
-            if kind in ("sum", "count"):
-                m = F.when(b.isNull(), a).otherwise(a - b)
-            else:
-                # min/max partials cannot subtract: the stored extreme
-                # stays valid ONLY if the retracted slice never touched
-                # it (strict inequality); otherwise the group is dirty
-                # and must lazily recompute from surviving history.
-                m = a
-                touch = b.isNotNull() & ((b <= a) if kind == "min" else (b >= a))
-                dirty = dirty | touch
-            cols.append(m.alias(name))
-        cols.append(dirty.alias("_dirty"))
-        return s.join(i, cond, "left").select(*cols)
-
-    def any_null(df):
-        c = F.lit(False)
-        for k in keys:
-            c = c | df[k].isNull()
-        return c
-
-    ret = retract_select(
-        st_all.filter(~any_null(st_all)).alias("s"),
-        inc_all.filter(~any_null(inc_all)).repartition(n_buckets, *keys).alias("i"),
-        null_safe=False,
-    ).unionByName(
-        retract_select(
-            st_all.filter(any_null(st_all)).alias("s"),
-            inc_all.filter(any_null(inc_all)).alias("i"),
-            null_safe=True,
-        )
-    )
+    cols = [F.col(f"s.{k}").alias(k) for k in keys]
+    dirty = F.lit(False)
+    for name, (_col, kind) in measures.items():
+        a, b = F.col(f"s.{name}"), F.col(f"i.{name}")
+        if kind in ("sum", "count"):
+            m = F.when(b.isNull(), a).otherwise(a - b)
+        else:
+            # min/max partials cannot subtract: the stored extreme
+            # stays valid ONLY if the retracted slice never touched
+            # it (strict inequality); otherwise the group is dirty
+            # and must lazily recompute from surviving history.
+            m = a
+            touch = b.isNotNull() & ((b <= a) if kind == "min" else (b >= a))
+            dirty = dirty | touch
+        cols.append(m.alias(name))
+    cols.append(dirty.alias("_dirty"))
+    ret = _join_partials(st_all, inc_all, keys, n_buckets, "left", cols)
     # over-retraction (more rows retracted than ingested) is a caller
     # bug the subtraction would silently absorb — fail loudly
-    neg = None
-    for n in count_names:
-        c = F.col(n) < 0
-        neg = c if neg is None else (neg | c)
+    neg = functools.reduce(lambda a, b: a | b, [F.col(n) < 0 for n in count_names])
     if ret.filter(neg).take(1):
         raise ValueError(
             "retract_increment: a count went negative — old_df retracts "
             "rows that were never ingested for that group"
         )
     # groups whose every count reaches 0 are gone entirely
-    import functools
-
     empty = functools.reduce(
         lambda a, b: a & b, [F.col(n) == 0 for n in count_names]
     )
@@ -450,33 +270,23 @@ def retracted_view(
                     "history_df (the SURVIVING raw rows) so those groups "
                     "can be lazily recomputed (only they are rescanned)"
                 )
-            cond = None
-            for k in keys:
-                kc = F.col(f"h.{k}").eqNullSafe(F.col(f"d.{k}"))
-                cond = kc if cond is None else (cond & kc)
             hist_slice = history_df.alias("h").join(
-                F.broadcast(dirty_keys.alias("d")), cond, "semi"
+                F.broadcast(dirty_keys.alias("d")), _key_cond(keys, "h", "d"), "semi"
             )
-            patch = partial_agg(hist_slice, keys, minmax).select(
-                *[F.col(k).alias(f"_p_{k}") for k in keys],
-                *[F.col(n).alias(f"_p_{n}") for n in minmax],
-            )
-            pcond = None
-            for k in keys:
-                kc = F.col(k).eqNullSafe(F.col(f"_p_{k}"))
-                pcond = kc if pcond is None else (pcond & kc)
-            ret = ret.join(F.broadcast(patch), pcond, "left").select(
-                *keys,
+            patch = partial_agg(hist_slice, keys, minmax).alias("p")
+            return ret.alias("r").join(
+                F.broadcast(patch), _key_cond(keys, "r", "p"), "left"
+            ).select(
+                *[F.col(f"r.{k}").alias(k) for k in keys],
                 *[
                     (
-                        F.when(F.col("_dirty"), F.col(f"_p_{n}")).otherwise(F.col(n))
+                        F.when(F.col("r._dirty"), F.col(f"p.{n}")).otherwise(F.col(f"r.{n}"))
                         if n in minmax
-                        else F.col(n)
+                        else F.col(f"r.{n}")
                     ).alias(n)
                     for n in measures
                 ],
             )
-            return ret
     return ret.drop("_dirty")
 
 
@@ -513,82 +323,7 @@ def retract_increment(
         spark, old_df, store, keys, measures, history_df, n_buckets,
         resolve_buckets=False,
     )
-    _rewrite_swap(spark, ret, store, keys, n_buckets)
-
-
-def _reap_stale_compactions(
-    spark: SparkSession, name: str, base_path: str
-) -> None:
-    """Reap leftovers of previous FAILED compactions of ``name``: tmp
-    tables ``{name}__compact_*`` (a successful compaction renames its
-    tmp away; only a failed one leaves it) and orphaned versioned data
-    dirs ``{base_path}.__v_*`` that are not the live table's current
-    location (a successful swap leaves the LIVE data under a ``.__v_``
-    path, so the sweep must skip it). Called at the START of the next
-    compaction so repeated failures cannot accumulate unreaped
-    warehouse directories.
-
-    SAFETY GATE: if ``name`` is not currently registered — the
-    DROP→RENAME crash window, where the on-disk ``.__v_`` dirs are the
-    ONLY copies of the data — this reaps NOTHING. With no catalog
-    entry there is no way to tell the former live data from a stale
-    tmp, and the compaction docstrings promise that window is
-    recoverable precisely because both directories still exist.
-    Recovery (re-register, then compact again) happens first; the
-    reaper only ever runs against a live table."""
-    import glob
-
-    if not spark.catalog.tableExists(name):
-        return
-    live = _table_location(spark, name)
-    if live is None:
-        # Same safety posture as the unregistered-table gate: if the
-        # live table's location cannot be determined (DESCRIBE output
-        # missing its Location row), the `.__v_*` sweep below could not
-        # tell the live data directory from a stale one — reap nothing.
-        return
-    live_real = os.path.realpath(live)
-    prefix = f"{name.lower()}__compact_"
-    for t in spark.catalog.listTables():
-        if t.name.lower().startswith(prefix):
-            loc = _table_location(spark, t.name)
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-            if loc and os.path.realpath(loc) != live_real and os.path.isdir(loc):
-                shutil.rmtree(loc, ignore_errors=True)
-    for d in glob.glob(f"{base_path}.__v_*"):
-        if os.path.isdir(d) and os.path.realpath(d) != live_real:
-            shutil.rmtree(d, ignore_errors=True)
-
-
-def _table_buckets(spark: SparkSession, name: str) -> int | None:
-    for r in spark.sql(f"DESCRIBE FORMATTED {name}").collect():
-        if r["col_name"].strip() == "Num Buckets":
-            try:
-                return int(r["data_type"].strip())
-            except ValueError:
-                return None
-    return None
-
-
-def _table_location(spark: SparkSession, name: str) -> str | None:
-    # only the section AFTER '# Detailed Table Information' — a data
-    # column literally named 'Location' would otherwise shadow the real
-    # row, and the mis-parsed path reaches the compaction reaper (which
-    # would then treat the LIVE directory as stale: data loss)
-    in_detail = False
-    for r in spark.sql(f"DESCRIBE FORMATTED {name}").collect():
-        cn = r["col_name"].strip()
-        if cn.startswith("# Detailed Table Information"):
-            in_detail = True
-            continue
-        if in_detail and cn == "Location":
-            loc = r["data_type"].strip()
-            if loc.startswith("file:"):
-                from urllib.parse import urlparse
-
-                return urlparse(loc).path
-            return loc
-    return None
+    S.swap(spark, store, ret, repo_warehouse_path(store), keys, n_buckets)
 
 
 def read_final(

@@ -1,222 +1,214 @@
-"""Persisted PQ-ADC index: fit once, append increments, query forever.
+"""Persisted ANN indexes (PQ, IVF, SRP): fit once, append increments,
+query forever.
 
-The in-session PQ path (:mod:`rspl_spark.operators.similarity`) refits
-and re-encodes per session — fine for a notebook, wrong for a pipeline
+The in-session ANN paths (:mod:`rspl_spark.operators.similarity`) refit
+and re-encode per session — fine for a notebook, wrong for a pipeline
 that ingests daily embedding batches into a corpus-sized index. This
-module persists BOTH halves of the index once:
+module persists BOTH halves of an index once:
 
-- the code table (vec_id, codes) as a managed parquet table — the
-  64x-compressed representation the ADC kernel scans;
-- the trained codebooks (m * k * sub floats) in the table's
-  TBLPROPERTIES as JSON — metadata-sized, loaded driver-side in one
-  catalog call, no data read.
+- the data-sized half (PQ codes, IVF cell assignments, SRP band rows,
+  always keyed ``vec_id``) as a managed parquet table;
+- the trained state (PQ codebooks, IVF centroids, SRP config) in the
+  table's TBLPROPERTIES as JSON — metadata-sized, loaded driver-side in
+  one catalog call, no data read.
 
-Increments are encoded with the STORED codebooks (encoding is a pure
-function of the codebooks) and appended as new parquet files — no
-refit, no rewrite of existing files. Codebooks drift as the corpus
-grows; ``pq_index_staleness`` tracks appended/base rows and
-``refresh_pq_index`` refits when the ratio crosses a threshold — the
-same maintenance contract as the dedup signature store
-(operators/dedup_store.py) and the incremental agg store.
+Increments are encoded under the STORED state (encoding is a pure
+function of it) and appended as new parquet files — no refit, no
+rewrite of existing files. The trained state drifts as the corpus
+grows; ``index_staleness`` tracks appended/base rows and
+``refresh_index`` refits when the ratio crosses a threshold.
 
-Mirrors the reference's operator-as-persistent-pipeline posture; the
+``append_index``, ``index_staleness``, ``refresh_index``, ``index_tag``
+and ``compact_index`` read the kind from the table properties and take
+the rest from one table keyed by kind (``_KINDS``). The store lifecycle
+(tombstones, the crash-safe swap, the properties codec) is
+``operators/store.py``; the ANN store's path is the session warehouse.
+
 ADC/recall semantics are identical to similarity.pq_* (shared code).
 """
 
 from __future__ import annotations
 
 import json
-import os
-import shutil
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from rspl_spark.operators.similarity import pq_adc_topk, pq_encode, pq_fit
-
-
-def _refresh(spark: SparkSession, name: str) -> None:
-    """Invalidate cached plans/file listings after a physical change.
-
-    Index tables are dropped, re-created at the SAME warehouse path,
-    compact-swapped, and appended to within one long-lived session;
-    Spark's relation cache and shared file-status cache are keyed by
-    name/path, so without an explicit REFRESH a later probe can plan
-    against part-files a swap or rebuild just deleted
-    (FAILED_READ_FILE.FILE_NOT_EXIST — the r14 lifecycle-fuzz flake).
-    Same discipline as ``agg_store._refresh_store``."""
-    try:
-        spark.sql(f"REFRESH TABLE {name}")
-    except Exception:
-        pass
-
-
-def _props(spark: SparkSession, name: str) -> dict[str, str]:
-    return {
-        r["key"]: r["value"]
-        for r in spark.sql(f"SHOW TBLPROPERTIES {name}").collect()
-    }
-
-
-def _set_props(spark: SparkSession, name: str, props: dict[str, str]) -> None:
-    # _sql_str: a quoted value (tag="client's batch") must not break the
-    # ALTER statement — especially on the compaction recovery path,
-    # which re-sets ALL props to restore the pre-failure state
-    from rspl_spark.operators.agg_store import _sql_str
-
-    kv = ", ".join(
-        f"'{_sql_str(k)}'='{_sql_str(v)}'" for k, v in props.items()
-    )
-    spark.sql(f"ALTER TABLE {name} SET TBLPROPERTIES ({kv})")
-
-
-def _check_increment_dim(
-    new_vecs: DataFrame, vec_col: str, expect_dim: int, kind: str
-) -> None:
-    """Fail fast on a wrong-dimension increment. Without this, a
-    mismatched append silently corrupts the index: zip_with over
-    unequal-length arrays yields NULL dots, so every SRP bit defaults
-    to 0 and IVF/PQ cell assignment becomes arbitrary. One-row driver
-    check (limit-1 scan of the increment), never a full pass."""
-    row = new_vecs.select(F.size(F.col(vec_col)).alias("d")).first()
-    if row is not None and row["d"] != expect_dim:
-        raise ValueError(
-            f"{kind} append: increment vector dim {row['d']} != "
-            f"stored index dim {expect_dim}"
-        )
-
-
-def _deleted_name(name: str) -> str:
-    return f"{name}__deleted"
-
-
-def _check_increment_not_tombstoned(
-    spark: SparkSession, name: str, new_vecs: DataFrame, id_col: str, kind: str
-) -> None:
-    """Fail fast when an increment re-uses a currently-tombstoned id.
-
-    With id-keyed tombstones there is NO correct silent behavior for a
-    re-append: keeping the tombstone hides the new row (the probe
-    anti-join can't tell old from new), and clearing it resurrects the
-    stale physical row alongside the new one (duplicate id, possibly a
-    different vector). Both corrupt answers silently, so the collision
-    is the caller's to resolve: ``compact_index`` first (physically
-    removes the old row and clears the tombstone), then append.
-
-    Cost: one semi-join of the increment's keys against the broadcast
-    tombstone sidecar (metadata-sized) — never a pass over the index.
-    """
-    dead = _tombstones(spark, name)
-    if dead is None:
-        return
-    hit = (
-        new_vecs.select(F.col(id_col).cast("long").alias("vec_id"))
-        .join(F.broadcast(dead), "vec_id", "left_semi")
-        .take(3)
-    )
-    if hit:
-        ids = sorted(r["vec_id"] for r in hit)
-        raise ValueError(
-            f"{kind} append: increment contains tombstoned ids "
-            f"(e.g. {ids}); a tombstone would silently hide the "
-            f"re-appended rows. Run compact_index('{name}') first, "
-            f"then append."
-        )
-
-
-def _warehouse_path(spark: SparkSession, table: str) -> str:
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    if warehouse.startswith("file:"):
-        warehouse = warehouse[len("file:") :]
-    return os.path.join(os.path.abspath(warehouse), table.lower())
-
-
-def _tombstones(spark: SparkSession, name: str, key_col: str = "vec_id") -> DataFrame | None:
-    """The persisted tombstone set, or None. Tombstones OUTLIVE the
-    session (a takedown must not silently resurrect when the driver
-    restarts): the sidecar is an EXTERNAL parquet table, and a fresh
-    catalog that finds its directory on disk re-registers it here."""
-    dn = _deleted_name(name)
-    if spark.catalog.tableExists(dn):
-        return spark.table(dn)
-    path = _warehouse_path(spark, dn)
-    if os.path.isdir(path):
-        spark.sql(
-            f"CREATE TABLE {dn} ({key_col} BIGINT) USING PARQUET LOCATION '{path}'"
-        )
-        return spark.table(dn)
-    return None
+from rspl_spark.operators import store as S
+from rspl_spark.operators.similarity import (
+    kmeans_fit,
+    pq_adc_topk,
+    pq_encode,
+    pq_fit,
+    unit_prep,
+)
 
 
 def live_rows(spark: SparkSession, name: str) -> DataFrame:
-    """The index table minus tombstoned vec_ids — the view every probe
-    (and any external consumer of the index table) should read so
-    takedowns are honored. The tombstone set is
-    key-only (metadata-sized next to a corpus-sized index), so the
-    anti join broadcasts and preserves the stored table's partitioning
-    — the probe plans gain no Exchange from delete support."""
-    tbl = spark.table(name)
-    dead = _tombstones(spark, name)
-    if dead is not None:
-        tbl = tbl.join(F.broadcast(dead), "vec_id", "left_anti")
-    return tbl
+    """The index minus tombstoned vec_ids — the view every probe (and
+    any external consumer) reads so takedowns are honored."""
+    return S.live(spark, name, S.warehouse_path(spark, name), "vec_id")
 
 
-def delete_keys(
-    spark: SparkSession,
-    name: str,
-    vec_ids,
-) -> int:
-    """Retract vectors from a persisted index (pq/ivf/srp alike) by
-    tombstone: append the ids to a key-only sidecar table that every
-    probe anti-joins out. Takedown/opt-out compliance path.
-
-    The delete itself writes ONLY the tombstone file — zero index data
-    files are rewritten (asserted in tests/test_ann_store.py), so a
-    delete over a 100 TB index costs a metadata write, not a rewrite.
-    Physical removal is deferred to :func:`compact_index` (or the next
-    ``refresh_*``/``create_*(overwrite=True)`` rebuild, which clears
-    the tombstones — a fresh build defines a fresh membership).
-
-    ``vec_ids``: iterable of ids or a single-column DataFrame. Returns
-    the number of tombstones appended (repeat deletes are idempotent —
-    already-tombstoned ids are skipped)."""
-    if isinstance(vec_ids, DataFrame):
-        ids = vec_ids.select(F.col(vec_ids.columns[0]).cast("long").alias("vec_id"))
-    else:
-        ids = spark.createDataFrame([(int(v),) for v in vec_ids], "vec_id long")
-    ids = ids.distinct()
-    dn = _deleted_name(name)
-    existing = _tombstones(spark, name)
-    if existing is not None:
-        ids = ids.join(F.broadcast(existing), "vec_id", "left_anti")
-    ids = ids.localCheckpoint()
-    n = ids.count()
-    if n:
-        writer = ids.coalesce(1).write.mode("append").format("parquet")
-        if not spark.catalog.tableExists(dn):
-            writer = writer.option("path", _warehouse_path(spark, dn))
-        writer.saveAsTable(dn)
-        _refresh(spark, dn)
-    return n
+def delete_keys(spark: SparkSession, name: str, vec_ids) -> int:
+    """Tombstone ``vec_ids`` in a persisted index (pq/ivf/srp alike):
+    ``store.delete_keys``, no index data file rewritten (asserted in
+    tests/test_ann_store.py). Physical removal is deferred to
+    :func:`compact_index` or the next rebuild, which clears the
+    tombstones — a fresh build defines a fresh membership."""
+    return S.delete_keys(spark, name, S.warehouse_path(spark, name), "vec_id", vec_ids)
 
 
 def deleted_count(spark: SparkSession, name: str) -> int:
-    dead = _tombstones(spark, name)
-    return dead.count() if dead is not None else 0
+    return S.deleted_count(spark, name, S.warehouse_path(spark, name), "vec_id")
 
 
-def _drop_tombstones(spark: SparkSession, name: str) -> None:
-    """Remove the tombstone table AND its on-disk directory — called
-    only when the index itself is rebuilt/compacted, i.e. the new
-    membership supersedes the tombstones."""
-    spark.sql(f"DROP TABLE IF EXISTS {_deleted_name(name)}")
-    path = _warehouse_path(spark, _deleted_name(name))
-    if os.path.isdir(path):
-        import shutil
+def _index(spark: SparkSession, name: str) -> tuple[str, dict[str, str]]:
+    """(kind, table properties) of a persisted index — one catalog call."""
+    props = S.table_properties(spark, name) or {}
+    for kind, spec in _KINDS.items():
+        if spec.marker in props:
+            return kind, props
+    raise ValueError(f"{name!r} is not a persisted pq/ivf/srp index")
 
-        shutil.rmtree(path, ignore_errors=True)
+
+def _create(
+    spark: SparkSession,
+    df: DataFrame,
+    name: str,
+    kind: str,
+    fit: Callable[[], dict[str, str]],
+    vec_col: str,
+    id_col: str,
+    overwrite: bool,
+    tag: str,
+    n_partitions: int,
+) -> str:
+    """The one build body of ``create_{pq,ivf,srp}_index``: ``fit()``
+    returns the trained state as properties, and the rows are encoded
+    under it exactly as an append would encode them.
+
+    Idempotent unless ``overwrite``: an existing table is reused as-is
+    (its stored state wins — refitting silently would invalidate every
+    row already on disk). ``tag`` names the build state so callers can
+    recognize an index built by an earlier session (``index_tag``)
+    instead of rebuilding."""
+    if spark.catalog.tableExists(name):
+        if not overwrite:
+            return name
+        spark.sql(f"DROP TABLE {name}")
+    base = S.warehouse_path(spark, name)
+    # a fresh build defines a fresh membership — stale tombstones from
+    # the previous build must not shadow re-ingested ids
+    S.drop_tombstones(spark, name, base)
+    S.clear_layout(base)
+    state = fit()
+    spec = _KINDS[kind]
+    S.write_table(
+        spec.encode(spark, df, state, vec_col, id_col),
+        name, base, list(spec.part_keys), n_partitions, bucketed=False,
+    )
+    S.refresh(spark, name)
+    S.set_table_props(spark, name, {
+        **state,
+        f"{kind}.base_rows": str(spark.table(name).count()),
+        f"{kind}.appended_rows": "0",
+        f"{kind}.n_partitions": str(n_partitions),
+        f"{kind}.tag": tag,
+    })
+    return name
+
+
+def index_tag(spark: SparkSession, name: str) -> str | None:
+    """The tag of the index's last build or append (None when no such
+    table exists)."""
+    if not spark.catalog.tableExists(name):
+        return None
+    kind, props = _index(spark, name)
+    return props.get(f"{kind}.tag")
+
+
+def append_index(
+    spark: SparkSession,
+    new_vecs: DataFrame,
+    name: str,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    tag: str | None = None,
+) -> int:
+    """Encode the increment under the index's STORED state (PQ
+    codebooks, IVF centroids, SRP config) and append.
+
+    Append-only parquet files — existing rows never rewritten, never a
+    refit. Returns the appended row count (SRP: band rows, vectors x
+    bands), also accumulated in ``{kind}.appended_rows``, the
+    staleness numerator. Fails fast on a wrong-dimension increment or
+    one that re-uses a tombstoned id (``store.check_append``)."""
+    kind, props = _index(spark, name)
+    spec = _KINDS[kind]
+    # a wrong-dimension increment silently corrupts the index: zip_with
+    # over unequal-length arrays yields NULL dots, so every SRP bit
+    # defaults to 0 and IVF/PQ cell assignment becomes arbitrary. One-row
+    # driver check (limit-1 scan of the increment), never a full pass.
+    row = new_vecs.select(F.size(F.col(vec_col)).alias("d")).first()
+    if row is not None and row["d"] != spec.dim(props):
+        raise ValueError(
+            f"{kind} append: increment vector dim {row['d']} != "
+            f"stored index dim {spec.dim(props)}"
+        )
+    S.check_append(
+        spark, name, S.warehouse_path(spark, name), "vec_id", new_vecs, id_col,
+        f"{kind} append", "compact_index",
+    )
+    # count the INCREMENT, not the table: two corpus-sized table counts
+    # per daily append would dwarf the append itself at a large index.
+    # localCheckpoint materializes the (increment-sized) encoding once
+    # for both the count and the write.
+    rows = spec.encode(spark, new_vecs, props, vec_col, id_col).localCheckpoint()
+    n = rows.count()
+    rows.write.mode("append").format("parquet").saveAsTable(name)
+    S.refresh(spark, name)
+    upd = {f"{kind}.appended_rows": str(int(props.get(f"{kind}.appended_rows", "0")) + n)}
+    if tag is not None:
+        upd[f"{kind}.tag"] = tag
+    S.set_table_props(spark, name, upd)
+    return n
+
+
+def _staleness(kind: str, props: dict[str, str]) -> float:
+    base = int(props.get(f"{kind}.base_rows", "0"))
+    return int(props.get(f"{kind}.appended_rows", "0")) / max(base, 1)
+
+
+def index_staleness(spark: SparkSession, name: str) -> float:
+    """appended_rows / base_rows — how far the corpus has drifted from
+    the trained state's training set."""
+    return _staleness(*_index(spark, name))
+
+
+def refresh_index(
+    spark: SparkSession,
+    df: DataFrame,
+    name: str,
+    stale_threshold: float = 0.5,
+    tag: str = "refit",
+    **fit_kw,
+) -> bool:
+    """Refit-on-drift hook: when staleness crosses the threshold,
+    rebuild the index from ``df`` (the CURRENT full corpus) with its
+    stored build parameters — new trained state, full re-encode, one
+    rewrite. Returns True iff a refit ran. A pipeline calls this after
+    each append; most days it's a metadata no-op."""
+    kind, props = _index(spark, name)
+    if _staleness(kind, props) < stale_threshold:
+        return False
+    spec = _KINDS[kind]
+    stored = {p: int(props[f"{kind}.{p}"]) for p in spec.params}
+    spec.create(spark, df, name, **{**stored, **fit_kw}, overwrite=True, tag=tag)
+    return True
 
 
 def compact_index(spark: SparkSession, name: str) -> int:
@@ -226,90 +218,38 @@ def compact_index(spark: SparkSession, name: str) -> int:
     threshold — the rewrite costs one pass over the index (the same
     cost class as refresh, minus the refit).
 
-    Returns the surviving row count. Trained state (codebooks/
-    centroids/planes config) is preserved verbatim — compaction never
-    refits."""
-    # Crash-safe: survivors go to a VERSIONED tmp table while the index
-    # (and its files) are still intact, then the catalog entry swaps and
-    # the superseded directory is reaped — the agg_store._rewrite_swap
-    # discipline. A write failure mid-compaction leaves the original
-    # index and tombstones untouched; only the DROP→RENAME window needs
-    # the re-register fallback, and both data dirs still exist then.
-    import shutil
-    import uuid
+    Crash-safe (``store.swap``): a failure before the rename leaves the
+    index and its tombstones untouched, and the counter reset commits
+    with the data at the rename. Returns the surviving row count.
+    Trained state (codebooks/centroids/planes config) is preserved
+    verbatim — compaction never refits."""
+    kind, props = _index(spark, name)
+    base = S.warehouse_path(spark, name)
 
-    from rspl_spark.operators.agg_store import (
-        _reap_stale_compactions,
-        _table_location,
+    def stamp(old: dict[str, str], tmp: str) -> dict[str, str]:
+        return {
+            **S.carried(old),
+            **{k: v for k, v in old.items() if k.startswith(f"{kind}.")},
+            f"{kind}.base_rows": str(spark.table(tmp).count()),
+            f"{kind}.appended_rows": "0",
+        }
+
+    new = S.swap(
+        spark, name, live_rows(spark, name), base, list(_KINDS[kind].part_keys),
+        # the layout the index was created with — a hardcoded 32 shrank
+        # big indexes and ballooned small ones on every compaction
+        int(props.get(f"{kind}.n_partitions", "32")),
+        bucketed=False, stamp=stamp, old_props=props,
     )
-
-    # a PREVIOUS failed compaction leaves its tmp table/dir behind (for
-    # post-mortem inspection); reap those now so repeated failures can't
-    # accumulate unreaped warehouse directories
-    _reap_stale_compactions(spark, name, _warehouse_path(spark, name))
-    props = _props(spark, name)
-    if "pq.codebooks" in props:
-        kind, part_keys = "pq", []
-    elif "ivf.centroids" in props:
-        kind, part_keys = "ivf", ["cid"]
-    else:
-        kind, part_keys = "srp", ["band", "bv"]
-    old_path = _table_location(spark, name)
-    live = live_rows(spark, name)
-    ver = uuid.uuid4().hex[:8]
-    tmp_name = f"{name}__compact_{ver}"
-    tmp_path = f"{_warehouse_path(spark, name)}.__v_{ver}"
-    # preserve the layout the index was created with (recorded at
-    # create time) — a hardcoded 32 shrank big indexes and ballooned
-    # small ones on every compaction
-    n_parts = int(props.get(f"{kind}.n_partitions", "32"))
-    writer = (
-        live.repartition(n_parts, *part_keys)
-        if part_keys
-        else live.repartition(n_parts)
-    ).write.mode("overwrite").format("parquet").option("path", tmp_path)
-    writer.saveAsTable(tmp_name)
-    n = spark.table(tmp_name).count()
-    spark.sql(f"DROP TABLE {name}")
-    try:
-        spark.sql(f"ALTER TABLE {tmp_name} RENAME TO {name}")
-    except Exception:
-        # re-register the ORIGINAL data under the index name so the
-        # table never vanishes; the compacted tmp stays for inspection
-        if old_path:
-            schema = spark.read.parquet(old_path).schema
-            cols = ", ".join(
-                f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-            )
-            spark.sql(
-                f"CREATE TABLE {name} ({cols}) USING PARQUET LOCATION '{old_path}'"
-            )
-            _set_props(spark, name, props)
-            _refresh(spark, name)
-        raise
-    _refresh(spark, name)
-    keep = {k: v for k, v in props.items() if k.startswith(f"{kind}.")}
-    keep[f"{kind}.base_rows"] = str(n)
-    keep[f"{kind}.appended_rows"] = "0"
-    _set_props(spark, name, keep)
-    if (
-        old_path
-        and os.path.realpath(old_path) != os.path.realpath(tmp_path)
-        and os.path.isdir(old_path)
-    ):
-        shutil.rmtree(old_path, ignore_errors=True)
-    _drop_tombstones(spark, name)
-    return n
+    S.drop_tombstones(spark, name, base)
+    return int(new[f"{kind}.base_rows"])
 
 
-def _fresh_table_path(spark: SparkSession, name: str) -> str:
-    """A clean on-disk location for a (re)built index table, derived
-    from the session's configured warehouse (NOT this module's file
-    location): a session pointed elsewhere must get its index there."""
-    path = _warehouse_path(spark, name)
-    if os.path.isdir(path):
-        shutil.rmtree(path, ignore_errors=True)
-    return path
+# --- Persisted PQ index -----------------------------------------------------
+#
+# The code table (vec_id, codes) is the 64x-compressed representation
+# the ADC kernel scans; the codebooks (m * k * sub floats) ride in
+# TBLPROPERTIES.
 
 
 def create_pq_index(
@@ -325,138 +265,36 @@ def create_pq_index(
     tag: str = "base",
     n_partitions: int = 32,
 ) -> str:
-    """Fit codebooks on ``df``, encode it, persist code table + books.
+    """Fit codebooks on ``df``, encode it, persist code table + books
+    (reuse and ``tag`` semantics: ``_create``)."""
 
-    Idempotent unless ``overwrite``: an existing table is reused as-is
-    (its stored codebooks win — refitting silently would invalidate
-    every code row already on disk). ``tag`` names the build state so
-    callers can recognize an index built by an earlier session
-    (``pq_index_tag``) instead of rebuilding."""
-    if spark.catalog.tableExists(name):
-        if not overwrite:
-            return name
-        spark.sql(f"DROP TABLE {name}")
-    # a fresh build defines a fresh membership — stale tombstones from
-    # the previous build must not shadow re-ingested ids
-    _drop_tombstones(spark, name)
-    path = _fresh_table_path(spark, name)
-    cbs = pq_fit(df, vec_col=vec_col, id_col=id_col, m=m, k=k, iters=iters)
-    enc = pq_encode(df, cbs, vec_col=vec_col, id_col=id_col)
-    if id_col != "vec_id":
-        # the persisted table's id column is ALWAYS vec_id — the
-        # tombstone machinery (live_rows/delete_keys) joins on it, and
-        # IVF/SRP already normalize via unit_prep; a caller id name
-        # surviving to disk broke every PQ delete/compact/probe
-        enc = enc.withColumnRenamed(id_col, "vec_id")
-    (
-        enc.repartition(n_partitions)
-        .write.mode("overwrite")
-        .format("parquet")
-        .option("path", path)
-        .saveAsTable(name)
-    )
-    _refresh(spark, name)
-    base_rows = spark.table(name).count()
-    _set_props(
-        spark,
-        name,
-        {
-            "pq.codebooks": json.dumps(cbs),
-            "pq.m": str(m),
-            "pq.k": str(k),
-            "pq.iters": str(iters),
-            "pq.base_rows": str(base_rows),
-            "pq.appended_rows": "0",
-            "pq.n_partitions": str(n_partitions),
-            "pq.tag": tag,
-        },
-    )
-    return name
+    def fit() -> dict[str, str]:
+        cbs = pq_fit(df, vec_col=vec_col, id_col=id_col, m=m, k=k, iters=iters)
+        return {"pq.codebooks": json.dumps(cbs), "pq.m": str(m), "pq.k": str(k),
+                "pq.iters": str(iters)}
+
+    return _create(spark, df, name, "pq", fit, vec_col, id_col, overwrite, tag, n_partitions)
+
+
+def _pq_rows(
+    spark: SparkSession, df: DataFrame, props: dict[str, str], vec_col: str, id_col: str
+) -> DataFrame:
+    enc = pq_encode(df, json.loads(props["pq.codebooks"]), vec_col=vec_col, id_col=id_col)
+    # the persisted id column is ALWAYS vec_id — the tombstone set joins
+    # on it, and IVF/SRP already normalize via unit_prep; a caller id
+    # name surviving to disk broke every PQ delete/compact/probe
+    return enc if id_col == "vec_id" else enc.withColumnRenamed(id_col, "vec_id")
+
+
+def _pq_dim(props: dict[str, str]) -> int:
+    cbs = json.loads(props["pq.codebooks"])
+    return len(cbs) * len(cbs[0][0])
 
 
 def pq_index_codebooks(spark: SparkSession, name: str) -> list[list[list[float]]]:
     """The stored codebooks — one catalog call, exact float round-trip
     (json repr), no data files touched."""
-    return json.loads(_props(spark, name)["pq.codebooks"])
-
-
-def pq_index_tag(spark: SparkSession, name: str) -> str | None:
-    if not spark.catalog.tableExists(name):
-        return None
-    return _props(spark, name).get("pq.tag")
-
-
-def append_pq_index(
-    spark: SparkSession,
-    new_vecs: DataFrame,
-    name: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    tag: str | None = None,
-) -> int:
-    """Encode the increment with the STORED codebooks and append.
-
-    Append-only parquet files — existing codes never rewritten. Returns
-    the appended row count (also accumulated in pq.appended_rows, the
-    staleness numerator)."""
-    cbs = pq_index_codebooks(spark, name)
-    _check_increment_dim(new_vecs, vec_col, len(cbs) * len(cbs[0][0]), "pq")
-    _check_increment_not_tombstoned(spark, name, new_vecs, id_col, "pq")
-    # count the INCREMENT, not the table: two corpus-sized table counts
-    # per daily append would dwarf the append itself at a large index.
-    # localCheckpoint materializes the (increment-sized) encoding once
-    # for both the count and the write.
-    enc = pq_encode(new_vecs, cbs, vec_col=vec_col, id_col=id_col)
-    if id_col != "vec_id":
-        enc = enc.withColumnRenamed(id_col, "vec_id")  # stored name, always
-    enc = enc.localCheckpoint()
-    n = enc.count()
-    enc.write.mode("append").format("parquet").saveAsTable(name)
-    _refresh(spark, name)
-    props = _props(spark, name)
-    upd = {"pq.appended_rows": str(int(props.get("pq.appended_rows", "0")) + n)}
-    if tag is not None:
-        upd["pq.tag"] = tag
-    _set_props(spark, name, upd)
-    return n
-
-
-def pq_index_staleness(spark: SparkSession, name: str) -> float:
-    """appended_rows / base_rows — how far the corpus has drifted from
-    the codebooks' training set."""
-    p = _props(spark, name)
-    base = int(p.get("pq.base_rows", "0"))
-    return int(p.get("pq.appended_rows", "0")) / max(base, 1)
-
-
-def refresh_pq_index(
-    spark: SparkSession,
-    df: DataFrame,
-    name: str,
-    stale_threshold: float = 0.5,
-    tag: str = "refit",
-    **fit_kw,
-) -> bool:
-    """Refit-on-drift hook: when staleness crosses the threshold,
-    rebuild the index from ``df`` (the CURRENT full corpus) — new
-    codebooks, full re-encode, one rewrite. Returns True iff a refit
-    ran. A pipeline calls this after each append; most days it's a
-    metadata no-op."""
-    if pq_index_staleness(spark, name) < stale_threshold:
-        return False
-    p = _props(spark, name)
-    create_pq_index(
-        spark,
-        df,
-        name,
-        m=int(p["pq.m"]),
-        k=int(p["pq.k"]),
-        iters=int(p["pq.iters"]),
-        overwrite=True,
-        tag=tag,
-        **fit_kw,
-    )
-    return True
+    return json.loads(_index(spark, name)[1]["pq.codebooks"])
 
 
 def pq_index_topk(
@@ -480,14 +318,11 @@ def pq_index_topk(
 
 # --- Persisted IVF index ----------------------------------------------------
 #
-# Same maintenance contract as the PQ index: trained state (the k*d
-# centroid matrix) in TBLPROPERTIES, the data-sized half (unit-prepped
-# vectors + their cell assignment) as an append-only managed parquet
-# table. Increments are assigned with the STORED centroids (assignment
-# is a pure function of the centroids), staleness tracks drift, refit
-# rebuilds. Query = probe n_probe nearest cells against the stored
-# centroids, scan ONLY those cells of the table — the candidate set
-# shrinks by ~cells/probes and the cell id keys the shuffle.
+# Trained state: the k*d centroid matrix; the data-sized half:
+# unit-prepped vectors + their cell assignment. Query = probe n_probe
+# nearest cells against the stored centroids, scan ONLY those cells of
+# the table — the candidate set shrinks by ~cells/probes and the cell
+# id keys the shuffle.
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -520,6 +355,23 @@ def _rank_cells(prep: DataFrame, centp: DataFrame, id_col: str, n_keep: int) -> 
     )
 
 
+def _rerank(cand: DataFrame, topk: int) -> DataFrame:
+    """(query_id, vec_id, score, rk): exact cosine top-k over candidate
+    (query, stored vector) pairs."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("raw_score"), F.asc("vec_id"))
+    return (
+        cand.select(
+            "query_id",
+            "vec_id",
+            (_dot(F.col("q_emb"), F.col("emb")) / F.nullif(F.col("q_nrm") * F.col("nrm"), F.lit(0.0))).alias("raw_score"),
+        )
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= topk)
+        .select("query_id", "vec_id", F.round("raw_score", 6).alias("score"), "rk")
+        .orderBy("query_id", "rk")
+    )
+
+
 def create_ivf_index(
     spark: SparkSession,
     df: DataFrame,
@@ -534,113 +386,28 @@ def create_ivf_index(
 ) -> str:
     """Train centroids on ``df`` (Lloyd k-means, deterministic init),
     assign every vector to its nearest-by-cosine cell, persist the
-    assigned unit-prepped table + the centroids in TBLPROPERTIES.
+    assigned unit-prepped table + the centroids in TBLPROPERTIES
+    (reuse and ``tag`` semantics: ``_create``)."""
 
-    Idempotent unless ``overwrite`` — stored centroids win, because a
-    silent refit would strand every assignment row on disk."""
-    from rspl_spark.operators.similarity import kmeans_fit, unit_prep
+    def fit() -> dict[str, str]:
+        cents = kmeans_fit(df, vec_col=vec_col, id_col=id_col, k=k, iters=iters)
+        return {"ivf.centroids": json.dumps(cents), "ivf.k": str(k), "ivf.iters": str(iters)}
 
-    if spark.catalog.tableExists(name):
-        if not overwrite:
-            return name
-        spark.sql(f"DROP TABLE {name}")
-    # a fresh build defines a fresh membership — stale tombstones from
-    # the previous build must not shadow re-ingested ids
-    _drop_tombstones(spark, name)
-    path = _fresh_table_path(spark, name)
-    cents = kmeans_fit(df, vec_col=vec_col, id_col=id_col, k=k, iters=iters)
+    return _create(spark, df, name, "ivf", fit, vec_col, id_col, overwrite, tag, n_partitions)
+
+
+def _ivf_rows(
+    spark: SparkSession, df: DataFrame, props: dict[str, str], vec_col: str, id_col: str
+) -> DataFrame:
     prep = unit_prep(df, "vec_id", "emb", "nrm", vec_col=vec_col, id_col=id_col)
-    assigned = _rank_cells(prep, _centroid_frame(spark, cents), "vec_id", 1)
-    (
-        assigned.repartition(n_partitions, "cid")
-        .write.mode("overwrite")
-        .format("parquet")
-        .option("path", path)
-        .saveAsTable(name)
-    )
-    _refresh(spark, name)
-    base_rows = spark.table(name).count()
-    _set_props(
-        spark,
-        name,
-        {
-            "ivf.centroids": json.dumps(cents),
-            "ivf.k": str(k),
-            "ivf.iters": str(iters),
-            "ivf.base_rows": str(base_rows),
-            "ivf.appended_rows": "0",
-            "ivf.n_partitions": str(n_partitions),
-            "ivf.tag": tag,
-        },
-    )
-    return name
+    cents = json.loads(props["ivf.centroids"])
+    return _rank_cells(prep, _centroid_frame(spark, cents), "vec_id", 1)
 
 
 def ivf_index_centroids(spark: SparkSession, name: str) -> list[list[float]]:
     """The stored centroid matrix — one catalog call, exact float
     round-trip (json repr), no data files touched."""
-    return json.loads(_props(spark, name)["ivf.centroids"])
-
-
-def append_ivf_index(
-    spark: SparkSession,
-    new_vecs: DataFrame,
-    name: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    tag: str | None = None,
-) -> int:
-    """Assign the increment with the STORED centroids and append —
-    append-only files, no rewrite, the increment is the only data
-    scanned."""
-    from rspl_spark.operators.similarity import unit_prep
-
-    cents = ivf_index_centroids(spark, name)
-    _check_increment_dim(new_vecs, vec_col, len(cents[0]), "ivf")
-    _check_increment_not_tombstoned(spark, name, new_vecs, id_col, "ivf")
-    prep = unit_prep(new_vecs, "vec_id", "emb", "nrm", vec_col=vec_col, id_col=id_col)
-    assigned = _rank_cells(prep, _centroid_frame(spark, cents), "vec_id", 1).localCheckpoint()
-    n = assigned.count()
-    assigned.write.mode("append").format("parquet").saveAsTable(name)
-    _refresh(spark, name)
-    props = _props(spark, name)
-    upd = {"ivf.appended_rows": str(int(props.get("ivf.appended_rows", "0")) + n)}
-    if tag is not None:
-        upd["ivf.tag"] = tag
-    _set_props(spark, name, upd)
-    return n
-
-
-def ivf_index_staleness(spark: SparkSession, name: str) -> float:
-    p = _props(spark, name)
-    base = int(p.get("ivf.base_rows", "0"))
-    return int(p.get("ivf.appended_rows", "0")) / max(base, 1)
-
-
-def refresh_ivf_index(
-    spark: SparkSession,
-    df: DataFrame,
-    name: str,
-    stale_threshold: float = 0.5,
-    tag: str = "refit",
-    **fit_kw,
-) -> bool:
-    """Refit-on-drift: past the threshold, retrain on the CURRENT full
-    corpus and rewrite assignments. Returns True iff a refit ran."""
-    if ivf_index_staleness(spark, name) < stale_threshold:
-        return False
-    p = _props(spark, name)
-    create_ivf_index(
-        spark,
-        df,
-        name,
-        k=int(p["ivf.k"]),
-        iters=int(p["ivf.iters"]),
-        overwrite=True,
-        tag=tag,
-        **fit_kw,
-    )
-    return True
+    return json.loads(_index(spark, name)[1]["ivf.centroids"])
 
 
 def ivf_index_topk(
@@ -656,8 +423,6 @@ def ivf_index_topk(
     n_probe stored cells nearest each query. The centroid probe is a
     broadcast; the cell join hits only the probed cells' partitions
     (the table is written partitioned-by-cid-hash)."""
-    from rspl_spark.operators.similarity import unit_prep
-
     cents = ivf_index_centroids(spark, name)
     qprep = unit_prep(queries, "query_id", "q_emb", "q_nrm", vec_col=vec_col, id_col=id_col)
     probes = _rank_cells(
@@ -669,18 +434,7 @@ def ivf_index_topk(
     cand = probes.join(live_rows(spark, name), "cid").filter(
         F.col("vec_id") != F.col("query_id")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("raw_score"), F.asc("vec_id"))
-    return (
-        cand.select(
-            "query_id",
-            "vec_id",
-            (_dot(F.col("q_emb"), F.col("emb")) / F.nullif(F.col("q_nrm") * F.col("nrm"), F.lit(0.0))).alias("raw_score"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= topk)
-        .select("query_id", "vec_id", F.round("raw_score", 6).alias("score"), "rk")
-        .orderBy("query_id", "rk")
-    )
+    return _rerank(cand, topk)
 
 
 # --- Persisted SRP band index -----------------------------------------------
@@ -690,11 +444,11 @@ def ivf_index_topk(
 # plus the generation CONFIG in TBLPROPERTIES (planes/bands/dim pin
 # the hash family; an append encoded under different config would
 # silently never collide with existing buckets). Appends re-derive the
-# planes from config; no staleness dimension exists, but tag/row
-# accounting matches the other stores.
+# planes from config; nothing is trained, but tag/row accounting (and
+# so staleness) matches the other kinds.
 
 
-def srp_signs(p: int, dim: int) -> list[int]:
+def _srp_signs(p: int, dim: int) -> list[int]:
     """Deterministic ±1 hyperplane p (Knuth-multiply hash — linear
     correlation between planes is fine for bucket-then-rerank; see
     similarity.rp_signs for the isometry-grade mixer)."""
@@ -704,30 +458,24 @@ def srp_signs(p: int, dim: int) -> list[int]:
     ]
 
 
-def srp_sketch_col(emb: Column, planes: int, dim: int) -> Column:
+def _srp_sketch_col(emb: Column, planes: int, dim: int) -> Column:
     """planes-bit SRP sketch as a long: bit p = (dot(emb, plane_p) >= 0)."""
     dbl = F.transform(emb, lambda x: x.cast("double"))
     bits = None
     for p in range(planes):
-        signs = F.array(*[F.lit(float(s)) for s in srp_signs(p, dim)])
+        signs = F.array(*[F.lit(float(s)) for s in _srp_signs(p, dim)])
         bit = F.when(_dot(dbl, signs) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
         bits = bit if bits is None else bits + bit
     return bits.cast("long")
 
 
-def _srp_band_rows(
-    df: DataFrame,
-    planes: int,
-    dim: int,
-    bands: int,
-    vec_col: str,
-    id_col: str,
+def _srp_rows(
+    spark: SparkSession, df: DataFrame, props: dict[str, str], vec_col: str, id_col: str
 ) -> DataFrame:
-    from rspl_spark.operators.similarity import unit_prep
-
+    planes, bands, dim = (int(props[f"srp.{k}"]) for k in ("planes", "bands", "dim"))
     band_bits = planes // bands
     prep = unit_prep(df, "vec_id", "emb", "nrm", vec_col=vec_col, id_col=id_col)
-    sk = prep.withColumn("sketch", srp_sketch_col(F.col("emb"), planes, dim))
+    sk = prep.withColumn("sketch", _srp_sketch_col(F.col("emb"), planes, dim))
     return sk.select(
         "vec_id",
         "emb",
@@ -765,69 +513,16 @@ def create_srp_index(
     vectors, config in TBLPROPERTIES. planes must divide by bands."""
     if planes % bands:
         raise ValueError("planes must be divisible by bands")
-    if spark.catalog.tableExists(name):
-        if not overwrite:
-            return name
-        spark.sql(f"DROP TABLE {name}")
-    # a fresh build defines a fresh membership — stale tombstones from
-    # the previous build must not shadow re-ingested ids
-    _drop_tombstones(spark, name)
-    path = _fresh_table_path(spark, name)
-    rows = _srp_band_rows(df, planes, dim, bands, vec_col, id_col)
-    (
-        rows.repartition(n_partitions, "band", "bv")
-        .write.mode("overwrite")
-        .format("parquet")
-        .option("path", path)
-        .saveAsTable(name)
-    )
-    _refresh(spark, name)
-    base_rows = spark.table(name).count()
-    _set_props(
-        spark,
-        name,
-        {
-            "srp.planes": str(planes),
-            "srp.bands": str(bands),
-            "srp.dim": str(dim),
-            "srp.base_rows": str(base_rows),
-            "srp.appended_rows": "0",
-            "srp.n_partitions": str(n_partitions),
-            "srp.tag": tag,
-        },
-    )
-    return name
+
+    def fit() -> dict[str, str]:
+        return {"srp.planes": str(planes), "srp.bands": str(bands), "srp.dim": str(dim)}
+
+    return _create(spark, df, name, "srp", fit, vec_col, id_col, overwrite, tag, n_partitions)
 
 
 def srp_index_config(spark: SparkSession, name: str) -> dict[str, int]:
-    p = _props(spark, name)
+    p = _index(spark, name)[1]
     return {k: int(p[f"srp.{k}"]) for k in ("planes", "bands", "dim")}
-
-
-def append_srp_index(
-    spark: SparkSession,
-    new_vecs: DataFrame,
-    name: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    tag: str | None = None,
-) -> int:
-    """Band the increment under the STORED config and append."""
-    cfg = srp_index_config(spark, name)
-    _check_increment_dim(new_vecs, vec_col, cfg["dim"], "srp")
-    _check_increment_not_tombstoned(spark, name, new_vecs, id_col, "srp")
-    rows = _srp_band_rows(
-        new_vecs, cfg["planes"], cfg["dim"], cfg["bands"], vec_col, id_col
-    ).localCheckpoint()
-    n = rows.count()
-    rows.write.mode("append").format("parquet").saveAsTable(name)
-    _refresh(spark, name)
-    props = _props(spark, name)
-    upd = {"srp.appended_rows": str(int(props.get("srp.appended_rows", "0")) + n)}
-    if tag is not None:
-        upd["srp.tag"] = tag
-    _set_props(spark, name, upd)
-    return n
 
 
 def srp_index_topk(
@@ -841,12 +536,7 @@ def srp_index_topk(
     """(query_id, vec_id, score, rk): exact cosine rerank of stored
     vectors sharing >= 1 band value with the query. The band join keys
     the shuffle; candidates dedup before scoring."""
-    from rspl_spark.operators.similarity import unit_prep
-
-    cfg = srp_index_config(spark, name)
-    qb = _srp_band_rows(
-        queries, cfg["planes"], cfg["dim"], cfg["bands"], vec_col, id_col
-    ).select(
+    qb = _srp_rows(spark, queries, _index(spark, name)[1], vec_col, id_col).select(
         F.col("vec_id").alias("query_id"),
         F.col("emb").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
@@ -859,19 +549,28 @@ def srp_index_topk(
         .select("query_id", "q_emb", "q_nrm", "vec_id", "emb", "nrm")
         .distinct()
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("raw_score"), F.asc("vec_id"))
-    return (
-        cand.select(
-            "query_id",
-            "vec_id",
-            (_dot(F.col("q_emb"), F.col("emb")) / F.nullif(F.col("q_nrm") * F.col("nrm"), F.lit(0.0))).alias("raw_score"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= topk)
-        .select("query_id", "vec_id", F.round("raw_score", 6).alias("score"), "rk")
-        .orderBy("query_id", "rk")
-    )
+    return _rerank(cand, topk)
 
 
-# internal name kept for existing callers/tests
-_live_rows = live_rows
+# --- One table keyed by index kind ------------------------------------------
+
+
+@dataclass(frozen=True)
+class _Kind:
+    marker: str  # the property only this kind stores
+    part_keys: tuple[str, ...]  # repartition keys of the written table
+    params: tuple[str, ...]  # build parameters a refit re-reads
+    dim: Callable[[dict[str, str]], int]  # vector dim the stored state expects
+    # (spark, vectors, props, vec_col, id_col) -> rows under the stored state
+    encode: Callable[[SparkSession, DataFrame, dict[str, str], str, str], DataFrame]
+    create: Callable[..., str]
+
+
+_KINDS = {
+    "pq": _Kind("pq.codebooks", (), ("m", "k", "iters", "n_partitions"),
+                _pq_dim, _pq_rows, create_pq_index),
+    "ivf": _Kind("ivf.centroids", ("cid",), ("k", "iters", "n_partitions"),
+                 lambda p: len(json.loads(p["ivf.centroids"])[0]), _ivf_rows, create_ivf_index),
+    "srp": _Kind("srp.planes", ("band", "bv"), ("planes", "bands", "dim", "n_partitions"),
+                 lambda p: int(p["srp.dim"]), _srp_rows, create_srp_index),
+}

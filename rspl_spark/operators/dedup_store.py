@@ -29,6 +29,11 @@ Pair semantics match the batch ``lsh_candidate_pairs``: canonical
 (doc_a < doc_b), est_jaccard = max over colliding buckets of the
 matching-slot fraction, optional threshold. Pairs wholly inside the
 store are NOT re-emitted (they were reported when their docs arrived).
+
+The store lifecycle (tombstones, the crash-safe swap behind
+``compact_store``, layout and properties) is ``operators/store.py``;
+this module owns the band-row payload, the ``_rspl_meta.json`` layout
+record, and its path, the repo warehouse.
 """
 
 from __future__ import annotations
@@ -38,6 +43,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rspl_spark.catalog import register_external_bucketed, repo_warehouse_path
+from rspl_spark.operators import store as S
 from rspl_spark.operators.dedup import MINHASH_COEFS, minhash_signatures
 
 _N = len(MINHASH_COEFS)
@@ -104,8 +111,6 @@ def create_signature_store(
     catalog.ensure_bucketed: a driver launched elsewhere must not
     scatter table dirs outside the repo).
     """
-    from rspl_spark.catalog import register_external_bucketed
-
     if spark.catalog.tableExists(name):
         if not overwrite:
             return name
@@ -114,17 +119,15 @@ def create_signature_store(
     # a complete layout from an earlier session (same deterministic
     # signatures, plus any appended increments — which a persistent store
     # WANTS) re-registers metadata-only instead of recomputing; its
-    # tombstones (if any) are preserved and re-registered lazily.
+    # tombstones (if any) are preserved and re-registered lazily. The
+    # meta file in the base dir records where the live layout is — a
+    # compaction swaps it to a versioned dir and the meta follows.
     # The on-disk layout's OWN (n_buckets, n_bands) — recorded at write
     # time — are validated first: registering 8-bucket files as a
     # 16-bucket table would make bucketed joins trust false hash
     # placement and silently miss near-dup pairs.
-    meta_path = os.path.join(path, "_rspl_meta.json")
-    if not overwrite and os.path.isfile(meta_path):
-        import json
-
-        with open(meta_path) as f:
-            meta = json.load(f)
+    meta = S.read_meta(path)
+    if not overwrite and meta is not None:
         if (meta.get("n_buckets"), meta.get("n_bands")) != (n_buckets, n_bands):
             raise ValueError(
                 f"create_signature_store({name!r}): on-disk layout was "
@@ -151,7 +154,7 @@ def create_signature_store(
         # the meta file and re-register.
         raise ValueError(
             f"create_signature_store({name!r}): on-disk layout at "
-            f"{path} has no _rspl_meta.json, so its (n_buckets, "
+            f"{path} has no {S.META}, so its (n_buckets, "
             "n_bands) cannot be validated against this call. "
             "Refusing to re-register (silent mis-bucketing) and "
             "refusing to rebuild implicitly (a rebuild discards any "
@@ -160,38 +163,23 @@ def create_signature_store(
             "meta file manually if the parameters are independently "
             "known"
         )
-    if not overwrite and register_external_bucketed(spark, name, path, "bucket", n_buckets):
+    if not overwrite and register_external_bucketed(
+        spark, name, S.live_path(path), "bucket", n_buckets
+    ):
         return name
     # fresh build = fresh membership: stale tombstones (catalog OR a
     # leftover sidecar dir from an earlier session) must not shadow
     # re-ingested docs
-    _drop_tombstones(spark, name)
-    if os.path.isdir(path):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-    (
-        signature_band_rows(docs, text_col=text_col, id_col=id_col, n_bands=n_bands, sig=sig)
-        .repartition(n_buckets, "bucket")
-        .write.bucketBy(n_buckets, "bucket")
-        .sortBy("bucket")
-        .mode("overwrite")
-        .format("parquet")
-        .option("path", path)
-        .saveAsTable(name)
+    S.drop_tombstones(spark, name, path)
+    S.clear_layout(path)
+    S.write_table(
+        signature_band_rows(docs, text_col=text_col, id_col=id_col, n_bands=n_bands, sig=sig),
+        name, path, ["bucket"], n_buckets,
     )
-    from rspl_spark.operators.agg_store import _refresh_store
-
-    _refresh_store(spark, name)
-    import json
-
-    # temp-name + rename: a crash mid-write must not leave a complete
-    # layout paired with a truncated/absent meta (the unvalidatable
-    # state the no-meta refusal above then catches on next registration)
-    tmp_meta = os.path.join(path, "_rspl_meta.json.tmp")
-    with open(tmp_meta, "w") as f:
-        json.dump({"n_buckets": n_buckets, "n_bands": n_bands}, f)
-    os.replace(tmp_meta, os.path.join(path, "_rspl_meta.json"))
+    S.refresh(spark, name)
+    # written after the data: a crash in between leaves a layout with no
+    # meta, which the no-meta refusal above then catches
+    S.write_meta(path, {"n_buckets": n_buckets, "n_bands": n_bands})
     return name
 
 
@@ -211,49 +199,22 @@ def append_increment(
     ``dedup_increment`` — an appended doc probing itself is a no-op
     (equal ids are excluded) but wastes a bucket row comparison.
 
-    Fails fast if the increment re-uses a currently-tombstoned doc_id:
-    with id-keyed tombstones there is no correct silent behavior for a
-    re-append (keeping the tombstone hides the new band rows; clearing
-    it resurrects the stale ones) — run ``compact_store`` first. The
-    check is one semi-join against the broadcast metadata-sized
-    tombstone sidecar, never a pass over the store.
+    Fails fast if the increment re-uses a currently-tombstoned doc_id
+    (``store.check_append``) — run ``compact_store`` first.
     """
-    from rspl_spark.operators.agg_store import _table_buckets
-
     # the store's ACTUAL bucket count governs the append, like
     # compact_store: a caller-supplied mismatch either fails the write
     # or silently mis-places rows for the zero-exchange probe
-    n_buckets = _table_buckets(spark, store) or n_buckets
-    dead = _tombstones(spark, store)
-    if dead is not None:
-        hit = (
-            new_docs.select(F.col(id_col).cast("long").alias("doc_id"))
-            .join(F.broadcast(dead), "doc_id", "left_semi")
-            .take(3)
-        )
-        if hit:
-            ids = sorted(r["doc_id"] for r in hit)
-            raise ValueError(
-                f"append_increment: increment contains tombstoned doc_ids "
-                f"(e.g. {ids}); run compact_store('{store}') first, then "
-                f"append."
-            )
-    (
-        signature_band_rows(new_docs, text_col=text_col, id_col=id_col, n_bands=n_bands)
-        .repartition(n_buckets, "bucket")
-        .write.bucketBy(n_buckets, "bucket")
-        .sortBy("bucket")
-        .mode("append")
-        .format("parquet")
-        .saveAsTable(store)
+    n_buckets = S.table_buckets(spark, store) or n_buckets
+    S.check_append(
+        spark, store, _warehouse_path(spark, store), "doc_id", new_docs, id_col,
+        "append_increment", "compact_store",
     )
-    from rspl_spark.operators.agg_store import _refresh_store
-
-    _refresh_store(spark, store)
-
-
-def _deleted_name(store: str) -> str:
-    return f"{store}__deleted"
+    S.write_table(
+        signature_band_rows(new_docs, text_col=text_col, id_col=id_col, n_bands=n_bands),
+        store, None, ["bucket"], n_buckets, mode="append",
+    )
+    S.refresh(spark, store)
 
 
 def _warehouse_path(spark: SparkSession, table: str) -> str:
@@ -263,150 +224,41 @@ def _warehouse_path(spark: SparkSession, table: str) -> str:
     session whose spark.sql.warehouse.dir points elsewhere would
     otherwise write the compacted data (and read tombstones) under a
     different root, orphaning the store's pinned directory."""
-    from rspl_spark.catalog import repo_warehouse_path
-
     return repo_warehouse_path(table)
 
 
-def _tombstones(spark: SparkSession, store: str) -> DataFrame | None:
-    """The persisted tombstone set, or None. Tombstones OUTLIVE the
-    session (a takedown must not resurrect on driver restart): the
-    sidecar is an EXTERNAL parquet table; a fresh catalog that finds
-    its directory on disk re-registers it here — the same
-    re-registration discipline as the store itself."""
-    dn = _deleted_name(store)
-    if spark.catalog.tableExists(dn):
-        return spark.table(dn)
-    path = _warehouse_path(spark, dn)
-    if os.path.isdir(path):
-        spark.sql(f"CREATE TABLE {dn} (doc_id BIGINT) USING PARQUET LOCATION '{path}'")
-        return spark.table(dn)
-    return None
-
-
 def delete_keys(spark: SparkSession, store: str, doc_ids) -> int:
-    """Retract documents from the signature store by tombstone
-    (takedown/opt-out compliance): append the ids to a key-only
-    sidecar table that every probe anti-joins out. The delete writes
-    ONLY the tombstone file — no store data file is touched (asserted
-    in tests/test_incremental_dedup.py), so a takedown against a
-    corpus-sized store costs a metadata write. Physical removal is
-    deferred to :func:`compact_store`.
-
-    ``doc_ids``: iterable of ids or a single-column DataFrame. Returns
-    tombstones appended (idempotent on repeats)."""
-    if isinstance(doc_ids, DataFrame):
-        ids = doc_ids.select(F.col(doc_ids.columns[0]).cast("long").alias("doc_id"))
-    else:
-        ids = spark.createDataFrame([(int(v),) for v in doc_ids], "doc_id long")
-    ids = ids.distinct()
-    dn = _deleted_name(store)
-    existing = _tombstones(spark, store)
-    if existing is not None:
-        ids = ids.join(F.broadcast(existing), "doc_id", "left_anti")
-    ids = ids.localCheckpoint()
-    n = ids.count()
-    if n:
-        writer = ids.coalesce(1).write.mode("append").format("parquet")
-        if not spark.catalog.tableExists(dn):
-            writer = writer.option("path", _warehouse_path(spark, dn))
-        writer.saveAsTable(dn)
-        from rspl_spark.operators.agg_store import _refresh_store
-
-        _refresh_store(spark, dn)
-    return n
+    """Tombstone ``doc_ids`` in the signature store:
+    ``store.delete_keys``, no store data file touched (asserted in
+    tests/test_incremental_dedup.py). Physical removal is deferred to
+    :func:`compact_store`."""
+    return S.delete_keys(spark, store, _warehouse_path(spark, store), "doc_id", doc_ids)
 
 
 def deleted_count(spark: SparkSession, store: str) -> int:
-    dead = _tombstones(spark, store)
-    return dead.count() if dead is not None else 0
-
-
-def _drop_tombstones(spark: SparkSession, store: str) -> None:
-    spark.sql(f"DROP TABLE IF EXISTS {_deleted_name(store)}")
-    path = _warehouse_path(spark, _deleted_name(store))
-    if os.path.isdir(path):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+    return S.deleted_count(spark, store, _warehouse_path(spark, store), "doc_id")
 
 
 def live_store(spark: SparkSession, store: str) -> DataFrame:
-    """Store band rows minus tombstoned doc_ids — the view EVERY probe
-    (batch ``dedup_increment``, streaming
-    ``streaming_dedup_against_store``) should read so takedowns are
-    honored everywhere the store is consumed. The tombstone set is
-    key-only and broadcasts, and a broadcast anti join preserves the
-    probe side's outputPartitioning — the zero-store-side-Exchange
-    probe property survives delete support unchanged."""
-    tbl = spark.table(store)
-    dead = _tombstones(spark, store)
-    if dead is not None:
-        tbl = tbl.join(F.broadcast(dead), "doc_id", "left_anti")
-    return tbl
+    """Store band rows minus tombstoned doc_ids (``store.live``) — the
+    view EVERY probe (batch ``dedup_increment``, streaming
+    ``streaming_dedup_against_store``) reads, so takedowns are honored
+    everywhere and the zero-store-side-Exchange probe property holds."""
+    return S.live(spark, store, _warehouse_path(spark, store), "doc_id")
 
 
 def compact_store(spark: SparkSession, store: str, n_buckets: int = 8) -> int:
     """Physically drop tombstoned band rows: rewrite the survivors
-    under the same bucketed layout and clear the tombstones. One pass
-    over the store — run when deleted_count crosses a policy
-    threshold, not per delete. Returns surviving band-row count.
-
-    Crash-safe: survivors are materialized to a VERSIONED tmp table
-    while the store (and its files) are still intact, then the catalog
-    entry is swapped and the superseded directory reaped — the same
-    write-then-swap discipline as ``agg_store._rewrite_swap``. A write
-    failure or crash mid-compaction leaves the original store (and its
-    tombstones) untouched; only a crash inside the DROP→RENAME window
-    needs the re-register fallback below, and even then both data
-    directories still exist on disk."""
-    import shutil
-    import uuid
-
-    from rspl_spark.operators.agg_store import (
-        _reap_stale_compactions,
-        _refresh_store,
-        _register_bucketed_at,
-        _table_buckets,
-        _table_location,
-    )
-
-    # a PREVIOUS failed compaction leaves its tmp table/dir behind (for
-    # post-mortem inspection); reap those now so repeated failures can't
-    # accumulate unreaped warehouse directories
-    _reap_stale_compactions(spark, store, _warehouse_path(spark, store))
-    n_buckets = _table_buckets(spark, store) or n_buckets
-    old_path = _table_location(spark, store)
-    ver = uuid.uuid4().hex[:8]
-    tmp_name = f"{store}__compact_{ver}"
-    tmp_path = f"{_warehouse_path(spark, store)}.__v_{ver}"
-    (
-        live_store(spark, store)
-        .repartition(n_buckets, "bucket")
-        .write.bucketBy(n_buckets, "bucket")
-        .sortBy("bucket")
-        .mode("overwrite")
-        .format("parquet")
-        .option("path", tmp_path)
-        .saveAsTable(tmp_name)
-    )
-    n = spark.table(tmp_name).count()
-    spark.sql(f"DROP TABLE {store}")
-    try:
-        spark.sql(f"ALTER TABLE {tmp_name} RENAME TO {store}")
-    except Exception:
-        # close the DROP→RENAME window: re-register the ORIGINAL data
-        # under the store name so the table never vanishes; the
-        # compacted tmp table stays behind for inspection
-        if old_path:
-            _register_bucketed_at(spark, store, old_path, ["bucket"], n_buckets)
-            _refresh_store(spark, store)
-        raise
-    _refresh_store(spark, store)
-    if old_path and os.path.realpath(old_path) != os.path.realpath(tmp_path) and os.path.isdir(old_path):
-        shutil.rmtree(old_path, ignore_errors=True)
-    _drop_tombstones(spark, store)
-    return n
+    under the same bucketed layout (``store.swap``: crash-safe, the
+    original store and its tombstones stay untouched until the rename)
+    and clear the tombstones. One pass over the store — run when
+    deleted_count crosses a policy threshold, not per delete. Returns
+    surviving band-row count."""
+    base = _warehouse_path(spark, store)
+    n_buckets = S.table_buckets(spark, store) or n_buckets
+    S.swap(spark, store, live_store(spark, store), base, ["bucket"], n_buckets)
+    S.drop_tombstones(spark, store, base)
+    return spark.table(store).count()
 
 
 def _est(a_prefix: str, b_prefix: str):
@@ -518,7 +370,3 @@ def dedup_increment(
     if threshold is not None:
         out = out.filter(F.col("est_jaccard") >= threshold)
     return out
-
-
-# internal name kept for existing callers/tests
-_live_store = live_store

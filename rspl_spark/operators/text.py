@@ -125,26 +125,6 @@ def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def _gram_counts(base: DataFrame, k: int, id_col: str) -> DataFrame:
-    """(id, gram, n) occurrence counts of token k-grams. One explode +
-    one partial-agg shuffle keyed on (doc, gram) — the shape that scales
-    to arbitrarily long documents (a per-row HOF count would be
-    O(len·distinct) inside one task).
-
-    Documents with fewer than k tokens emit NO grams (no truncated
-    pseudo-gram), so downstream fractions come out NULL instead of
-    scoring a 1-token doc as maximally repetitive."""
-    toks = F.col("_toks")
-    idx = F.sequence(F.lit(1), F.size(toks) - (k - 1))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-    return (
-        base.filter(F.size(toks) >= k)
-        .select(id_col, F.explode(grams).alias("gram"))
-        .groupBy(id_col, "gram")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def _rep_counts_kernel(text_col: str, id_col: str):
     """mapInPandas kernel: per-doc integer repetition stats, fully
     vectorized across the batch (one pd.factorize + np.unique per gram
@@ -607,52 +587,6 @@ def line_dedup(
             .alias("n_lines_removed"),
         )
     )
-
-
-def build_inverted_index(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_df: int = 1,
-    max_postings: int | None = None,
-) -> DataFrame:
-    """Term -> postings-list index over a corpus (the classic IR build;
-    the reference's Get/Put pipelines consume streams — this is the
-    batch index a search front-end would sit on).
-
-    Returns (term, df, tf_total, postings) where ``postings`` is the
-    sorted array of the first ``max_postings`` doc ids containing the
-    term (all of them when None) while ``df``/``tf_total`` always count
-    the FULL corpus.
-
-    Scale shape: one partial-agg shuffle keyed (term, doc), then a
-    term-keyed window + final agg that share a single exchange (the
-    window's partitioning satisfies the groupBy's distribution). The
-    postings cap is applied BEFORE collect_list via the rank — a
-    stopword's row carries at most ``max_postings`` ids through the
-    aggregation, never the whole corpus; collect_list drops the NULLs
-    the cap produces. Deterministic: postings are the doc-id-sorted
-    prefix, not an arbitrary sample.
-    """
-    toks = df.select(
-        F.col(id_col).alias("_doc"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("term"),
-    )
-    per = toks.groupBy("term", "_doc").agg(F.count(F.lit(1)).alias("n"))
-    if max_postings is not None:
-        w = Window.partitionBy("term").orderBy("_doc")
-        per = per.withColumn("_rk", F.row_number().over(w))
-        keep_doc = F.when(F.col("_rk") <= max_postings, F.col("_doc"))
-    else:
-        keep_doc = F.col("_doc")
-    idx = per.groupBy("term").agg(
-        F.count(F.lit(1)).cast("long").alias("df"),
-        F.sum("n").cast("long").alias("tf_total"),
-        F.sort_array(F.collect_list(keep_doc)).alias("postings"),
-    )
-    if min_df > 1:
-        idx = idx.filter(F.col("df") >= min_df)
-    return idx
 
 
 def bm25_search(

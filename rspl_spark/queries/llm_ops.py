@@ -1002,7 +1002,7 @@ def q_cosine_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_cosine_topk_srp_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rspl_spark.operators.ann_store import (
-        append_srp_index,
+        append_index,
         create_srp_index,
         srp_index_topk,
     )
@@ -1022,7 +1022,7 @@ def q_cosine_topk_srp_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
             overwrite=True,
             tag="base",
         )
-        append_srp_index(spark, e.filter(~F.expr(_IVF_INCR_PRED)), name, tag="base+inc")
+        append_index(spark, e.filter(~F.expr(_IVF_INCR_PRED)), name, tag="base+inc")
         return spark.table(name).localCheckpoint()
 
     _memo_artifact(spark, ("srp_index", sf_dir), build)
@@ -1093,7 +1093,7 @@ ORDER BY query_id, rk"""
 )
 def q_cosine_topk_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rspl_spark.operators.ann_store import (
-        append_ivf_index,
+        append_index,
         create_ivf_index,
         ivf_index_topk,
     )
@@ -1112,7 +1112,7 @@ def q_cosine_topk_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
             overwrite=True,
             tag="base",
         )
-        append_ivf_index(spark, e.filter(~F.expr(_IVF_INCR_PRED)), name, tag="base+inc")
+        append_index(spark, e.filter(~F.expr(_IVF_INCR_PRED)), name, tag="base+inc")
         return spark.table(name).localCheckpoint()
 
     _memo_artifact(spark, ("ivf_index", sf_dir), build)
@@ -1173,7 +1173,7 @@ def q_cosine_topk_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained on the base slice, stored, never refit by append OR
     delete), then a takedown slice is tombstoned before probing."""
     from rspl_spark.operators.ann_store import (
-        append_ivf_index,
+        append_index,
         create_ivf_index,
         delete_keys,
         ivf_index_topk,
@@ -1188,7 +1188,7 @@ def q_cosine_topk_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, e.filter(F.expr(_IVF_INCR_PRED)), name,
             k=8, iters=_IVF_TRAINED_ITERS, overwrite=True, tag="base",
         )
-        append_ivf_index(spark, e.filter(~F.expr(_IVF_INCR_PRED)), name, tag="base+inc")
+        append_index(spark, e.filter(~F.expr(_IVF_INCR_PRED)), name, tag="base+inc")
         delete_keys(spark, name, e.filter(F.expr(_ANN_DEL_PRED)).select("vec_id"))
         return spark.table(name).localCheckpoint()
 
@@ -2614,7 +2614,7 @@ _PQ_INCR_PRED = "vec_id % 3 <> 0"
 )
 def q_ann_pq_adc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rspl_spark.operators.ann_store import (
-        append_pq_index,
+        append_index,
         create_pq_index,
         pq_index_codebooks,
     )
@@ -2634,7 +2634,7 @@ def q_ann_pq_adc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             overwrite=True,
             tag="base",
         )
-        append_pq_index(
+        append_index(
             spark,
             e.filter(~F.expr(_PQ_INCR_PRED)),
             name,
@@ -2658,9 +2658,9 @@ def q_ann_pq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     live view — must hash-match the oracle's ADC chain restricted to
     surviving vectors (codebooks unchanged: delete never refits)."""
     from rspl_spark.operators.ann_store import (
-        _live_rows,
         create_pq_index,
         delete_keys,
+        live_rows,
         pq_index_codebooks,
     )
 
@@ -2674,7 +2674,7 @@ def q_ann_pq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             overwrite=True, tag="full",
         )
         delete_keys(spark, name, e.filter(F.expr(_ANN_DEL_PRED)).select("vec_id"))
-        return _live_rows(spark, name).localCheckpoint()
+        return live_rows(spark, name).localCheckpoint()
 
     enc = _memo_artifact(spark, ("pq_index_del", sf_dir), build)
     cbs = pq_index_codebooks(spark, name)

@@ -390,12 +390,12 @@ ORDER BY l_returnflag
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
-    from rspl_spark.operators.ann_store import _warehouse_path
+    from rspl_spark.operators.store import warehouse_path
     from rspl_spark.queries.llm_ops import _memo_artifact
 
     l = load(spark, sf_dir, "lineitem")
     slug = _os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    path = _warehouse_path(spark, f"orc_lineitem_{slug}")
+    path = warehouse_path(spark, f"orc_lineitem_{slug}")
 
     def build():
         (

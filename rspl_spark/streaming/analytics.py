@@ -56,7 +56,8 @@ def merge_stream_batch(
     checkpoint resets the guard rather than wrongly skipping batch 0.
     Single-writer contract, like every store mutation here.
     """
-    from rspl_spark.operators.agg_store import merge_increment, table_properties
+    from rspl_spark.operators.agg_store import merge_increment
+    from rspl_spark.operators.store import table_properties
 
     props = table_properties(spark, store) or {}
     last = props.get(_BATCH_PROP)

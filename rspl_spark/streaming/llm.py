@@ -567,10 +567,10 @@ def pq_index_ingest(
     Returns the writeStream builder — call .start()/awaitTermination.
     The batch pipeline's create/append/refresh and this stream maintain
     the SAME table, so queries always probe one artifact."""
-    from rspl_spark.operators.ann_store import append_pq_index, refresh_pq_index
+    from rspl_spark.operators.ann_store import append_index, refresh_index
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        append_pq_index(
+        append_index(
             batch_df.sparkSession,
             batch_df,
             index,
@@ -579,7 +579,7 @@ def pq_index_ingest(
             tag=f"stream-batch-{batch_id}",
         )
         if full_corpus is not None:
-            refresh_pq_index(
+            refresh_index(
                 batch_df.sparkSession,
                 full_corpus(),
                 index,

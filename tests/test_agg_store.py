@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rspl_spark.operators import agg_store as A
+from rspl_spark.operators import store as S
 
 MEASURES = {
     "n": ("v", "count"),
@@ -78,7 +79,7 @@ def test_merge_respects_store_bucket_count(spark):
     )
     try:
         A.merge_increment(spark, _df(spark, [("a", 2.0), ("b", 3.0)]), store, ["k"], MEASURES)
-        assert A._table_buckets(spark, store) == 4
+        assert S.table_buckets(spark, store) == 4
         assert _final(spark, store)["a"] == (2, 3.0, 1.0, 2.0)
     finally:
         spark.sql("DROP TABLE IF EXISTS aggstore_tbkt")
@@ -309,7 +310,7 @@ def test_table_location_ignores_column_named_location(spark):
         A.create_agg_store(
             spark, df, name, ["Location"], {"s": ("v", "sum")}, overwrite=True
         )
-        loc = A._table_location(spark, name)
+        loc = S.table_location(spark, name)
         assert loc is not None and os.path.isdir(loc)  # a real path, not 'string'
         # the swap path (which reaps via this location) still works
         A.merge_increment(

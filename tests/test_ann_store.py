@@ -15,13 +15,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from rspl_spark.operators.ann_store import (
-    append_pq_index,
+    append_index,
     create_pq_index,
     pq_index_codebooks,
-    pq_index_staleness,
-    pq_index_tag,
+    index_staleness,
+    index_tag,
     pq_index_topk,
-    refresh_pq_index,
+    refresh_index,
 )
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -46,11 +46,11 @@ def test_append_keeps_codebooks_and_counts(spark, emb):
         inc = emb.filter(F.col("vec_id") % 3 == 0)
         create_pq_index(spark, base, name, overwrite=True)
         books_before = pq_index_codebooks(spark, name)
-        n = append_pq_index(spark, inc, name, tag="base+inc")
+        n = append_index(spark, inc, name, tag="base+inc")
         assert n == inc.count()
         assert pq_index_codebooks(spark, name) == books_before
         assert spark.table(name).count() == emb.count()
-        assert pq_index_tag(spark, name) == "base+inc"
+        assert index_tag(spark, name) == "base+inc"
         # idempotent reuse: create without overwrite is metadata-only
         create_pq_index(spark, base, name)
         assert spark.table(name).count() == emb.count()
@@ -70,7 +70,7 @@ def test_recall_after_append(spark, emb):
         base = emb.filter(F.col("vec_id") % 3 != 0)
         inc = emb.filter(F.col("vec_id") % 3 == 0)
         create_pq_index(spark, base, name, overwrite=True)
-        append_pq_index(spark, inc, name)
+        append_index(spark, inc, name)
 
         rows = emb.select("vec_id", "embedding").collect()
         vecs = {r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64) for r in rows}
@@ -108,19 +108,19 @@ def test_staleness_and_refresh(spark, emb):
         base = emb.filter(F.col("vec_id") % 3 != 0)
         inc = emb.filter(F.col("vec_id") % 3 == 0)
         create_pq_index(spark, base, name, overwrite=True)
-        assert pq_index_staleness(spark, name) == 0.0
-        append_pq_index(spark, inc, name)
-        stale = pq_index_staleness(spark, name)
+        assert index_staleness(spark, name) == 0.0
+        append_index(spark, inc, name)
+        stale = index_staleness(spark, name)
         assert 0.4 < stale < 0.6  # one third of the corpus appended
 
         # below threshold: no refit
-        assert refresh_pq_index(spark, emb, name, stale_threshold=0.9) is False
+        assert refresh_index(spark, emb, name, stale_threshold=0.9) is False
         # at threshold: refit on the FULL corpus, staleness resets,
         # codebooks change (they now saw the increment)
         books_before = pq_index_codebooks(spark, name)
-        assert refresh_pq_index(spark, emb, name, stale_threshold=0.4) is True
-        assert pq_index_staleness(spark, name) == 0.0
-        assert pq_index_tag(spark, name) == "refit"
+        assert refresh_index(spark, emb, name, stale_threshold=0.4) is True
+        assert index_staleness(spark, name) == 0.0
+        assert index_tag(spark, name) == "refit"
         assert pq_index_codebooks(spark, name) != books_before
         assert spark.table(name).count() == emb.count()
     finally:
@@ -166,22 +166,22 @@ def test_streaming_pq_index_ingest(spark, emb):
         # appends landed, codebooks untouched (threshold never crossed)
         assert spark.table(name).count() == emb.count()
         assert pq_index_codebooks(spark, name) == books0
-        assert pq_index_staleness(spark, name) > 1.0
+        assert index_staleness(spark, name) > 1.0
         # low-threshold refresh now refits on the full corpus
-        assert refresh_pq_index(spark, emb, name, stale_threshold=0.5) is True
+        assert refresh_index(spark, emb, name, stale_threshold=0.5) is True
         assert pq_index_codebooks(spark, name) != books0
-        assert pq_index_staleness(spark, name) == 0.0
+        assert index_staleness(spark, name) == 0.0
     finally:
         _drop(spark, name)
 
 
 def test_ivf_append_keeps_centroids_and_counts(spark, emb):
     from rspl_spark.operators.ann_store import (
-        append_ivf_index,
+        append_index,
         create_ivf_index,
         ivf_index_centroids,
-        ivf_index_staleness,
-        refresh_ivf_index,
+        index_staleness,
+        refresh_index,
     )
 
     name = "ivfidx_test_append"
@@ -191,7 +191,7 @@ def test_ivf_append_keeps_centroids_and_counts(spark, emb):
         inc = emb.filter(F.col("vec_id") % 3 == 0)
         create_ivf_index(spark, base, name, overwrite=True)
         cents_before = ivf_index_centroids(spark, name)
-        n = append_ivf_index(spark, inc, name, tag="base+inc")
+        n = append_index(spark, inc, name, tag="base+inc")
         assert n == inc.count()
         # append must NEVER refit: stored centroids win
         assert ivf_index_centroids(spark, name) == cents_before
@@ -200,11 +200,11 @@ def test_ivf_append_keeps_centroids_and_counts(spark, emb):
         k = len(cents_before)
         cids = {r["cid"] for r in spark.table(name).select("cid").distinct().collect()}
         assert cids <= set(range(k))
-        stale = ivf_index_staleness(spark, name)
+        stale = index_staleness(spark, name)
         assert 0.4 < stale < 0.6
-        assert refresh_ivf_index(spark, emb, name, stale_threshold=0.9) is False
-        assert refresh_ivf_index(spark, emb, name, stale_threshold=0.4) is True
-        assert ivf_index_staleness(spark, name) == 0.0
+        assert refresh_index(spark, emb, name, stale_threshold=0.9) is False
+        assert refresh_index(spark, emb, name, stale_threshold=0.4) is True
+        assert index_staleness(spark, name) == 0.0
         assert ivf_index_centroids(spark, name) != cents_before
         assert spark.table(name).count() == emb.count()
     finally:
@@ -216,7 +216,7 @@ def test_ivf_recall_after_append(spark, emb):
     cosine top-5 over 10 queries — the increment is assigned with BASE
     centroids, so this asserts search quality through the append path."""
     from rspl_spark.operators.ann_store import (
-        append_ivf_index,
+        append_index,
         create_ivf_index,
         ivf_index_topk,
     )
@@ -227,7 +227,7 @@ def test_ivf_recall_after_append(spark, emb):
         base = emb.filter(F.col("vec_id") % 3 != 0)
         inc = emb.filter(F.col("vec_id") % 3 == 0)
         create_ivf_index(spark, base, name, overwrite=True)
-        append_ivf_index(spark, inc, name)
+        append_index(spark, inc, name)
 
         got = ivf_index_topk(
             spark, name, emb.filter(F.col("vec_id") < 10), topk=5, n_probe=2
@@ -259,7 +259,7 @@ def test_srp_incremental_equals_oneshot(spark, emb):
     base+increment build must equal the one-shot build row-for-row,
     and top-k answers must match exactly."""
     from rspl_spark.operators.ann_store import (
-        append_srp_index,
+        append_index,
         create_srp_index,
         srp_index_config,
         srp_index_topk,
@@ -272,7 +272,7 @@ def test_srp_incremental_equals_oneshot(spark, emb):
         base = emb.filter(F.col("vec_id") % 3 != 0)
         inc = emb.filter(F.col("vec_id") % 3 == 0)
         create_srp_index(spark, base, n1, overwrite=True)
-        append_srp_index(spark, inc, n1)
+        append_index(spark, inc, n1)
         create_srp_index(spark, emb, n2, overwrite=True)
         assert srp_index_config(spark, n1) == srp_index_config(spark, n2)
         a = {
@@ -305,8 +305,7 @@ def test_append_wrong_dim_raises_fast(spark, emb):
     — silently accepting it corrupts the index (NULL zip_with dots →
     SRP bits all 0, arbitrary IVF/PQ cells)."""
     from rspl_spark.operators.ann_store import (
-        append_ivf_index,
-        append_srp_index,
+        append_index,
         create_ivf_index,
         create_srp_index,
     )
@@ -325,18 +324,18 @@ def test_append_wrong_dim_raises_fast(spark, emb):
         create_ivf_index(spark, base, names[1], overwrite=True)
         create_srp_index(spark, base, names[2], overwrite=True)
         with pytest.raises(ValueError, match="dim"):
-            append_pq_index(spark, bad, names[0])
+            append_index(spark, bad, names[0])
         with pytest.raises(ValueError, match="dim"):
-            append_ivf_index(spark, bad, names[1])
+            append_index(spark, bad, names[1])
         with pytest.raises(ValueError, match="dim"):
-            append_srp_index(spark, bad, names[2])
+            append_index(spark, bad, names[2])
         # correct-dim append still works after the failed attempts
-        # (append_srp_index returns BAND rows: vectors x bands)
+        # (append_index returns BAND rows: vectors x bands)
         from rspl_spark.operators.ann_store import srp_index_config
 
         good = emb.filter(F.col("vec_id") % 3 == 0)
         bands = srp_index_config(spark, names[2])["bands"]
-        assert append_srp_index(spark, good, names[2]) == good.count() * bands
+        assert append_index(spark, good, names[2]) == good.count() * bands
     finally:
         for n in names:
             _drop(spark, n)
@@ -361,13 +360,13 @@ def test_delete_is_tombstone_only_then_compact(spark, emb):
     scratch on the survivors; compact_index physically removes the
     rows and clears the tombstones without changing answers."""
     from rspl_spark.operators.ann_store import (
-        _warehouse_path,
         compact_index,
         create_srp_index,
         delete_keys,
         deleted_count,
         srp_index_topk,
     )
+    from rspl_spark.operators.store import warehouse_path as _warehouse_path
 
     name, ref = "srpidx_test_tomb", "srpidx_test_ref"
     _drop(spark, name)
@@ -454,7 +453,7 @@ def test_pq_custom_id_col_normalized_for_tombstones(spark, emb):
         assert n == docs.count() - 1
         # append with the custom id name keeps working post-compact
         extra = docs.filter(F.col("doc_id") == victim)
-        assert append_pq_index(spark, extra, name, id_col="doc_id") == 1
+        assert append_index(spark, extra, name, id_col="doc_id") == 1
     finally:
         _drop(spark, name)
         spark.sql(f"DROP TABLE IF EXISTS {name}__deleted")
@@ -467,12 +466,9 @@ def test_index_props_escape_quotes_and_compact_keeps_layout(spark, emb):
     with instead of a hardcoded 32 partitions."""
     import glob as _glob
 
-    from rspl_spark.operators.ann_store import (
-        _props,
-        _warehouse_path,
-        compact_index,
-        delete_keys,
-    )
+    from rspl_spark.operators.ann_store import compact_index, delete_keys
+    from rspl_spark.operators.store import table_properties as _props
+    from rspl_spark.operators.store import warehouse_path as _warehouse_path
 
     name = "pqidx_test_quote"
     _drop(spark, name)
@@ -482,9 +478,9 @@ def test_index_props_escape_quotes_and_compact_keeps_layout(spark, emb):
             spark, emb, name, overwrite=True, tag="client's batch",
             n_partitions=4,
         )
-        assert pq_index_tag(spark, name) == "client's batch"
-        assert append_pq_index(spark, emb.limit(3), name, tag="it's v2") == 3
-        assert pq_index_tag(spark, name) == "it's v2"
+        assert index_tag(spark, name) == "client's batch"
+        assert append_index(spark, emb.limit(3), name, tag="it's v2") == 3
+        assert index_tag(spark, name) == "it's v2"
         victim = emb.select("vec_id").first()["vec_id"]
         delete_keys(spark, name, [victim])
         compact_index(spark, name)

@@ -247,14 +247,14 @@ def test_delete_is_tombstone_only_then_compact(spark, docs):
         # the tombstone anti-join must not break the bucket-aligned
         # probe: still exactly ONE shuffle Exchange (the increment),
         # the tombstones arriving via BroadcastExchange only
-        from rspl_spark.operators.dedup_store import _live_store
+        from rspl_spark.operators.dedup_store import live_store
 
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
             probe = signature_band_rows(new_docs).alias("n")
             j = probe.join(
-                _live_store(spark, store).alias("s"),
+                live_store(spark, store).alias("s"),
                 F.col("n.bucket") == F.col("s.bucket"),
             )
             plan = j._jdf.queryExecution().executedPlan().toString()
@@ -277,26 +277,61 @@ def test_delete_is_tombstone_only_then_compact(spark, docs):
         spark.sql("DROP TABLE IF EXISTS sigstore_test_tomb__deleted")
 
 
+def test_compacted_store_survives_fresh_catalog(spark, docs):
+    """A compaction moves the live layout to a versioned dir; the meta
+    file in the base dir records the move, so a fresh catalog's create
+    re-registers the COMPACTED store (appended increments included)
+    instead of silently rebuilding it from the seed, and no superseded
+    layout is left on disk — also after a second compaction."""
+    import glob
+    import os
+
+    from rspl_spark.operators.dedup_store import (
+        _warehouse_path,
+        compact_store,
+        delete_keys,
+    )
+
+    name = "sigstore_compact_reopen"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    seed = docs.filter(F.col("doc_id") % 3 != 0)
+    base = _warehouse_path(spark, name)
+    try:
+        create_signature_store(spark, seed, name, overwrite=True)
+        append_increment(spark, docs.filter(F.col("doc_id") % 3 == 0), name)
+        victims = [r["doc_id"] for r in seed.orderBy("doc_id").limit(2).collect()]
+        assert delete_keys(spark, name, victims) == 2
+        n = compact_store(spark, name)
+        for _ in range(2):
+            spark.sql(f"DROP TABLE {name}")  # a fresh catalog keeps the files
+            create_signature_store(spark, seed, name)
+            assert spark.table(name).count() == n
+            assert not spark.table(name).filter(F.col("doc_id").isin(victims)).take(1)
+            assert len(glob.glob(f"{base}.__v_*")) == 1  # the live layout only
+            assert os.listdir(base) == ["_rspl_meta.json"]
+            assert compact_store(spark, name) == n
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
 def test_reaper_spares_data_in_drop_rename_crash_window(spark, docs):
-    """r10 review fix: _reap_stale_compactions must reap NOTHING when
+    """r10 review fix: store.reap_stale must reap NOTHING when
     the store table is unregistered (the DROP→RENAME crash window) —
     the on-disk versioned dirs are then the ONLY copies of the data."""
     import os
     import shutil
 
-    from rspl_spark.operators.agg_store import (
-        _reap_stale_compactions,
-        _table_location,
-    )
     from rspl_spark.operators.dedup_store import (
         _warehouse_path,
         create_signature_store,
     )
 
+    from rspl_spark.operators.store import reap_stale, table_location
+
     store = "t_reaper_window_store"
     spark.sql(f"DROP TABLE IF EXISTS {store}")
     create_signature_store(spark, docs, store)
-    loc = _table_location(spark, store)
+    loc = table_location(spark, store)
     base = _warehouse_path(spark, store)
     # simulate the crash window: catalog entry gone, data dir renamed to
     # a versioned path (as after any successful prior compaction)
@@ -304,14 +339,14 @@ def test_reaper_spares_data_in_drop_rename_crash_window(spark, docs):
     shutil.rmtree(vdir, ignore_errors=True)
     shutil.move(loc, vdir) if os.path.realpath(loc) != os.path.realpath(vdir) else None
     spark.sql(f"DROP TABLE {store}")
-    _reap_stale_compactions(spark, store, base)
+    reap_stale(spark, store, base)
     assert os.path.isdir(vdir), "reaper deleted the only copy of the data"
     # and once the table IS registered again, stale non-live dirs DO reap
     os.makedirs(f"{base}.__v_stale", exist_ok=True)
-    from rspl_spark.operators.agg_store import _register_bucketed_at
+    from rspl_spark.operators.store import register_at
 
-    _register_bucketed_at(spark, store, vdir, ["bucket"], 8)
-    _reap_stale_compactions(spark, store, base)
+    register_at(spark, store, vdir, ["bucket"], 8)
+    reap_stale(spark, store, base)
     assert os.path.isdir(vdir)  # live data kept
     assert not os.path.isdir(f"{base}.__v_stale")  # stale dir reaped
     spark.sql(f"DROP TABLE IF EXISTS {store}")
@@ -326,7 +361,7 @@ def test_reaper_spares_data_when_live_location_unknown(spark, docs, monkeypatch)
     import os
     import shutil
 
-    from rspl_spark.operators import agg_store
+    from rspl_spark.operators import store as S
     from rspl_spark.operators.dedup_store import (
         _warehouse_path,
         create_signature_store,
@@ -339,8 +374,8 @@ def test_reaper_spares_data_when_live_location_unknown(spark, docs, monkeypatch)
     stale = f"{base}.__v_stale_noloc"
     os.makedirs(stale, exist_ok=True)
     try:
-        monkeypatch.setattr(agg_store, "_table_location", lambda s, n: None)
-        agg_store._reap_stale_compactions(spark, store, base)
+        monkeypatch.setattr(S, "table_location", lambda s, n: None)
+        S.reap_stale(spark, store, base)
         assert os.path.isdir(stale), (
             "reaper swept .__v_* dirs without knowing the live location"
         )

@@ -10,8 +10,8 @@ sequences can't reach: tombstones leaking across a compact, appends
 after compact resurrecting earlier deletes, repeat deletes
 double-counting, and the re-append hazard guard (appending a
 currently-tombstoned id must raise — with id-keyed tombstones there
-is no correct silent behavior, see ann_store.py
-_check_increment_not_tombstoned).
+is no correct silent behavior, see store.py
+check_append).
 
 Invariants checked after EVERY step:
 - live membership (live_rows / live_store distinct ids) == the model;
@@ -65,8 +65,8 @@ def _ann_live_ids(spark, name):
 
 
 KINDS = {
-    "srp": (A.create_srp_index, A.append_srp_index, A.srp_index_topk),
-    "ivf": (A.create_ivf_index, A.append_ivf_index, A.ivf_index_topk),
+    "srp": (A.create_srp_index, A.append_index, A.srp_index_topk),
+    "ivf": (A.create_ivf_index, A.append_index, A.ivf_index_topk),
 }
 
 

@@ -15,6 +15,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from rspl_spark.catalog import load
+from rspl_spark.operators import store as S
 from rspl_spark.streaming import (
     file_stream,
     session_agg,
@@ -771,14 +772,14 @@ def test_stream_merge_guard_survives_propless_rewrites(spark):
             spark, batch, 0, store, ["event_type"], measures, ident
         )
         # identity round-trips exactly through SQL-literal escaping
-        assert A.table_property(spark, store, "rspl.stream.identity") == ident
+        assert S.table_property(spark, store, "rspl.stream.identity") == ident
         # a prop-less BATCH rewrite of the same store...
         A.merge_increment(
             spark, spark.createDataFrame([("b", 3, 5.0)], schema),
             store, ["event_type"], measures,
         )
         # ...must not wipe the streaming record: crash-replay still skips
-        assert A.table_property(spark, store, "rspl.stream.identity") == ident
+        assert S.table_property(spark, store, "rspl.stream.identity") == ident
         assert not merge_stream_batch(
             spark, batch, 0, store, ["event_type"], measures, ident
         )
@@ -866,29 +867,63 @@ def test_checkpoint_identity_resets_on_wipe(spark):
         spark.sql("DROP TABLE IF EXISTS aggstore_ckwipe_t")
 
 
-def test_rewrite_swap_recovery_restores_exactly_once_props(spark):
-    """If the swap's RENAME fails after DROP, the recovery re-registers
-    the original data — and must restore the original rspl.* properties
-    with it, or the crash-replayed streaming batch re-merges (the
-    double count the guard exists to prevent)."""
+@pytest.mark.parametrize("swap", ["agg_merge", "dedup_compact", "ann_compact"])
+def test_rewrite_swap_recovery_restores_exactly_once_props(spark, swap):
+    """If a swap's RENAME fails after DROP, the recovery re-registers
+    the original data with its layout and its pre-swap properties — for
+    each store that swaps: the agg merge, dedup compaction and ANN
+    (pq) compaction. For the agg store the rspl.* record must survive,
+    or the crash-replayed streaming batch re-merges (the double count
+    the guard exists to prevent)."""
     from unittest import mock
 
     import pytest as _pytest
 
     from rspl_spark.operators import agg_store as A
+    from rspl_spark.operators import ann_store, dedup_store
     from rspl_spark.streaming.analytics import merge_stream_batch
 
     schema = "event_type string, event_id long, value double"
     measures = {"n": ("event_id", "count"), "total": ("value", "sum")}
-    store = "aggstore_recover_t"
-    seed = spark.createDataFrame([("a", 1, 1.0)], schema)
-    A.create_agg_store(spark, seed, store, ["event_type"], measures, overwrite=True)
     batch = spark.createDataFrame([("a", 2, 10.0)], schema)
-    try:
+    if swap == "agg_merge":
+        store = "aggstore_recover_t"
+        seed = spark.createDataFrame([("a", 1, 1.0)], schema)
+        A.create_agg_store(spark, seed, store, ["event_type"], measures, overwrite=True)
         assert merge_stream_batch(
             spark, batch, 0, store, ["event_type"], measures, "ck-recover"
         )
-        before = A.read_final(spark, store).collect()
+
+        def run():
+            A.merge_increment(
+                spark, spark.createDataFrame([("b", 3, 5.0)], schema),
+                store, ["event_type"], measures,
+            )
+    elif swap == "dedup_compact":
+        store = "sigstore_recover_t"
+        docs = load(spark, SF, "documents")
+        dedup_store.create_signature_store(spark, docs, store, overwrite=True)
+        dedup_store.delete_keys(spark, store, [docs.first()["doc_id"]])
+
+        def run():
+            dedup_store.compact_store(spark, store)
+    else:
+        store = "pqidx_recover_t"
+        emb = load(spark, SF, "embeddings")
+        ann_store.create_pq_index(spark, emb, store, overwrite=True, tag="it's v1")
+        ann_store.delete_keys(spark, store, [emb.first()["vec_id"]])
+
+        def run():
+            ann_store.compact_index(spark, store)
+
+    def rows():
+        return sorted(tuple(r) for r in spark.table(store).collect())
+
+    try:
+        before, props = rows(), S.table_properties(spark, store)
+        if swap == "agg_merge":
+            assert props["rspl.stream.identity"] == "ck-recover"
+            assert props["rspl.stream.last_batch"] == "0"
 
         orig_sql = spark.sql
 
@@ -899,21 +934,20 @@ def test_rewrite_swap_recovery_restores_exactly_once_props(spark):
 
         with mock.patch.object(spark, "sql", side_effect=failing):
             with _pytest.raises(RuntimeError, match="injected"):
-                A.merge_increment(
-                    spark, spark.createDataFrame([("b", 3, 5.0)], schema),
-                    store, ["event_type"], measures,
-                )
-        # the store survived the failed swap with data AND record intact
+                run()
+        # the store survived the failed swap with data AND properties intact
         assert spark.catalog.tableExists(store)
-        assert A.table_property(spark, store, "rspl.stream.identity") == "ck-recover"
-        assert A.table_property(spark, store, "rspl.stream.last_batch") == "0"
-        assert A.read_final(spark, store).collect() == before
-        # …so the crash-replayed batch is STILL skipped
-        assert not merge_stream_batch(
-            spark, batch, 0, store, ["event_type"], measures, "ck-recover"
-        )
+        assert S.table_properties(spark, store) == props
+        assert rows() == before
+        if swap == "agg_merge":
+            # …so the crash-replayed batch is STILL skipped
+            assert not merge_stream_batch(
+                spark, batch, 0, store, ["event_type"], measures, "ck-recover"
+            )
     finally:
-        spark.sql("DROP TABLE IF EXISTS aggstore_recover_t")
+        for t in spark.catalog.listTables():
+            if t.name.startswith(store):
+                spark.sql(f"DROP TABLE IF EXISTS {t.name}")
 
 
 def test_streaming_funnel_ignores_null_timestamps(spark):
