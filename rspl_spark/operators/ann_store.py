@@ -1,10 +1,14 @@
 """Persisted ANN indexes (PQ, IVF, SRP): fit once, append increments,
 query forever.
 
-The in-session ANN paths (:mod:`rspl_spark.operators.similarity`) refit
-and re-encode per session — fine for a notebook, wrong for a pipeline
-that ingests daily embedding batches into a corpus-sized index. This
-module persists BOTH halves of an index once:
+The in-session ANN gates refit and re-encode per session — fine for a
+notebook, wrong for a pipeline that ingests daily embedding batches into
+a corpus-sized index. Both run the same search kernels of
+:mod:`rspl_spark.operators.similarity` (``pq_encode``/``pq_adc_topk``;
+``centroid_frame``/``rank_cells``/``ivf_probe_topk``;
+``srp_sketch_col``/``srp_band_rows``/``srp_band_topk``); this module
+passes them the stored state over :func:`live_rows`. It persists BOTH
+halves of an index once:
 
 - the data-sized half (PQ codes, IVF cell assignments, SRP band rows,
   always keyed ``vec_id``) as a managed parquet table;
@@ -24,7 +28,7 @@ the rest from one table keyed by kind (``_KINDS``). The store lifecycle
 (tombstones, the crash-safe swap, the properties codec) is
 ``operators/store.py``; the ANN store's path is the session warehouse.
 
-ADC/recall semantics are identical to similarity.pq_* (shared code).
+Probe semantics are identical to the in-session gates (shared code).
 """
 
 from __future__ import annotations
@@ -33,16 +37,21 @@ import json
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from rspl_spark.operators import store as S
 from rspl_spark.operators.similarity import (
+    centroid_frame,
+    ivf_probe_topk,
     kmeans_fit,
     pq_adc_topk,
     pq_encode,
     pq_fit,
+    rank_cells,
+    srp_band_rows,
+    srp_band_topk,
+    srp_sketch_col,
     unit_prep,
 )
 
@@ -302,17 +311,14 @@ def pq_index_topk(
     name: str,
     queries: list[tuple[int, list[float]]],
     topk: int = 5,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """ADC top-k over the persisted code table with the stored
     codebooks — same kernel and semantics as similarity.pq_adc_topk.
-    Tombstoned vec_ids (``delete_keys``) are filtered out."""
+    Output rows name the id ``vec_id`` whatever id column the index was
+    built from (``_pq_rows``). Tombstoned vec_ids (``delete_keys``) are
+    filtered out."""
     return pq_adc_topk(
-        live_rows(spark, name),
-        pq_index_codebooks(spark, name),
-        queries,
-        topk=topk,
-        id_col=id_col,
+        live_rows(spark, name), pq_index_codebooks(spark, name), queries, topk=topk
     )
 
 
@@ -320,56 +326,8 @@ def pq_index_topk(
 #
 # Trained state: the k*d centroid matrix; the data-sized half:
 # unit-prepped vectors + their cell assignment. Query = probe n_probe
-# nearest cells against the stored centroids, scan ONLY those cells of
-# the table — the candidate set shrinks by ~cells/probes and the cell
-# id keys the shuffle.
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
-
-
-def _centroid_frame(spark: SparkSession, centroids: list[list[float]]) -> DataFrame:
-    cent = spark.createDataFrame(
-        [(ci, [float(x) for x in c]) for ci, c in enumerate(centroids)],
-        "cid long, cemb array<double>",
-    )
-    cnrm = F.sqrt(F.aggregate(F.col("cemb"), F.lit(0.0), lambda s, v: s + v * v))
-    return cent.select("cid", "cemb", cnrm.alias("cnrm"))
-
-
-def _rank_cells(prep: DataFrame, centp: DataFrame, id_col: str, n_keep: int) -> DataFrame:
-    """(id, emb, nrm, cid) for each row's n_keep most-cosine-similar
-    cells: broadcast the (tiny) centroid frame, window-rank per row.
-    Pure codegen — one dot product per (row, cell)."""
-    csim = (
-        _dot(F.col("emb"), F.col("cemb")) / F.nullif(F.col("nrm") * F.col("cnrm"), F.lit(0.0))
-    ).alias("csim")
-    w = Window.partitionBy(id_col).orderBy(F.desc("csim"), F.asc("cid"))
-    return (
-        prep.crossJoin(F.broadcast(centp))
-        .select(id_col, "emb", "nrm", "cid", csim)
-        .withColumn("crk", F.row_number().over(w))
-        .filter(F.col("crk") <= n_keep)
-        .select(id_col, "emb", "nrm", "cid")
-    )
-
-
-def _rerank(cand: DataFrame, topk: int) -> DataFrame:
-    """(query_id, vec_id, score, rk): exact cosine top-k over candidate
-    (query, stored vector) pairs."""
-    w = Window.partitionBy("query_id").orderBy(F.desc("raw_score"), F.asc("vec_id"))
-    return (
-        cand.select(
-            "query_id",
-            "vec_id",
-            (_dot(F.col("q_emb"), F.col("emb")) / F.nullif(F.col("q_nrm") * F.col("nrm"), F.lit(0.0))).alias("raw_score"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= topk)
-        .select("query_id", "vec_id", F.round("raw_score", 6).alias("score"), "rk")
-        .orderBy("query_id", "rk")
-    )
+# nearest cells against the stored centroids, exact rerank of those
+# cells' rows (similarity.ivf_probe_topk).
 
 
 def create_ivf_index(
@@ -401,7 +359,7 @@ def _ivf_rows(
 ) -> DataFrame:
     prep = unit_prep(df, "vec_id", "emb", "nrm", vec_col=vec_col, id_col=id_col)
     cents = json.loads(props["ivf.centroids"])
-    return _rank_cells(prep, _centroid_frame(spark, cents), "vec_id", 1)
+    return rank_cells(prep, centroid_frame(spark, cents), "vec_id", 1)
 
 
 def ivf_index_centroids(spark: SparkSession, name: str) -> list[list[float]]:
@@ -421,20 +379,13 @@ def ivf_index_topk(
 ) -> DataFrame:
     """(query_id, vec_id, score, rk): exact cosine top-k within the
     n_probe stored cells nearest each query. The centroid probe is a
-    broadcast; the cell join hits only the probed cells' partitions
-    (the table is written partitioned-by-cid-hash)."""
-    cents = ivf_index_centroids(spark, name)
-    qprep = unit_prep(queries, "query_id", "q_emb", "q_nrm", vec_col=vec_col, id_col=id_col)
-    probes = _rank_cells(
-        qprep.select(F.col("query_id"), F.col("q_emb").alias("emb"), F.col("q_nrm").alias("nrm")),
-        _centroid_frame(spark, cents),
-        "query_id",
-        n_probe,
-    ).select("query_id", F.col("emb").alias("q_emb"), F.col("nrm").alias("q_nrm"), "cid")
-    cand = probes.join(live_rows(spark, name), "cid").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    return _rerank(cand, topk)
+    broadcast; the cell join reads every file of the table (it is
+    written unbucketed, repartitioned by cid only to group each cell's
+    rows), so the saving over brute force is in the pairs scored, not
+    the bytes scanned."""
+    centp = centroid_frame(spark, ivf_index_centroids(spark, name))
+    qprep = unit_prep(queries, "query_id", "emb", "nrm", vec_col=vec_col, id_col=id_col)
+    return ivf_probe_topk(live_rows(spark, name), qprep, centp, topk=topk, n_probe=n_probe)
 
 
 # --- Persisted SRP band index -----------------------------------------------
@@ -448,52 +399,14 @@ def ivf_index_topk(
 # so staleness) matches the other kinds.
 
 
-def _srp_signs(p: int, dim: int) -> list[int]:
-    """Deterministic ±1 hyperplane p (Knuth-multiply hash — linear
-    correlation between planes is fine for bucket-then-rerank; see
-    similarity.rp_signs for the isometry-grade mixer)."""
-    return [
-        1 if ((p * dim + d) * 2654435761 % 4294967296) >> 31 else -1
-        for d in range(dim)
-    ]
-
-
-def _srp_sketch_col(emb: Column, planes: int, dim: int) -> Column:
-    """planes-bit SRP sketch as a long: bit p = (dot(emb, plane_p) >= 0)."""
-    dbl = F.transform(emb, lambda x: x.cast("double"))
-    bits = None
-    for p in range(planes):
-        signs = F.array(*[F.lit(float(s)) for s in _srp_signs(p, dim)])
-        bit = F.when(_dot(dbl, signs) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bits = bit if bits is None else bits + bit
-    return bits.cast("long")
-
-
 def _srp_rows(
     spark: SparkSession, df: DataFrame, props: dict[str, str], vec_col: str, id_col: str
 ) -> DataFrame:
     planes, bands, dim = (int(props[f"srp.{k}"]) for k in ("planes", "bands", "dim"))
-    band_bits = planes // bands
     prep = unit_prep(df, "vec_id", "emb", "nrm", vec_col=vec_col, id_col=id_col)
-    sk = prep.withColumn("sketch", _srp_sketch_col(F.col("emb"), planes, dim))
-    return sk.select(
-        "vec_id",
-        "emb",
-        "nrm",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("sketch", band_bits * b)
-                        .bitwiseAND(F.lit((1 << band_bits) - 1))
-                        .alias("bv"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("b"),
-    ).select("vec_id", "emb", "nrm", "b.band", "b.bv")
+    return srp_band_rows(
+        prep.withColumn("sketch", srp_sketch_col(F.col("emb"), planes, dim)), planes, bands
+    )
 
 
 def create_srp_index(
@@ -534,22 +447,11 @@ def srp_index_topk(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """(query_id, vec_id, score, rk): exact cosine rerank of stored
-    vectors sharing >= 1 band value with the query. The band join keys
-    the shuffle; candidates dedup before scoring."""
-    qb = _srp_rows(spark, queries, _index(spark, name)[1], vec_col, id_col).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        "band",
-        "bv",
-    )
-    cand = (
-        qb.join(live_rows(spark, name), ["band", "bv"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "q_emb", "q_nrm", "vec_id", "emb", "nrm")
-        .distinct()
-    )
-    return _rerank(cand, topk)
+    vectors sharing >= 1 band value with the query, the queries banded
+    under the stored config. The band join keys the shuffle; candidates
+    dedup before scoring."""
+    qbands = _srp_rows(spark, queries, _index(spark, name)[1], vec_col, id_col)
+    return srp_band_topk(qbands, live_rows(spark, name), topk=topk)
 
 
 # --- One table keyed by index kind ------------------------------------------

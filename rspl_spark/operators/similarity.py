@@ -7,6 +7,11 @@ Prefer the expression form: it stays inside whole-stage codegen with zero
 Python. The pandas-UDF form processes Arrow batches with numpy — still
 ~10-100x faster than row-at-a-time Python, and the template to copy for
 custom scoring functions.
+
+The ANN search kernels (PQ ADC, IVF cells, SRP bands, the exact cosine
+rerank) live here too, and are the one copy both the in-session gates
+(queries/llm_ops.py) and the persisted index (operators/ann_store.py)
+run.
 """
 
 from __future__ import annotations
@@ -50,17 +55,23 @@ def _sq_dists(M: np.ndarray, C: np.ndarray) -> np.ndarray:
     return out
 
 
+def dot(a: Column, b: Column) -> Column:
+    """Float dot product of two array<double> columns: a sequential
+    left-to-right sum from 0.0, the order the oracle's LIST_SUM replays.
+    The one copy every cosine, projection, probe and rerank builds on."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
+
+
 def cosine_expr(a: Column, b: Column) -> Column:
     """Codegen'd cosine over two array<float/double> columns (double math)."""
     da = F.transform(a, lambda x: x.cast("double"))
     db = F.transform(b, lambda x: x.cast("double"))
-    dot = F.aggregate(F.zip_with(da, db, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
     na = F.sqrt(F.aggregate(da, F.lit(0.0), lambda s, v: s + v * v))
     nb = F.sqrt(F.aggregate(db, F.lit(0.0), lambda s, v: s + v * v))
     # NULLIF guard: under ANSI mode (Spark 4 default) a zero-norm vector
     # would raise DIVIDE_BY_ZERO and kill the query; null is the right
     # "undefined similarity" answer.
-    return dot / F.nullif(na * nb, F.lit(0.0))
+    return dot(da, db) / F.nullif(na * nb, F.lit(0.0))
 
 
 def kmeans_fit(
@@ -201,37 +212,18 @@ def kmeans_fit(
     return centroids
 
 
-def _nearest_centroid_expr(vec: Column, centroids: list[list[float]]) -> Column:
-    """argmin_{c} ||v - c||² as a single codegen'd expression: an array of
-    (dist, cid) structs reduced with array_min (struct ordering is
-    lexicographic → min dist, ties to lowest cid). Returns the winning
-    STRUCT; callers read .getField("cid") / .getField("dist")."""
-    entries = []
-    for ci, c in enumerate(centroids):
-        carr = F.array(*[F.lit(x) for x in c])
-        dist = F.aggregate(
-            F.zip_with(vec, carr, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
-        entries.append(F.struct(dist.alias("dist"), F.lit(ci).alias("cid")))
-    return F.array_min(F.array(*entries))
-
-
 def _nearest_centroid_arrow(centroids: list[list[float]]):
-    """Arrow-kernel twin of :func:`_nearest_centroid_expr`: per batch,
-    one (n, k, d) numpy pass → (cid, dist2) DataFrame.
+    """Nearest-centroid kernel: per batch, one (n, k, d) numpy pass →
+    (cid, dist2) DataFrame.
 
-    Why it exists: the expression form embeds k×d literals, so every NEW
-    codebook generates fresh janino source — the first fit against an
-    8×64 codebook was measured at ~10s of compile time (DEVNOTES r3),
-    dwarfing the actual training. The Arrow kernel has no codegen step
-    at all; the codebook rides the closure (pickled once per stage, the
-    broadcast-codebook pattern). Ties resolve to the LOWEST cid
-    (np.argmin takes the first minimum), matching the struct-min
-    ordering of the expression form; distances agree to ~1e-15 relative
-    (summation order differs), far inside the gate's 6-decimal rounding
-    — the same tolerance the DuckDB oracle's group-sum already needs.
+    Why Arrow, not a codegen expression: an expression form embeds k×d
+    literals, so every NEW codebook generates fresh janino source — the
+    first fit against an 8×64 codebook was measured at ~10s of compile
+    time (DEVNOTES r3), dwarfing the actual training. This kernel has no
+    codegen step at all; the codebook rides the closure (pickled once
+    per stage, the broadcast-codebook pattern). Ties resolve to the
+    LOWEST cid (np.argmin takes the first minimum), the oracle's
+    ``ORDER BY dist, cid``.
     """
     C = np.asarray(centroids, dtype=np.float64)  # (k, d)
 
@@ -252,29 +244,15 @@ def kmeans_assign(
     centroids: list[list[float]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    use_arrow: bool = True,
 ):
-    """(id, cid, dist2): nearest-centroid assignment — one narrow pass.
-
-    ``use_arrow=True`` (default) runs the numpy kernel (no janino
-    compile of a k×d-literal expression — see
-    :func:`_nearest_centroid_arrow`); ``False`` keeps the pure-codegen
-    expression form (zero Python in the plan) for plans that must stay
-    JVM-only.
-    """
-    if use_arrow:
-        best = _nearest_centroid_arrow(centroids)(F.col(vec_col))
-        return df.select(
-            id_col,
-            best.getField("cid").alias("cid"),
-            F.round(best.getField("dist2"), 6).alias("dist2"),
-        )
-    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    best = _nearest_centroid_expr(dbl, centroids)
+    """(id, cid, dist2): nearest-centroid assignment — one narrow pass
+    of the numpy kernel :func:`_nearest_centroid_arrow`. Works unchanged
+    on a streaming frame (frozen-codebook ingest)."""
+    best = _nearest_centroid_arrow(centroids)(F.col(vec_col))
     return df.select(
         id_col,
         best.getField("cid").alias("cid"),
-        F.round(best.getField("dist"), 6).alias("dist2"),
+        F.round(best.getField("dist2"), 6).alias("dist2"),
     )
 
 
@@ -325,13 +303,9 @@ def exact_scored_pairs(
             "paths are the IVF / SRP / trained-cell blocked operators."
         )
     right = F.broadcast(probes) if broadcast_probes else probes
-    dot = F.aggregate(
-        F.zip_with(F.col("a_emb"), F.col("b_emb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
     return cand.crossJoin(right).withColumn(
-        score_alias, dot / F.nullif(F.col("a_nrm") * F.col("b_nrm"), F.lit(0.0))
+        score_alias,
+        dot(F.col("a_emb"), F.col("b_emb")) / F.nullif(F.col("a_nrm") * F.col("b_nrm"), F.lit(0.0)),
     )
 
 
@@ -680,7 +654,8 @@ def pq_encode(
     """(id, codes): each vector quantized to m subspace code ids — the
     compressed representation ADC scans. One narrow Arrow pass; the
     codebooks ride the closure (broadcast-small). Ties to the lowest
-    code id (np.argmin first-minimum), mirroring kmeans_assign."""
+    code id (np.argmin first-minimum), mirroring kmeans_assign. Works
+    unchanged on a streaming frame (frozen-codebook ingest)."""
     C = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
     m = len(C)
     sub = C[0].shape[1]
@@ -772,6 +747,145 @@ def pq_adc_topk(
         .select("query_id", id_col, F.round("adc", 6).alias("adc"), "rk")
         .orderBy("query_id", "rk")
     )
+
+
+# --- IVF cells and SRP bands: candidate search + exact cosine rerank -------
+#
+# One path for the in-session gates (fit or sketch, then probe within
+# the session) and the persisted index (operators/ann_store.py, which
+# passes its stored centroids / SRP config). Every kernel takes the
+# trained state or config as plain arguments and unit-prepped rows
+# (vec_id, emb, nrm from :func:`unit_prep`), so it cannot tell a
+# persisted table from a session frame.
+
+
+def centroid_frame(spark, centroids: list[list[float]]) -> DataFrame:
+    """(cid, cemb, cnrm): the driver-side centroid matrix as a small
+    in-memory frame, cells numbered 0..k-1, norms computed once."""
+    cent = spark.createDataFrame(
+        [(ci, [float(x) for x in c]) for ci, c in enumerate(centroids)],
+        "cid long, cemb array<double>",
+    )
+    cnrm = F.sqrt(F.aggregate(F.col("cemb"), F.lit(0.0), lambda s, v: s + v * v))
+    return cent.select("cid", "cemb", cnrm.alias("cnrm"))
+
+
+def rank_cells(prep: DataFrame, centp: DataFrame, id_col: str, n_keep: int) -> DataFrame:
+    """(id, emb, nrm, cid) for each row's n_keep most-cosine-similar
+    cells, ties to the lowest cid: broadcast the (tiny) centroid frame,
+    window-rank per row. Pure codegen — one dot product per (row, cell).
+    n_keep=1 is the cell assignment, n_keep=n_probe the query probe."""
+    csim = (
+        dot(F.col("emb"), F.col("cemb")) / F.nullif(F.col("nrm") * F.col("cnrm"), F.lit(0.0))
+    ).alias("csim")
+    w = Window.partitionBy(id_col).orderBy(F.desc("csim"), F.asc("cid"))
+    return (
+        prep.crossJoin(F.broadcast(centp))
+        .select(id_col, "emb", "nrm", "cid", csim)
+        .withColumn("crk", F.row_number().over(w))
+        .filter(F.col("crk") <= n_keep)
+        .select(id_col, "emb", "nrm", "cid")
+    )
+
+
+def cosine_rerank(cand: DataFrame, topk: int) -> DataFrame:
+    """(query_id, vec_id, score, rk): exact cosine top-k over candidate
+    (query, stored vector) pairs — columns query_id/q_emb/q_nrm and
+    vec_id/emb/nrm — ties to the lowest vec_id, score rounded to 6dp."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("raw_score"), F.asc("vec_id"))
+    return (
+        cand.select(
+            "query_id",
+            "vec_id",
+            (dot(F.col("q_emb"), F.col("emb")) / F.nullif(F.col("q_nrm") * F.col("nrm"), F.lit(0.0))).alias("raw_score"),
+        )
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= topk)
+        .select("query_id", "vec_id", F.round("raw_score", 6).alias("score"), "rk")
+        .orderBy("query_id", "rk")
+    )
+
+
+def ivf_probe_topk(
+    cells: DataFrame, queries: DataFrame, centp: DataFrame, topk: int, n_probe: int
+) -> DataFrame:
+    """(query_id, vec_id, score, rk): exact cosine top-k within the
+    n_probe cells nearest each query. ``cells`` is (vec_id, emb, nrm,
+    cid) — :func:`rank_cells` with n_keep=1; ``queries`` is (query_id,
+    emb, nrm). The candidate set shrinks by ~cells/probes and the cell
+    id keys the join; self-matches are excluded."""
+    probes = rank_cells(queries, centp, "query_id", n_probe).select(
+        "query_id", F.col("emb").alias("q_emb"), F.col("nrm").alias("q_nrm"), "cid"
+    )
+    cand = probes.join(cells, "cid").filter(F.col("vec_id") != F.col("query_id"))
+    return cosine_rerank(cand, topk)
+
+
+def _srp_signs(p: int, dim: int) -> list[int]:
+    """Deterministic ±1 hyperplane p (Knuth-multiply hash — linear
+    correlation between planes is fine for bucket-then-rerank; see
+    :func:`rp_signs` for the isometry-grade mixer)."""
+    return [
+        1 if ((p * dim + d) * 2654435761 % 4294967296) >> 31 else -1
+        for d in range(dim)
+    ]
+
+
+def srp_sketch_col(emb: Column, planes: int, dim: int) -> Column:
+    """planes-bit SRP sketch as a long: bit p = (dot(emb, plane_p) >= 0)."""
+    dbl = F.transform(emb, lambda x: x.cast("double"))
+    bits = None
+    for p in range(planes):
+        signs = F.array(*[F.lit(float(s)) for s in _srp_signs(p, dim)])
+        bit = F.when(dot(dbl, signs) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
+        bits = bit if bits is None else bits + bit
+    return bits.cast("long")
+
+
+def srp_band_rows(sk: DataFrame, planes: int, bands: int) -> DataFrame:
+    """(vec_id, emb, nrm, band, bv): one row per (vector, band) of a
+    sketched frame (vec_id, emb, nrm, sketch) — band b holds sketch bits
+    [b * planes/bands, (b + 1) * planes/bands)."""
+    band_bits = planes // bands
+    return sk.select(
+        "vec_id",
+        "emb",
+        "nrm",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.shiftright("sketch", band_bits * b)
+                        .bitwiseAND(F.lit((1 << band_bits) - 1))
+                        .alias("bv"),
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("b"),
+    ).select("vec_id", "emb", "nrm", "b.band", "b.bv")
+
+
+def srp_band_topk(qbands: DataFrame, bands: DataFrame, topk: int) -> DataFrame:
+    """(query_id, vec_id, score, rk): exact cosine rerank of the band
+    rows sharing >= 1 band value with a query's band rows (both sides
+    from :func:`srp_band_rows`). The band join keys the shuffle;
+    candidates dedup before scoring; self-matches are excluded."""
+    qb = qbands.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("emb").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+        "band",
+        "bv",
+    )
+    cand = (
+        qb.join(bands, ["band", "bv"])
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "q_emb", "q_nrm", "vec_id", "emb", "nrm")
+        .distinct()
+    )
+    return cosine_rerank(cand, topk)
 
 
 def semantic_dedup(
@@ -915,10 +1029,7 @@ def random_projection(
     comps = []
     for j in range(out_dim):
         signs = F.array(*[F.lit(float(s)) for s in rp_signs(j, in_dim)])
-        dot = F.aggregate(
-            F.zip_with(dbl, signs, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v
-        )
-        comps.append(dot * F.lit(scale))
+        comps.append(dot(dbl, signs) * F.lit(scale))
     return df.select(id_col, F.array(*comps).alias("projected"))
 
 
@@ -998,11 +1109,8 @@ def pca_project(
     Python in the plan."""
     dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     comp = F.array(*[F.lit(float(c)) for c in component])
-    dot = F.aggregate(
-        F.zip_with(dbl, comp, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v
-    )
     shift = float(sum(m * c for m, c in zip(mean, component)))
-    return df.select(id_col, (dot - F.lit(shift)).alias("proj"))
+    return df.select(id_col, (dot(dbl, comp) - F.lit(shift)).alias("proj"))
 
 
 def int8_encode(
@@ -1088,11 +1196,6 @@ def int8_topk(
     )
     a = unit_prep(corpus, "cid", "a_emb", "a_nrm", vec_col, id_col)
     b = unit_prep(queries, "qid", "b_emb", "b_nrm", vec_col, id_col)
-    dot = F.aggregate(
-        F.zip_with(F.col("a_emb"), F.col("b_emb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
     wk = Window.partitionBy("query_id").orderBy(F.desc("raw_score"), F.asc("vec_id"))
     return (
         cand.join(a, "cid")
@@ -1100,9 +1203,10 @@ def int8_topk(
         .select(
             F.col("qid").alias("query_id"),
             F.col("cid").alias("vec_id"),
-            (dot / F.nullif(F.col("a_nrm") * F.col("b_nrm"), F.lit(0.0))).alias(
-                "raw_score"
-            ),
+            (
+                dot(F.col("a_emb"), F.col("b_emb"))
+                / F.nullif(F.col("a_nrm") * F.col("b_nrm"), F.lit(0.0))
+            ).alias("raw_score"),
         )
         .withColumn("rk", F.row_number().over(wk))
         .filter(F.col("rk") <= k)

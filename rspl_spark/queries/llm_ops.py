@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -35,8 +35,18 @@ from rspl_spark.operators.dedup import (
     _SH_C2,
     portable_hash,
 )
+from rspl_spark.operators.similarity import (
+    centroid_frame,
+    dot,
+    exact_scored_pairs,
+    ivf_probe_topk,
+    rank_cells,
+    srp_band_rows,
+    srp_band_topk,
+    srp_sketch_col,
+    unit_prep,
+)
 from rspl_spark.operators.similarity import cosine_expr as cosine
-from rspl_spark.operators.similarity import exact_scored_pairs, unit_prep
 from rspl_spark.queries import query
 
 # The Spark-side kernels live in rspl_spark.operators.{dedup,similarity}
@@ -577,8 +587,8 @@ def q_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a repartition of the streamed candidate side: the interpreted
     # higher-order dot is the per-pair cost, and the small parquet would
     # otherwise stream through ONE task.
-    cand = _with_unit_prep(e, "vec_id", "a_emb", "a_nrm").repartition(32)
-    q = _with_unit_prep(e.filter(F.col("vec_id") < 10), "query_id", "b_emb", "b_nrm")
+    cand = unit_prep(e, "vec_id", "a_emb", "a_nrm").repartition(32)
+    q = unit_prep(e.filter(F.col("vec_id") < 10), "query_id", "b_emb", "b_nrm")
     # Broadcast the small query set; candidates stream through map-side.
     scored = (
         exact_scored_pairs(cand, q, "raw_score", allow_quadratic=True)
@@ -634,73 +644,30 @@ ORDER BY query_id, rk
 """
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
-
-
-def _ivf_topk(e: DataFrame, cent: DataFrame, n_queries: int = 10, n_probe: int = 2, k: int = 5) -> DataFrame:
-    """Shared IVF flow: assign all vectors to their nearest codebook cell
-    (broadcast codebook), probe each query's n_probe nearest cells,
-    exact-search only within — candidate set shrinks by ~cells/probes and
-    the cell id keys the shuffle. Casts and norms are hoisted per side
-    (vectors once, codebook once) so per-pair work is one dot product;
-    the streamed vector side is spread over partitions because the
-    interpreted higher-order dot would otherwise run in one task."""
-    prep = _with_unit_prep(e, "vec_id", "emb", "nrm").repartition(32)
-    # double-cast BEFORE the norm/dot so float codebooks (the untrained
-    # first-k-vectors variant) compute in double like the oracle does
-    cdbl = F.transform(F.col("cemb"), lambda x: x.cast("double"))
-    cnorm = F.sqrt(F.aggregate(cdbl, F.lit(0.0), lambda s, v: s + v * v))
-    centp = cent.select("cid", cdbl.alias("cemb"), cnorm.alias("cnrm"))
-    csim = (_dot(F.col("emb"), F.col("cemb")) / F.nullif(F.col("nrm") * F.col("cnrm"), F.lit(0.0))).alias("csim")
-    # Assignment: every vector scored against the broadcast codebook.
-    w_assign = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.asc("cid"))
-    assign = (
-        prep.crossJoin(F.broadcast(centp))
-        .select("vec_id", "emb", "nrm", "cid", csim)
-        .withColumn("crk", F.row_number().over(w_assign))
-        .filter(F.col("crk") == 1)
-        .select("vec_id", "emb", "nrm", "cid")
+def _ivf_gate(e: DataFrame, centp: DataFrame) -> DataFrame:
+    """In-session IVF over the codebook ``centp`` (cid, cemb, cnrm):
+    assign every vector to its nearest cell, probe the
+    10 queries' 2 nearest cells, exact top-5 within. The streamed vector
+    side is spread over partitions because the interpreted higher-order
+    dot would otherwise run in one task."""
+    prep = unit_prep(e, "vec_id", "emb", "nrm").repartition(32)
+    # every column aliased (withColumnRenamed is not): the optimizer then
+    # folds this projection below the repartition, so the 10 query rows
+    # cross the exchange already renamed and no Project runs after it
+    queries = prep.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("emb"), F.col("nrm").alias("nrm")
     )
-    q = prep.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb"), F.col("nrm").alias("q_nrm")
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("cid"))
-    probes = (
-        q.crossJoin(F.broadcast(centp))
-        .select(
-            "query_id",
-            "q_emb",
-            "q_nrm",
-            "cid",
-            (_dot(F.col("q_emb"), F.col("cemb")) / F.nullif(F.col("q_nrm") * F.col("cnrm"), F.lit(0.0))).alias("csim"),
-        )
-        .withColumn("crk", F.row_number().over(w_probe))
-        .filter(F.col("crk") <= n_probe)
-        .select("query_id", "q_emb", "q_nrm", "cid")
-    )
-    cand = probes.join(assign, "cid").filter(F.col("vec_id") != F.col("query_id"))
-    w_top = Window.partitionBy("query_id").orderBy(F.desc("raw_score"), F.asc("vec_id"))
-    return (
-        cand.select(
-            "query_id",
-            "vec_id",
-            (_dot(F.col("q_emb"), F.col("emb")) / F.nullif(F.col("q_nrm") * F.col("nrm"), F.lit(0.0))).alias("raw_score"),
-        )
-        .withColumn("rk", F.row_number().over(w_top))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", F.round("raw_score", 6).alias("score"), "rk")
-        .orderBy("query_id", "rk")
-    )
+    cells = rank_cells(prep, centp, "vec_id", 1)
+    return ivf_probe_topk(cells, queries, centp, topk=5, n_probe=2)
 
 
 @query("q_cosine_topk_ivf", oracle=_IVF_ORACLE, tags=("llm", "similarity"))
 def q_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
-    cent = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
-    )
-    return _ivf_topk(e, cent)
+    # the codebook is the first 8 vectors, prepped in place (no driver
+    # round trip) into centroid_frame's (cid, cemb, cnrm) shape, each
+    # cell numbered by its vec_id as the oracle numbers it
+    return _ivf_gate(e, unit_prep(e.filter(F.col("vec_id") < 8), "cid", "cemb", "cnrm"))
 
 
 def _kmeans_ctes(
@@ -801,18 +768,6 @@ def _srp_signs(p: int) -> list[int]:
     ]
 
 
-def _srp_sketch_col(emb: Column) -> Column:
-    """16-bit SRP sketch as a long: bit p = (dot(emb, plane_p) >= 0)."""
-    dbl = F.transform(emb, lambda x: x.cast("double"))
-    bits = None
-    for p in range(_SRP_PLANES):
-        signs = F.array(*[F.lit(float(s)) for s in _srp_signs(p)])
-        dot = _dot(dbl, signs)
-        bit = F.when(dot >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bits = bit if bits is None else bits + bit
-    return bits.cast("long")
-
-
 def _srp_sketch_sql(emb: str) -> str:
     terms = []
     for p in range(_SRP_PLANES):
@@ -869,51 +824,12 @@ def q_cosine_topk_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep = _memo_artifact(
         spark,
         ("srp_prep", sf_dir),
-        lambda: _with_unit_prep(e, "vec_id", "emb", "nrm")
-        .withColumn("sketch", _srp_sketch_col(F.col("emb")))
+        lambda: unit_prep(e, "vec_id", "emb", "nrm")
+        .withColumn("sketch", srp_sketch_col(F.col("emb"), _SRP_PLANES, _SRP_DIM))
         .repartition(32),
     )
-    bands = prep.select(
-        "vec_id",
-        "emb",
-        "nrm",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("sketch", 4 * b).bitwiseAND(F.lit(0xF)).alias("bv"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("vec_id", "emb", "nrm", "b.band", "b.bv")
-    qb = bands.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-        "band",
-        "bv",
-    )
-    cand = (
-        qb.join(bands, ["band", "bv"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "q_emb", "q_nrm", "vec_id", "emb", "nrm")
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("raw_score"), F.asc("vec_id"))
-    return (
-        cand.select(
-            "query_id",
-            "vec_id",
-            (_dot(F.col("q_emb"), F.col("emb")) / F.nullif(F.col("q_nrm") * F.col("nrm"), F.lit(0.0))).alias("raw_score"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "vec_id", F.round("raw_score", 6).alias("score"), "rk")
-        .orderBy("query_id", "rk")
-    )
+    bands = srp_band_rows(prep, _SRP_PLANES, 4)
+    return srp_band_topk(bands.filter(F.col("vec_id") < 10), bands, topk=5)
 
 
 # IVF with a TRAINED codebook: centroids come from 2 Lloyd iterations
@@ -980,10 +896,7 @@ def q_cosine_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load(spark, sf_dir, "embeddings")
     cents = kmeans_fit(e, k=8, iters=_IVF_TRAINED_ITERS)
-    cent = spark.createDataFrame(
-        [(ci, c) for ci, c in enumerate(cents)], "cid long, cemb array<double>"
-    )
-    return _ivf_topk(e, cent)
+    return _ivf_gate(e, centroid_frame(spark, cents))
 
 
 # Persisted-SRP two-batch replay (operators/ann_store.py): the band
@@ -1264,7 +1177,7 @@ def q_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
     cents = kmeans_fit(e, k=8, iters=_IVF_TRAINED_ITERS)
     assign = kmeans_assign(e, cents).select("vec_id", "cid")
-    prepped = _with_unit_prep(e, "vec_id", "emb", "nrm").join(assign, "vec_id")
+    prepped = unit_prep(e, "vec_id", "emb", "nrm").join(assign, "vec_id")
     # metadata-only count (unfiltered parquet) feeds the kernel's
     # scale-aware parallelism pin: small corpora skip the extra
     # repartition (r13: +4-8% here), big ones pin capped at the cell count
@@ -1300,11 +1213,6 @@ ORDER BY vec_id
 """
 
 
-# Shared per-side cosine prep lives in operators.similarity.unit_prep;
-# the module-local name is kept for the many call sites below.
-_with_unit_prep = unit_prep
-
-
 @query("q_embedding_nearest_neighbor", oracle=_NN_ORACLE, tags=("llm", "similarity", "dedup"))
 def q_embedding_nearest_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact nearest neighbor — DECLARED all-pairs semantics; this is the
@@ -1316,8 +1224,8 @@ def q_embedding_nearest_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not codegen'd — and the small parquet arrives as ONE partition, so
     # the broadcast-NL join would run single-threaded. Spread the streamed
     # side so the O(n²) scoring parallelizes.
-    a = _with_unit_prep(e, "vec_id", "a_emb", "a_nrm").repartition(32)
-    b = _with_unit_prep(e, "nn_id", "b_emb", "b_nrm")
+    a = unit_prep(e, "vec_id", "a_emb", "a_nrm").repartition(32)
+    b = unit_prep(e, "nn_id", "b_emb", "b_nrm")
     scored = exact_scored_pairs(
         a, b, "raw_score", allow_quadratic=True, broadcast_probes=False
     ).filter(F.col("vec_id") != F.col("nn_id"))
@@ -2570,7 +2478,7 @@ def _adc_rerank(spark, enc, cbs, queries, e) -> DataFrame:
             ),
             "vec_id",
         )
-        .withColumn("ip", _dot(F.col("q_emb"), F.col("v_emb")))
+        .withColumn("ip", dot(F.col("q_emb"), F.col("v_emb")))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("ip"), F.asc("vec_id"))
     return (

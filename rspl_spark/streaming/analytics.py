@@ -251,9 +251,9 @@ def streaming_cms(
     micro-batch partials add exactly like partition partials); probe it
     with ``cms_estimate`` at any time.
 
-    Same delegate-to-the-batch-kernel pattern as ``streaming_pq_encode``:
-    cms_sketch's plan works unchanged on a streaming frame, so batch and
-    stream cannot drift apart.
+    The batch kernel itself, as with ``pq_encode`` and ``kmeans_assign``
+    on a stream: cms_sketch's plan works unchanged on a streaming frame,
+    so batch and stream cannot drift apart.
     """
     from rspl_spark.operators.sketches import cms_sketch
 

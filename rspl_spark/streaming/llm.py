@@ -314,29 +314,6 @@ def streaming_token_packing(
     )
 
 
-def streaming_ivf_assign(
-    vectors: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Incremental IVF cell assignment of arriving embeddings against a
-    FROZEN codebook: the same codegen'd nearest-centroid kernel as batch
-    ``kmeans_assign``, applied to a streaming DataFrame.
-
-    This is a stateless NARROW projection — no shuffle, no state store —
-    so assignment scales with ingest parallelism; batch/stream parity is
-    exact because it is literally the same expression tree. This is the
-    ingest half of a streamed vector index: rows land in their cell
-    partitions as they arrive, and the (rare, heavyweight) codebook
-    refresh stays a separate driver-side concern (see
-    :func:`ivf_ingest_with_retrain`).
-    """
-    from rspl_spark.operators.similarity import kmeans_assign
-
-    return kmeans_assign(vectors, centroids, vec_col=vec_col, id_col=id_col)
-
-
 def ivf_ingest_with_retrain(
     vectors: DataFrame,
     initial_centroids: list[list[float]],
@@ -377,27 +354,6 @@ def ivf_ingest_with_retrain(
             state["epoch"] += 1
 
     return vectors.writeStream.foreachBatch(handle)
-
-
-def streaming_pq_encode(
-    vectors: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Incremental PQ encoding of arriving embeddings against FROZEN
-    sub-codebooks: the same Arrow kernel as batch
-    :func:`~rspl_spark.operators.similarity.pq_encode` applied to a
-    streaming DataFrame — stateless, narrow, no shuffle, so the
-    compressed code table grows with ingest at full parallelism while
-    the index stays 64x smaller than the raw vectors. Codebook refresh
-    is the same separate driver-side concern as IVF retraining
-    (:func:`ivf_ingest_with_retrain`); batch/stream parity is exact
-    because it is literally the same kernel.
-    """
-    from rspl_spark.operators.similarity import pq_encode
-
-    return pq_encode(vectors, codebooks, vec_col=vec_col, id_col=id_col)
 
 
 def semantic_prep(
@@ -462,6 +418,8 @@ def streaming_semantic_dedup(
     corpus — see semantic_dedup's adaptive k) plus the state cap."""
     import numpy as np
 
+    from rspl_spark.operators.similarity import dot
+
     if max_per_cell is not None and max_per_cell < 1:
         raise ValueError("max_per_cell must be >= 1 (or None to disable)")
     if ttl_seconds is not None and ttl_seconds <= 0:
@@ -469,12 +427,7 @@ def streaming_semantic_dedup(
 
     new = semantic_prep(arrivals, centroids, vec_col, id_col)
     n, s = new.alias("n"), store_prepped.alias("s")
-    dot = F.aggregate(
-        F.zip_with(F.col("n.emb"), F.col("s.emb"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    score = dot / F.nullif(F.col("n.nrm") * F.col("s.nrm"), F.lit(0.0))
+    score = dot(F.col("n.emb"), F.col("s.emb")) / F.nullif(F.col("n.nrm") * F.col("s.nrm"), F.lit(0.0))
     vs_store = (
         n.join(s, F.col("n.cid") == F.col("s.cid"))
         .filter(F.col("n.vec_id") != F.col("s.vec_id"))

@@ -495,3 +495,41 @@ def test_index_props_escape_quotes_and_compact_keeps_layout(spark, emb):
     finally:
         _drop(spark, name)
         spark.sql(f"DROP TABLE IF EXISTS {name}__deleted")
+
+
+def test_persisted_ivf_srp_match_in_session_gates(spark):
+    """A persisted IVF index (k=8, iters=2) and SRP index (16 planes,
+    4 bands, 64 dims), each built on the full corpus, answer exactly as
+    the in-session gates q_cosine_topk_ivf_trained and q_cosine_topk_srp:
+    both paths run the same similarity kernels, so a divergence between
+    them shows in the fast tier, not only in the oracle sweep."""
+    import os
+
+    from rspl_spark.catalog import load
+    from rspl_spark.operators.ann_store import (
+        create_ivf_index,
+        create_srp_index,
+        ivf_index_topk,
+        srp_index_topk,
+    )
+    from rspl_spark.queries.llm_ops import q_cosine_topk_ivf_trained, q_cosine_topk_srp
+
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+    e = load(spark, sf, "embeddings")
+    queries = e.filter(F.col("vec_id") < 10)
+    ivf, srp = "ivfidx_test_gate", "srpidx_test_gate"
+    _drop(spark, ivf)
+    _drop(spark, srp)
+    try:
+        create_ivf_index(spark, e, ivf, k=8, iters=2, overwrite=True)
+        create_srp_index(spark, e, srp, planes=16, bands=4, dim=64, overwrite=True)
+        got_ivf = ivf_index_topk(spark, ivf, queries, topk=5, n_probe=2).collect()
+        got_srp = srp_index_topk(spark, srp, queries, topk=5).collect()
+        want_ivf = q_cosine_topk_ivf_trained(spark, sf).collect()
+        want_srp = q_cosine_topk_srp(spark, sf).collect()
+        assert len(want_ivf) > 0 and len(want_srp) > 0
+        assert [tuple(r) for r in got_ivf] == [tuple(r) for r in want_ivf]
+        assert [tuple(r) for r in got_srp] == [tuple(r) for r in want_srp]
+    finally:
+        _drop(spark, ivf)
+        _drop(spark, srp)

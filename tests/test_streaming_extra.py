@@ -442,7 +442,6 @@ def test_streaming_ivf_assign_batch_parity(spark):
     SAME expression as batch kmeans_assign — finite-prefix parity, the
     rspl way (tests/basic.rs style)."""
     from rspl_spark.operators.similarity import kmeans_assign
-    from rspl_spark.streaming.llm import streaming_ivf_assign
 
     cents = [[0.0, 0.0, 0.0, 0.0], [10.0, 10.0, 10.0, 10.0]]
     rows = [(i, [float(i % 2 * 10 + d * 0.1) for d in range(4)]) for i in range(20)]
@@ -452,7 +451,7 @@ def test_streaming_ivf_assign_batch_parity(spark):
         write_stream_chunks(spark, tmp, [static])
         stream = file_stream(spark, tmp, schema)
         q = (
-            streaming_ivf_assign(stream, cents)
+            kmeans_assign(stream, cents)
             .writeStream.format("memory")
             .queryName("t_sivf")
             .outputMode("append")

@@ -285,7 +285,6 @@ def test_streaming_pq_encode_matches_batch(spark):
     import tempfile
 
     from rspl_spark.operators.similarity import pq_encode, pq_fit
-    from rspl_spark.streaming.llm import streaming_pq_encode
     from rspl_spark.streaming.sources import (
         file_stream,
         run_to_memory_sink,
@@ -304,7 +303,7 @@ def test_streaming_pq_encode_matches_batch(spark):
     with tempfile.TemporaryDirectory() as tmp:
         write_stream_chunks(spark, tmp, chunks)
         stream = file_stream(spark, tmp, "vec_id long, embedding array<float>")
-        out = streaming_pq_encode(stream, cbs)
+        out = pq_encode(stream, cbs)
         assert out.isStreaming
         run_to_memory_sink(out, "t_pq_stream", timeout_s=180)
         got = {
