@@ -177,9 +177,7 @@ def q_transition_pairs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = transition_pairs_stream(
             stream, "user_id", "ts", "event_type", tiebreak_cols=["event_id"]
         )
-        run_to_memory_sink(
-            out, table, timeout_s=300, source_dirs=[tmp], python_stateful=True
-        )
+        run_to_memory_sink(out, table, timeout_s=300, source_dirs=[tmp])
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return (

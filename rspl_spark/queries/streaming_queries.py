@@ -98,7 +98,6 @@ def _drain(
     name: str,
     tmp_dirs: list[str],
     output_mode: str = "append",
-    python_stateful: bool = False,
 ) -> DataFrame:
     from rspl_spark.streaming.sources import run_to_memory_sink
 
@@ -106,7 +105,7 @@ def _drain(
     try:
         run_to_memory_sink(
             out, table, timeout_s=300, output_mode=output_mode,
-            source_dirs=tmp_dirs, python_stateful=python_stateful,
+            source_dirs=tmp_dirs,
         )
     finally:
         for d in tmp_dirs:
@@ -227,7 +226,7 @@ def q_cohort_retention_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id long, ts timestamp, event_id long",
     )
     inc = cohort_retention_stream(stream)
-    got = _drain(inc, "t_q_cohort_stream", [tmp], python_stateful=True)
+    got = _drain(inc, "t_q_cohort_stream", [tmp])
     counts = got.groupBy("cohort_wd", "offset").agg(
         F.count(F.lit(1)).cast("long").alias("n_active")
     )
@@ -502,7 +501,7 @@ def q_stream_merge_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from rspl_spark.streaming.sources import sized_stream_shuffle
 
-        with sized_stream_shuffle(spark, [tmp]):
+        with sized_stream_shuffle(stream, [tmp]):
             q = stream_merge_into_agg_store(
                 stream, store, ["event_type"], measures, checkpoint=ck
             )
@@ -1267,7 +1266,7 @@ def q_pelican_capability_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # hold the sized width until q.stop(): the micro-batch thread
         # captures spark.sql.shuffle.partitions asynchronously
-        with sized_stream_shuffle(spark, [tmp], python_stateful=True):
+        with sized_stream_shuffle(out, [tmp]):
             q = (
                 out.writeStream.format("memory")
                 .queryName(name)

@@ -274,10 +274,7 @@ def _drain(out: DataFrame, name: str, tmp_dir: str) -> DataFrame:
 
     table = f"{name}_{uuid.uuid4().hex[:8]}"
     try:
-        run_to_memory_sink(
-            out, table, timeout_s=300, source_dirs=[tmp_dir],
-            python_stateful=True,
-        )
+        run_to_memory_sink(out, table, timeout_s=300, source_dirs=[tmp_dir])
     finally:
         shutil.rmtree(tmp_dir, ignore_errors=True)
     return out.sparkSession.table(table)

@@ -3,9 +3,11 @@
 - sources: file/rate streams with the reference's seeded-channel semantics
   (overeager_receivers.rs:29-32 — the seed is the stream's first element).
 - windows: tumbling / sliding / session windows + watermarks.
-- stateful: keyed Mealy-machine template — any DSL StreamProcessor run
-  across micro-batches with its continuation carried in GroupState
-  (the streaming analog of dsl.interpreter).
+- stateful: the keyed streaming-state template every keyed operator
+  (analytics, llm, pipeline, timeseries) runs a step function on, and
+  the Mealy machine that runs any DSL StreamProcessor across
+  micro-batches with its continuation carried in state (the streaming
+  analog of dsl.interpreter).
 """
 
 from rspl_spark.streaming.sources import (  # noqa: F401

@@ -14,17 +14,19 @@ exactly as with dedup (``operators/dedup_store.py``).
 
 Scale model: state per user is a fixed-length list of longs (one per
 stage) — O(users × stages) total, bounded, no growth with event volume.
+The funnel and the cohort-retention twin are step functions on the
+keyed-state template (``streaming/stateful.py::keyed_state_stream``).
 """
 
 from __future__ import annotations
 
 import uuid
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+from rspl_spark.streaming.stateful import keyed_state_stream
 
 _FUNNEL_STATE = StructType([StructField("reached_ns", ArrayType(LongType()))])
 
@@ -187,48 +189,34 @@ def streaming_funnel(
     Append mode — downstream takes each user's latest row (max n_reached)
     for the current funnel position.
     """
-    out_schema = "`user` string, `n_reached` long, `stage_ts_ns` array<long>"
     n_stages = len(stages)
 
-    def proc(key, pdfs, state: GroupState):
-        reached: list[int] = list(state.get[0]) if state.exists else []
-        chunks = [p for p in pdfs if len(p)]
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True)
-            # NULL timestamps can't advance a funnel: the batch oracle's
-            # min-over-when ignores them, and unguarded NaT becomes
-            # int64 min, falsely advancing the stage with a garbage ts
-            batch = batch[batch[ts_col].notna()]
-            # total ts order within the batch; ties don't matter (strict >)
-            batch = batch.sort_values(ts_col, kind="mergesort")
-            ts_ns = batch[ts_col].astype("int64").tolist()
-            for t, et in zip(ts_ns, batch[type_col].tolist()):
-                if (
-                    len(reached) < n_stages
-                    and et == stages[len(reached)]
-                    and (not reached or t > reached[-1])
-                ):
-                    reached.append(t)
-        state.update((reached,))
-        yield pd.DataFrame(
-            {
-                "user": [str(key[0])],
-                "n_reached": [len(reached)],
-                "stage_ts_ns": [list(reached)],
-            }
-        )
+    def step(_user, st, batch, _now):
+        reached = list(st[0])
+        # NULL timestamps can't advance a funnel (dropped by the
+        # template): the batch oracle's min-over-when ignores them, and
+        # unguarded NaT becomes int64 min, falsely advancing the stage
+        # with a garbage ts. Ts ties don't matter (strict >).
+        ts_ns = batch[ts_col].astype("int64").tolist()
+        for t, et in zip(ts_ns, batch[type_col].tolist()):
+            if (
+                len(reached) < n_stages
+                and et == stages[len(reached)]
+                and (not reached or t > reached[-1])
+            ):
+                reached.append(t)
+        return (reached,), [(len(reached), reached)]
 
-    cols = [user_col, ts_col, type_col]
-    return (
-        events.select(*cols)
-        .groupBy(user_col)
-        .applyInPandasWithState(
-            proc,
-            outputStructType=out_schema,
-            stateStructType=_FUNNEL_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return keyed_state_stream(
+        events.select(user_col, ts_col, type_col),
+        user_col,
+        step,
+        _FUNNEL_STATE,
+        lambda: ([],),
+        [("n_reached", "long"), ("stage_ts_ns", "array<long>")],
+        order=[ts_col],
+        notna=[ts_col],
+        key_out="user",
     )
 
 
@@ -496,32 +484,24 @@ def cohort_retention_stream(
         F.col(user_col).alias("user"), wd.alias("wd"), F.col(ts_col)
     )
 
-    def proc(key, pdfs, state: GroupState):
-        if state.exists:
-            cohort, seen = state.get
-            seen = set(seen)
-        else:
-            cohort, seen = None, set()
-        chunks = [p for p in pdfs if len(p)]
+    def step(_user, st, batch, _now):
+        cohort, seen = st[0], set(st[1])
         out = []
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True)
-            batch = batch[batch["wd"].notna()]
-            for w in sorted(int(v) for v in batch["wd"].unique()):
-                if cohort is None:
-                    cohort = w
-                if w not in seen:
-                    seen.add(w)
-                    out.append((str(key[0]), cohort, (w - cohort) // 7))
-        if cohort is not None:
-            state.update((cohort, sorted(seen)))
-        if out:
-            yield pd.DataFrame(out, columns=["user", "cohort_wd", "offset"])
+        for w in sorted(int(v) for v in batch["wd"].unique()):
+            if cohort is None:
+                cohort = w
+            if w not in seen:
+                seen.add(w)
+                out.append((cohort, (w - cohort) // 7))
+        return (None if cohort is None else (cohort, sorted(seen))), out
 
-    return rows.groupBy("user").applyInPandasWithState(
-        proc,
-        outputStructType="`user` string, cohort_wd long, `offset` long",
-        stateStructType=_COHORT_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state_stream(
+        rows,
+        "user",
+        step,
+        _COHORT_STATE,
+        lambda: (None, []),
+        [("cohort_wd", "long"), ("offset", "long")],
+        notna=["wd"],
+        key_out="user",
     )

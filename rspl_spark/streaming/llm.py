@@ -8,25 +8,86 @@ the signatures seen in that bucket and emits a candidate pair whenever a
 new arrival collides with any of them. State per bucket is tiny (the
 few colliding docs' signatures); the bucket key distributes uniformly —
 the same shuffle discipline as the batch LSH join, but incremental.
+``streaming_semantic_dedup``'s new-vs-new side is the same bounded
+pair state keyed by k-means cell with a cosine score, and
+``streaming_token_packing`` a running sum per source; all three are
+step functions on the keyed-state template
+(``streaming/stateful.py::keyed_state_stream``).
 """
 
 from __future__ import annotations
 
-import pickle
-
-from collections.abc import Iterable
+from collections.abc import Callable
 
 import pandas as pd
-from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from rspl_spark.operators.dedup import MINHASH_COEFS, minhash_signatures
+from rspl_spark.streaming.stateful import keyed_state_stream
 
 _N = len(MINHASH_COEFS)
 _BUCKET_STATE = StructType([StructField("seen", BinaryType())])
+
+
+def _pair_state_stream(
+    df: DataFrame,
+    key_col: str,
+    id_col: str,
+    entries: Callable[[pd.DataFrame], list[tuple]],
+    score: Callable[[tuple, tuple], float | None],
+    threshold: float,
+    ttl_seconds: float | None,
+    cap: int | None,
+    score_col: str,
+) -> DataFrame:
+    """New-vs-held pairs per ``key_col`` group with BOUNDED state: each
+    arriving row (in ``id_col`` order) is scored against the group's held
+    entries and then held itself. ``entries(batch)`` gives the arrivals
+    as (id, *payload); ``score(old_payload, new_payload)`` is the pair
+    score, None to skip the pair. Emits (doc_a, doc_b, ``score_col``)
+    with doc_a < doc_b for scores >= ``threshold``.
+
+    Held entries are (id, *payload, arrival_ms), oldest first — the
+    list order both evictions rely on: ``cap`` drops the oldest beyond
+    that many, and ``ttl_seconds`` drops entries older than the horizon
+    on the group's next activity, plus the whole group via a
+    processing-time timeout once it idles past the TTL. An emptied
+    group's state is removed."""
+    ttl_ms = None if ttl_seconds is None else max(1, int(ttl_seconds * 1000))
+
+    def step(_key, held: list, batch, now):
+        if ttl_ms is not None:
+            horizon = now - ttl_ms
+            held = [e for e in held if e[-1] > horizon]
+        pairs = []
+        for new_id, *new in entries(batch):
+            for old in held:
+                if old[0] == new_id:
+                    continue
+                sc = score(old[1:-1], new)
+                if sc is not None and sc >= threshold:
+                    a, b = sorted((old[0], new_id))
+                    pairs.append((a, b, sc))
+            held.append((new_id, *new, now))
+            if cap is not None and len(held) > cap:
+                del held[: len(held) - cap]  # oldest-first
+        return (held or None), pairs
+
+    return keyed_state_stream(
+        df,
+        key_col,
+        step,
+        _BUCKET_STATE,
+        list,
+        [("doc_a", "long"), ("doc_b", "long"), (score_col, "double")],
+        order=[id_col],
+        timeout_ms=ttl_ms,
+        # no arrival in the group for a full TTL window: every held
+        # entry is stale — drop the group's state entirely
+        on_timeout=None if ttl_ms is None else (lambda _key, _held: (None, [])),
+    )
 
 
 def _signatures(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -82,6 +143,7 @@ def streaming_lsh_dedup(
         raise ValueError("max_per_bucket must be >= 1 (or None to disable)")
     if ttl_seconds is not None and ttl_seconds <= 0:
         raise ValueError("ttl_seconds must be positive (or None to disable)")
+    mh = [f"mh{j}" for j in range(_N)]
     if bands is None:
         per_band = _N // n_bands
         sig = _signatures(docs, text_col, id_col)
@@ -99,72 +161,19 @@ def streaming_lsh_dedup(
                 for band in range(n_bands)
             ]
         )
-        bands = sig.select(
-            "doc_id",
-            *[f"mh{j}" for j in range(_N)],
-            F.explode(buckets).alias("bucket"),
-        )
-
-    out_schema = "doc_a long, doc_b long, est_jaccard double"
-    ttl_ms = None if ttl_seconds is None else max(1, int(ttl_seconds * 1000))
-
-    def proc(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if ttl_ms is not None and state.hasTimedOut:
-            # no arrival in this bucket for a full TTL window: every held
-            # signature is stale — drop the bucket's state entirely
-            state.remove()
-            return
-        # entries are (doc_id, signature, arrival_ms); arrival order is
-        # list order, which both evictions rely on
-        seen: list[tuple] = pickle.loads(state.get[0]) if state.exists else []
-        now = state.getCurrentProcessingTimeMs() if ttl_ms is not None else 0
-        if ttl_ms is not None:
-            horizon = now - ttl_ms
-            seen = [e for e in seen if e[2] > horizon]
-        pairs = []
-        # concat ALL Arrow chunks then sort ONCE: a bucket's micro-batch
-        # may span several chunks in no guaranteed order, and per-chunk
-        # sorting makes cap eviction (and hence the emitted pair set)
-        # depend on chunk arrival order instead of doc_id order
-        chunks = [p for p in pdfs if len(p)]
-        batch = (
-            pd.concat(chunks, ignore_index=True).sort_values("doc_id")
-            if chunks
-            else pd.DataFrame()
-        )
-        if len(batch):
-            for row in batch.itertuples(index=False):
-                new_sig = tuple(getattr(row, f"mh{j}") for j in range(_N))
-                for entry in seen:
-                    old_id, old_sig = entry[0], entry[1]
-                    if old_id == row.doc_id:
-                        continue
-                    est = sum(a == b for a, b in zip(old_sig, new_sig)) / _N
-                    if est >= threshold:
-                        a, b = sorted((old_id, row.doc_id))
-                        pairs.append((a, b, est))
-                seen.append((row.doc_id, new_sig, now))
-                if max_per_bucket is not None and len(seen) > max_per_bucket:
-                    del seen[: len(seen) - max_per_bucket]  # oldest-first
-        if seen:
-            state.update((cloudpickle.dumps(seen),))
-            if ttl_ms is not None:
-                state.setTimeoutDuration(ttl_ms)
-        elif state.exists:
-            state.remove()
-        if pairs:
-            yield pd.DataFrame(pairs, columns=["doc_a", "doc_b", "est_jaccard"])
-
-    return bands.groupBy("bucket").applyInPandasWithState(
-        proc,
-        outputStructType=out_schema,
-        stateStructType=_BUCKET_STATE,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
+        bands = sig.select("doc_id", *mh, F.explode(buckets).alias("bucket"))
+    return _pair_state_stream(
+        bands,
+        "bucket",
+        "doc_id",
+        lambda batch: list(
+            zip(batch["doc_id"].tolist(), zip(*(batch[c].tolist() for c in mh)))
         ),
+        lambda held, arrival: sum(a == b for a, b in zip(held[0], arrival[0])) / _N,
+        threshold,
+        ttl_seconds,
+        max_per_bucket,
+        "est_jaccard",
     )
 
 
@@ -278,39 +287,25 @@ def streaming_token_packing(
     id_t = rows.schema[id_col].dataType.simpleString()
     out_schema = f"`{source_col}` {src_t}, `{id_col}` {id_t}, nt long, bin long"
 
-    def proc(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        cum = state.get[0] if state.exists else 0
-        # A group larger than the Arrow batch size arrives as SEVERAL
-        # chunks in arbitrary order — concatenate and sort ONCE, or the
-        # order-sensitive running sum diverges from the batch packer.
-        # This buffers the group's micro-batch slice in memory (3 narrow
-        # columns), which is the inherent cost of order-sensitive state.
-        chunks = list(pdfs)
-        if not chunks:
-            # timed-out keys (if a timeout conf is ever added) arrive
-            # with an empty iterator — pd.concat would raise on it
-            state.update((cum,))
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if len(pdf):
-            # positional column access (0=source, 1=id, 2=nt — pinned by
-            # the select above): itertuples+getattr breaks on column
-            # names that aren't valid Python identifiers
-            pdf = pdf.sort_values(pdf.columns[1])
+    def step(source, st, batch, _now):
+        (cum,) = st
+        # positional column access (0=source, 1=id, 2=nt — pinned by
+        # the select above): itertuples+getattr breaks on column names
+        # that aren't valid Python identifiers
         out = []
-        for doc_id, n in zip(pdf.iloc[:, 1], pdf.iloc[:, 2]):
-            out.append((key[0], doc_id, n, cum // budget))
+        for doc_id, n in zip(batch.iloc[:, 1], batch.iloc[:, 2]):
+            out.append((source, doc_id, n, cum // budget))
             cum += int(n)
-        state.update((cum,))
-        if out:
-            yield pd.DataFrame(out, columns=[source_col, id_col, "nt", "bin"])
+        return (cum,), out
 
-    return rows.groupBy(source_col).applyInPandasWithState(
-        proc,
-        outputStructType=out_schema,
-        stateStructType=_PACK_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state_stream(
+        rows,
+        source_col,
+        step,
+        _PACK_STATE,
+        lambda: (0,),
+        [(source_col, src_t), (id_col, id_t), ("nt", "long"), ("bin", "long")],
+        order=[id_col],
     )
 
 
@@ -439,63 +434,26 @@ def streaming_semantic_dedup(
         .filter(F.col("score") >= threshold)
     )
 
-    ttl_ms = None if ttl_seconds is None else max(1, int(ttl_seconds * 1000))
+    def cosine(held, arrival):
+        # payloads are (emb ndarray, nrm)
+        denom = arrival[1] * held[1]
+        return None if denom == 0 else float(np.dot(arrival[0], held[0]) / denom)
 
-    def proc(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            return
-        # entries are (vec_id, emb ndarray, nrm, arrival_ms)
-        seen: list[tuple] = pickle.loads(state.get[0]) if state.exists else []
-        now = state.getCurrentProcessingTimeMs() if ttl_ms is not None else 0
-        if ttl_ms is not None:
-            horizon = now - ttl_ms
-            seen = [e for e in seen if e[3] > horizon]
-        pairs = []
-        # concat-then-sort once, same cross-chunk ordering hazard as the
-        # LSH bucket state above
-        chunks = [p for p in pdfs if len(p)]
-        batch = (
-            pd.concat(chunks, ignore_index=True).sort_values("vec_id")
-            if chunks
-            else pd.DataFrame()
-        )
-        if len(batch):
-            for row in batch.itertuples(index=False):
-                v = np.asarray(row.emb, dtype=np.float64)
-                nr = float(row.nrm)
-                for oid, ov, onrm, _ts in seen:
-                    if oid == row.vec_id:
-                        continue
-                    denom = nr * onrm
-                    if denom == 0:
-                        continue
-                    sc = float(np.dot(v, ov) / denom)
-                    if sc >= threshold:
-                        a, b = sorted((oid, row.vec_id))
-                        pairs.append((a, b, sc))
-                seen.append((row.vec_id, v, nr, now))
-                if max_per_cell is not None and len(seen) > max_per_cell:
-                    del seen[: len(seen) - max_per_cell]  # oldest-first
-        if seen:
-            state.update((cloudpickle.dumps(seen),))
-            if ttl_ms is not None:
-                state.setTimeoutDuration(ttl_ms)
-        elif state.exists:
-            state.remove()
-        if pairs:
-            yield pd.DataFrame(pairs, columns=["doc_a", "doc_b", "score"])
-
-    vs_new = new.groupBy("cid").applyInPandasWithState(
-        proc,
-        outputStructType="doc_a long, doc_b long, score double",
-        stateStructType=_BUCKET_STATE,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    vs_new = _pair_state_stream(
+        new,
+        "cid",
+        "vec_id",
+        lambda batch: [
+            (i, np.asarray(e, dtype=np.float64), float(nr))
+            for i, e, nr in zip(
+                batch["vec_id"].tolist(), batch["emb"].tolist(), batch["nrm"].tolist()
+            )
+        ],
+        cosine,
+        threshold,
+        ttl_seconds,
+        max_per_cell,
+        "score",
     )
     return vs_store.unionByName(vs_new)
 

@@ -9,23 +9,18 @@ shape a 100 TB ingest actually runs —
 Quality/language stages are stateless Catalyst expressions (stream-safe
 narrow ops); dedup holds seen content-hashes in per-bucket state — the
 hash keys the shuffle, so state is uniformly distributed and each bucket
-holds only its own hashes.
+holds only its own hashes. The dedup stage is a step function on the
+keyed-state template (``streaming/stateful.py::keyed_state_stream``).
 """
 
 from __future__ import annotations
 
-import pickle
-
-from collections.abc import Iterable
-
-import pandas as pd
-from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import BinaryType, StructField, StructType
 
 from rspl_spark.operators.text import lang_pred_expr, quality_expr
+from rspl_spark.streaming.stateful import keyed_state_stream
 
 _SEEN_STATE = StructType([StructField("seen", BinaryType())])
 
@@ -66,43 +61,32 @@ def curate_stream(
     # parameter invites string doc ids, which a `long` output schema
     # would crash on at Arrow conversion inside the running query
     id_t = docs.schema[id_col].dataType.simpleString()
-    out_schema = (
-        f"`{id_col}` {id_t}, `{text_col}` string, quality double,"
-        " pred_lang string"
-    )
 
-    def dedup(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        seen: set = pickle.loads(state.get[0]) if state.exists else set()
-        rows = []
-        # Materialize ALL Arrow chunks and sort ONCE: a bucket's
-        # micro-batch may span several chunks in no guaranteed order, and
+    def dedup(_bucket, seen: set, batch, _now):
         # the first-seen keeper must be the min doc_id of the batch
-        # (same hazard as stateful.py's run_mealy_stream, same fix).
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True).sort_values(id_col)
-            # positional access (column order pinned by the select in
-            # `scored`): itertuples+getattr breaks on column names that
-            # aren't valid Python identifiers
-            cols = list(batch.columns)
-            i_id, i_txt = cols.index(id_col), cols.index(text_col)
-            i_q, i_l, i_h = (
-                cols.index("quality"), cols.index("pred_lang"), cols.index("h")
-            )
-            for r in batch.itertuples(index=False):
-                h = r[i_h]
-                if h in seen:
-                    continue
-                seen.add(h)
-                rows.append((r[i_id], r[i_txt], r[i_q], r[i_l]))
-        state.update((cloudpickle.dumps(seen),))
-        if rows:
-            yield pd.DataFrame(rows, columns=[id_col, text_col, "quality", "pred_lang"])
+        rows = []
+        # positional access (column order pinned by the select in
+        # `scored`): itertuples+getattr breaks on column names that
+        # aren't valid Python identifiers
+        cols = list(batch.columns)
+        i_id, i_txt = cols.index(id_col), cols.index(text_col)
+        i_q, i_l, i_h = (
+            cols.index("quality"), cols.index("pred_lang"), cols.index("h")
+        )
+        for r in batch.itertuples(index=False):
+            h = r[i_h]
+            if h in seen:
+                continue
+            seen.add(h)
+            rows.append((r[i_id], r[i_txt], r[i_q], r[i_l]))
+        return seen, rows
 
-    return scored.groupBy("bucket").applyInPandasWithState(
+    return keyed_state_stream(
+        scored,
+        "bucket",
         dedup,
-        outputStructType=out_schema,
-        stateStructType=_SEEN_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _SEEN_STATE,
+        set,
+        [(id_col, id_t), (text_col, "string"), ("quality", "double"), ("pred_lang", "string")],
+        order=[id_col],
     )

@@ -431,18 +431,35 @@ def stream_state_partitions(spark: SparkSession, source_bytes: int) -> int:
 _SIZED_SHUFFLE_LOCK = threading.Lock()
 
 
+# logical-plan nodes of the keyed Python stateful operators
+# (applyInPandasWithState / transformWithStateInPandas)
+_PYTHON_STATE_NODES = frozenset(
+    {"FlatMapGroupsInPandasWithState", "TransformWithStateInPySpark"}
+)
+
+
+def _has_python_state(df: DataFrame) -> bool:
+    """True when ``df``'s logical plan runs a keyed Python stateful
+    operator."""
+    todo = [df._jdf.queryExecution().logical()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() in _PYTHON_STATE_NODES:
+            return True
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return False
+
+
 @contextlib.contextmanager
-def sized_stream_shuffle(
-    spark: SparkSession,
-    source_dirs: list[str] | None,
-    python_stateful: bool = False,
-):
+def sized_stream_shuffle(stream_df: DataFrame, source_dirs: list[str] | None):
     """Set ``spark.sql.shuffle.partitions`` to the scale-adaptive
     stream width (from the replay chunk dirs' bytes) for the duration
-    of one streaming query, restoring the session value afterwards.
-    Hold the scope open until the query terminates: the width is
-    captured into the query's offset log by the micro-batch thread,
-    which runs asynchronously after ``start()`` returns.
+    of one streaming query over ``stream_df``, restoring the session
+    value afterwards. Hold the scope open until the query terminates:
+    the width is captured into the query's offset log by the
+    micro-batch thread, which runs asynchronously after ``start()``
+    returns.
 
     SINGLE-FLIGHT contract (r15 verdict ask #7): the width is a
     session-global conf, so while one replay holds this scope, any
@@ -456,20 +473,21 @@ def sized_stream_shuffle(
     queries serially, so this only matters for long-lived shared
     sessions.
 
-    ``python_stateful=True`` declares that the stream contains a keyed
-    PYTHON stateful operator (applyInPandasWithState /
-    transformWithStateInPandas): there the stage cost is per-key Python
-    compute, not per-partition state-store overhead, and byte-derived
-    width is the wrong objective (measured r15: the three
-    applyInPandasWithState time-series gates ran 4-5x SLOWER at the
-    byte width of 1 than at full compute width). Floor those at
-    :func:`rspl_spark.session.grouped_map_parallelism` — the same pin
-    the batch grouped-map stages use."""
+    A stream whose plan holds a keyed PYTHON stateful operator
+    (applyInPandasWithState / transformWithStateInPandas) is floored
+    at :func:`rspl_spark.session.grouped_map_parallelism` — the same
+    pin the batch grouped-map stages use: there the stage cost is
+    per-key Python compute, not per-partition state-store overhead,
+    and byte-derived width is the wrong objective (measured r15: the
+    three applyInPandasWithState time-series gates ran 4-5x SLOWER at
+    the byte width of 1 than at full compute width). The plan decides,
+    so no caller can forget the floor."""
     if source_dirs is None:
         yield None
         return
+    spark = stream_df.sparkSession
     n = stream_state_partitions(spark, _tree_bytes(source_dirs))
-    if python_stateful:
+    if _has_python_state(stream_df):
         from rspl_spark.session import grouped_map_parallelism
 
         n = max(n, grouped_map_parallelism(spark))
@@ -488,7 +506,6 @@ def run_to_memory_sink(
     timeout_s: int = 120,
     output_mode: str = "append",
     source_dirs: list[str] | None = None,
-    python_stateful: bool = False,
 ):
     """Drive a streaming DataFrame to completion into an in-memory table
     (AvailableNow trigger = process everything currently available, then
@@ -507,9 +524,7 @@ def run_to_memory_sink(
         # the width must stay set until the query TERMINATES: the
         # micro-batch thread reads spark.sql.shuffle.partitions
         # asynchronously after start() returns
-        with sized_stream_shuffle(
-            stream_df.sparkSession, source_dirs, python_stateful
-        ):
+        with sized_stream_shuffle(stream_df, source_dirs):
             q = (
                 stream_df.writeStream.format("memory")
                 .queryName(name)

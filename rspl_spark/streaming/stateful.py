@@ -1,23 +1,35 @@
 """Keyed stateful Mealy-machine template for Structured Streaming.
 
-Runs ANY DSL StreamProcessor term per key across micro-batches: the term's
-continuation (a closure tree) is cloudpickled into GroupState between
-batches — the direct Spark analog of the reference's event-driven FSM
-pattern (tests/events.rs:32-55, states-as-continuations), where the
-evaluating thread's blocking ``tail()`` becomes "wait for the next
-micro-batch" (SURVEY.md §3 entry point 2).
+Every keyed streaming operator in ``rspl_spark.streaming`` is a keyed
+Mealy machine: state × a key's micro-batch rows → state × output rows —
+the Spark analog of the reference's event-driven FSM pattern
+(tests/events.rs:32-55, states-as-continuations), where the evaluating
+thread's blocking ``tail()`` becomes "wait for the next micro-batch"
+(SURVEY.md §3 entry point 2).
 
-Scale model: one FSM per key, all keys in parallel; state store holds one
-pickled continuation per key (bounded: a term is a finite closure tree).
-A single logical stream = one key, correct but serial — the trade rspl's
-total order forces (SURVEY.md §7 hard parts).
+:func:`keyed_state_stream` is the one runner of those machines on
+``applyInPandasWithState``. It owns the micro-batch protocol: read or
+initialise the state (:func:`state_codec`), order the key's rows once
+(:func:`ordered_batch`), write or remove the state, arm the
+processing-time timeout, build the output frame (:func:`emit_frame`).
+An operator supplies only its step function, its state and output
+schemas and, where it has one, its timeout handler. :func:`run_mealy_stream` runs ANY DSL StreamProcessor
+term on it, the term's continuation (a closure tree) cloudpickled into
+the state between batches; :func:`run_mealy_stream_tws` runs the same
+semantics on ``transformWithStateInPandas`` with the same ordering and
+key helpers.
+
+Scale model: one FSM per key, all keys in parallel; the state store
+holds one state row per key. A single logical stream = one key,
+correct but serial — the trade rspl's total order forces (SURVEY.md §7
+hard parts).
 """
 
 from __future__ import annotations
 
 import pickle
 
-from collections.abc import Callable, Iterable
+from collections.abc import Callable, Iterable, Sequence
 from typing import Any
 
 from pyspark import cloudpickle
@@ -34,6 +46,144 @@ from pyspark.sql.types import (
 from rspl_spark.dsl.core import StreamProcessor, run_prefix
 
 STATE_SCHEMA = StructType([StructField("sp", BinaryType())])
+
+# (key, state, key's ordered micro-batch rows, processing time ms) ->
+# (new state or None to remove it, output rows as tuples)
+Step = Callable[[Any, Any, pd.DataFrame, int], tuple[Any, list]]
+
+
+def state_codec(schema: StructType) -> tuple[Callable, Callable]:
+    """(decode, encode) between a state value and its stored row — the
+    one place state meets its stored form. A schema of one binary column
+    holds a cloudpickled Python value (stdlib pickle cannot serialize
+    continuations, which are closure trees); any other schema's row is
+    a plain tuple of typed fields."""
+    if len(schema) == 1 and isinstance(schema[0].dataType, BinaryType):
+        return (lambda row: pickle.loads(row[0])), (lambda st: (cloudpickle.dumps(st),))
+    return tuple, tuple
+
+
+def ordered_batch(
+    frames: Iterable[pd.DataFrame],
+    order: Sequence[str] = (),
+    notna: Sequence[str] = (),
+) -> pd.DataFrame | None:
+    """One key's micro-batch as one frame: rows NULL in any ``notna``
+    column dropped, then stably sorted by ``order``. None when the key
+    has no rows.
+
+    Arrow delivers a key's micro-batch as several chunks (split at
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``) with no ordering
+    guarantee BETWEEN chunks — sorting each chunk alone would silently
+    break the total order every order-sensitive state (a continuation,
+    a running sum, a first-seen keeper, an oldest-first cap) relies on
+    for keys spanning >1 chunk. So: materialize, concat, sort once."""
+    chunks = [f for f in frames if len(f)]
+    if not chunks:
+        return None
+    batch = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    if notna:
+        # per-column masks: a frame-wide notna().all(axis=1) carries a
+        # fixed cost that dominates at one call per key per micro-batch
+        keep = batch[notna[0]].notna()
+        for c in notna[1:]:
+            keep &= batch[c].notna()
+        batch = batch[keep]
+    if order:
+        batch = batch.sort_values(list(order), kind="mergesort")
+    return batch
+
+
+def emit_frame(
+    cols: list[str],
+    rows: list,
+    key_col: str | None = None,
+    key: Any = None,
+    ts_cols: Sequence[str] = (),
+) -> pd.DataFrame:
+    """Output rows (tuples in ``cols`` order) as one frame; ``ts_cols``
+    carry epoch nanoseconds and become timestamps, and ``key_col``, when
+    given, leads with the key as a string — a NULL key stays NULL
+    (``str(None)`` would emit the string ``"None"``)."""
+    # column lists, not pd.DataFrame(rows) plus in-place column
+    # conversion: the frame's fixed cost is paid per key per micro-batch
+    data = dict(zip(cols, map(list, zip(*rows))))
+    for c in ts_cols:
+        data[c] = pd.to_datetime(data[c], unit="ns")
+    if key_col is not None:
+        data = {key_col: [None if key is None else str(key)] * len(rows), **data}
+    return pd.DataFrame(data)
+
+
+def keyed_state_stream(
+    df: DataFrame,
+    key_col: str,
+    step: Step,
+    state_schema: StructType,
+    init: Callable[[], Any],
+    out: list[tuple[str, str]],
+    order: Sequence[str] = (),
+    notna: Sequence[str] = (),
+    key_out: str | None = None,
+    timeout_ms: int | None = None,
+    on_timeout: Callable[[Any, Any], tuple[Any, list]] | None = None,
+) -> DataFrame:
+    """Run ``step`` per ``key_col`` group across micro-batches (append
+    mode) — the one ``applyInPandasWithState`` call of the library.
+
+    - State: the stored row decoded by :func:`state_codec`, or
+      ``init()`` for a new key. A step returning None removes the
+      state.
+    - Input: :func:`ordered_batch` of the key's chunks (``notna``,
+      ``order``). ``step(key, state, batch, now_ms)`` gets the key's
+      value and the batch's processing time (0 without a timeout).
+    - Timeout: with ``timeout_ms``, every written state re-arms a
+      processing-time timeout, and an expired key calls
+      ``on_timeout(key, state)`` instead of ``step``.
+    - Output: ``out`` lists the step's row fields as (name, DDL type);
+      timestamp fields travel as epoch ns. ``key_out`` prepends the key
+      as a string column of that name.
+    """
+    decode, encode = state_codec(state_schema)
+    cols = [name for name, _ in out]
+    ts_cols = [name for name, t in out if t == "timestamp"]
+    fields = ([(key_out, "string")] if key_out is not None else []) + out
+    out_schema = ", ".join(f"`{name}` {t}" for name, t in fields)
+
+    def proc(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
+        if state.exists:
+            st = decode(state.get)
+        else:
+            st = init()
+        if on_timeout is not None and state.hasTimedOut:
+            st, rows = on_timeout(key[0], st)
+        else:
+            batch = ordered_batch(pdfs, order, notna)
+            if batch is None:
+                return
+            now = state.getCurrentProcessingTimeMs() if timeout_ms is not None else 0
+            st, rows = step(key[0], st, batch, now)
+        if st is None:
+            if state.exists:
+                state.remove()
+        else:
+            state.update(encode(st))
+            if timeout_ms is not None:
+                state.setTimeoutDuration(timeout_ms)
+        if rows:
+            yield emit_frame(cols, rows, key_out, key[0], ts_cols)
+
+    return df.groupBy(key_col).applyInPandasWithState(
+        proc,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=(
+            GroupStateTimeout.ProcessingTimeTimeout
+            if timeout_ms is not None
+            else GroupStateTimeout.NoTimeout
+        ),
+    )
 
 
 def run_mealy_stream_tws(
@@ -100,23 +250,23 @@ def run_mealy_stream_tws(
     use_timers = timeout_ms is not None or timeout_capability is not None
     out_schema = f"`{key_col}` string, `{seq_col}` long, `{value_col}` {out_type}"
 
+    decode, encode = state_codec(STATE_SCHEMA)
+
     class MealyProcessor(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._handle = handle
             # state = (continuation term, #outputs so far, worker_free ms)
-            self._state = handle.getValueState(
-                "mealy", StructType([StructField("sp", BinaryType())])
-            )
+            self._state = handle.getValueState("mealy", STATE_SCHEMA)
 
         def _load(self):
             # one state-server round trip: get() is None for a new key
             row = self._state.get()
             if row is not None:
-                return pickle.loads(row[0])
+                return decode(row)
             return sp_factory(), 0, 0
 
         def _save(self, sp, n_out, worker_free) -> None:
-            self._state.update((cloudpickle.dumps((sp, n_out, worker_free)),))
+            self._state.update(encode((sp, n_out, worker_free)))
 
         def _rearm_idle(self, now_ms: int) -> None:
             for t in list(self._handle.listTimers()):
@@ -143,25 +293,18 @@ def run_mealy_stream_tws(
 
         def _emit(self, key, outs, n_out):
             if outs:
-                yield pd.DataFrame(
-                    {
-                        key_col: [str(key[0])] * len(outs),
-                        seq_col: range(n_out, n_out + len(outs)),
-                        value_col: outs,
-                    }
+                yield emit_frame(
+                    [seq_col, value_col],
+                    list(zip(range(n_out, n_out + len(outs)), outs)),
+                    key_col,
+                    key[0],
                 )
 
         def handleInputRows(self, key, rows, timerValues):
             sp, n_out, worker_free = self._load()
-            # A key's micro-batch may arrive as SEVERAL Arrow chunks
-            # (split at spark.sql.execution.arrow.maxRecordsPerBatch) in
-            # no guaranteed order — materialize and sort ONCE so the FSM
-            # sees the total seq order the reference semantics require.
-            chunks = [pdf for pdf in rows if len(pdf)]
+            batch = ordered_batch(rows, [seq_col])
             outs_all = []
-            if chunks:
-                batch = pd.concat(chunks, ignore_index=True)
-                batch = batch.sort_values(seq_col, kind="mergesort")
+            if batch is not None:
                 outs_all, sp = run_prefix(sp, batch[value_col].tolist())
             now = timerValues.getCurrentProcessingTimeInMs()
             if timeout_capability is not None:
@@ -217,54 +360,27 @@ def run_mealy_stream(
     sentinel is fed to its FSM exactly as if it had arrived on the input
     stream, and the timeout re-arms (SURVEY.md §2.1 "Feedback loop").
     """
-    out_schema = f"`{key_col}` string, `{seq_col}` long, `{value_col}` {out_type}"
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
 
-    def proc(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.exists:
-            sp, n_out = pickle.loads(state.get[0])
-        else:
-            sp, n_out = sp_factory(), 0
-        outs_all = []
-        if timeout_ms is not None and state.hasTimedOut:
-            # Feedback: the armed timeout fires as an input event.
-            outs, sp = run_prefix(sp, [timeout_event])
-            outs_all.extend(outs)
-        else:
-            # Arrow delivers a key's micro-batch as multiple chunks
-            # (split at arrow maxRecordsPerBatch) with no ordering
-            # guarantee BETWEEN chunks — sorting each chunk alone would
-            # silently break the total-order contract for keys spanning
-            # >1 chunk. Materialize, concat, sort once.
-            chunks = [pdf for pdf in pdfs if len(pdf)]
-            if chunks:
-                batch = pd.concat(chunks, ignore_index=True)
-                batch = batch.sort_values(seq_col, kind="mergesort")
-                outs_all, sp = run_prefix(sp, batch[value_col].tolist())
-        # cloudpickle: continuations are closure trees, stdlib pickle
-        # cannot serialize them.
-        state.update((cloudpickle.dumps((sp, n_out + len(outs_all))),))
-        if timeout_ms is not None:
-            state.setTimeoutDuration(timeout_ms)
-        if outs_all:
-            yield pd.DataFrame(
-                {
-                    key_col: [str(key[0])] * len(outs_all),
-                    seq_col: range(n_out, n_out + len(outs_all)),
-                    value_col: outs_all,
-                }
-            )
+    def advance(st, values):
+        sp, n_out = st
+        outs, sp = run_prefix(sp, values)
+        return (sp, n_out + len(outs)), list(zip(range(n_out, n_out + len(outs)), outs))
 
-    return stream_df.groupBy(key_col).applyInPandasWithState(
-        proc,
-        outputStructType=out_schema,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return keyed_state_stream(
+        stream_df,
+        key_col,
+        lambda _key, st, batch, _now: advance(st, batch[value_col].tolist()),
+        STATE_SCHEMA,
+        lambda: (sp_factory(), 0),
+        [(seq_col, "long"), (value_col, out_type)],
+        order=[seq_col],
+        key_out=key_col,
+        timeout_ms=timeout_ms,
+        # Feedback: the armed timeout fires as an input event.
+        on_timeout=(
+            None if timeout_ms is None
+            else lambda _key, st: advance(st, [timeout_event])
+        ),
     )
 
 

@@ -6,10 +6,11 @@ This is the module's own motivating story closed end-to-end: the
 reference's paced combinators (src/combinators.rs, the hics
 demand-driven meter) consume a DENSE tick stream; telemetry arrives
 sparse AND unbounded. The batch operators rebuild the dense grid over
-a finite frame; these rebuild it per micro-batch with
-``applyInPandasWithState`` keyed state — the same
-states-as-continuations discipline as ``streaming_funnel``
-(tests/events.rs:32-55).
+a finite frame; these rebuild it per micro-batch as step functions on
+the keyed-state template (``streaming/stateful.py::keyed_state_stream``)
+— the same states-as-continuations discipline as ``streaming_funnel``
+(tests/events.rs:32-55). ``ewma_stream`` and ``rolling_median_stream``
+are one trailing-window step with a different window aggregate.
 
 Semantics vs batch (asserted in tests/test_timeseries_streaming.py):
 
@@ -41,7 +42,6 @@ from decimal import ROUND_HALF_UP, Decimal
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -51,10 +51,19 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from rspl_spark.streaming.stateful import keyed_state_stream
+
 _GAPFILL_STATE = StructType(
     [
         StructField("last_ns", LongType()),
         StructField("last_vals", ArrayType(DoubleType())),
+    ]
+)
+
+_WINDOW_STATE = StructType(
+    [
+        StructField("last_ns", LongType()),
+        StructField("tail", ArrayType(DoubleType())),
     ]
 )
 
@@ -79,6 +88,32 @@ def _round6(x: float) -> float:
     if not math.isfinite(x) or abs(x) >= 1e16:
         return x
     return float(Decimal(repr(x)).quantize(_SIX_DP, rounding=ROUND_HALF_UP))
+
+
+def _ewma(slots: list[float | None]) -> float | None:
+    # the frame's non-null values, oldest→newest — exactly what the
+    # batch collect_list yields over the ROWS frame
+    xs = [x for x in slots if x is not None]
+    n = len(xs)
+    if n == 0:
+        return None
+    num = 0.0
+    for i, x in enumerate(xs):  # same fold order as F.aggregate
+        num += x * 2.0 ** -(n - 1 - i)
+    return _round6(num / (2.0 - 2.0 ** -(n - 1)))
+
+
+def _median(slots: list[float | None]) -> float | None:
+    xs = [x for x in slots if x is not None]
+    n = len(xs)
+    if n == 0:
+        return None
+    s = sorted(xs)
+    # continuous percentile at q=0.5: pos = (n-1)*0.5
+    lo = (n - 1) // 2
+    if n % 2:
+        return _round6(s[lo])
+    return _round6(s[lo] + (s[lo + 1] - s[lo]) * 0.5)
 
 
 def gapfill_stream(
@@ -121,92 +156,107 @@ def gapfill_stream(
     if step_ns <= 0:
         raise ValueError("gapfill_stream: step must be positive")
     vcols = list(fills)
-    out_fields = [f"`{key_col}` string", f"`{time_col}` timestamp"]
-    out_fields += [f"`{c}` double" for c in vcols]
-    if mark_gaps:
-        out_fields.append("`is_gap` boolean")
-    out_schema = ", ".join(out_fields)
+    # the is_gap field, when marked
+    gap, observed = ((True,), (False,)) if mark_gaps else ((), ())
 
-    def proc(key, pdfs, state: GroupState):
-        if state.exists:
-            last_ns, last_vals = state.get
-            last_vals = list(last_vals)
-        else:
-            last_ns, last_vals = None, None
-        chunks = [p for p in pdfs if len(p)]
-        out_t: list[int] = []
-        out_v: list[list[float | None]] = []
-        out_gap: list[bool] = []
+    def _fill_row(prev: list[float | None]) -> list[float | None]:
+        row: list[float | None] = []
+        for c, v in zip(vcols, prev):
+            m = fills[c]
+            row.append(v if m == "locf" else 0.0 if m == "zero" else None)
+        return row
 
-        def _fill_row(prev: list[float | None]) -> list[float | None]:
-            row: list[float | None] = []
-            for c, v in zip(vcols, prev):
-                m = fills[c]
-                row.append(v if m == "locf" else 0.0 if m == "zero" else None)
-            return row
+    def fill_step(key, st, batch, _now):
+        last_ns, last_vals = st
+        last_vals = None if last_vals is None else list(last_vals)
+        out = []
+        ts_ns = batch[time_col].astype("int64").tolist()
+        vals = [
+            [None if pd.isna(v) else float(v) for v in batch[c].tolist()]
+            for c in vcols
+        ]
+        for i, t in enumerate(ts_ns):
+            if last_ns is not None and t <= last_ns:
+                continue  # late/duplicate arrival: documented drop
+            if last_ns is not None:
+                if (
+                    max_gap_buckets is not None
+                    and (t - last_ns) // step_ns > max_gap_buckets
+                ):
+                    raise ValueError(
+                        "gapfill_stream: gap wider than "
+                        f"max_gap_buckets={max_gap_buckets} buckets at "
+                        f"{pd.Timestamp(t)} (key {key!r})"
+                    )
+                g = last_ns + step_ns
+                while g < t:
+                    out.append((g, *_fill_row(last_vals), *gap))
+                    g += step_ns
+            row = [vals[j][i] for j in range(len(vcols))]
+            out.append((t, *row, *observed))
+            last_ns, last_vals = t, row
+        # a batch of only NULL-timestamp rows leaves no frontier: the
+        # state stays ABSENT rather than storing (None, None)
+        return (None if last_ns is None else (last_ns, last_vals)), out
 
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True)
-            # NaT poisons the frontier (int64 min) — drop, like the
-            # batch window drops NULL order keys
-            batch = batch[batch[time_col].notna()].sort_values(
-                time_col, kind="mergesort"
-            )
-            ts_ns = batch[time_col].astype("int64").tolist()
-            vals = [
-                [None if pd.isna(v) else float(v) for v in batch[c].tolist()]
-                for c in vcols
-            ]
-            for i, t in enumerate(ts_ns):
-                if last_ns is not None and t <= last_ns:
-                    continue  # late/duplicate arrival: documented drop
-                if last_ns is not None:
-                    if (
-                        max_gap_buckets is not None
-                        and (t - last_ns) // step_ns > max_gap_buckets
-                    ):
-                        raise ValueError(
-                            "gapfill_stream: gap wider than "
-                            f"max_gap_buckets={max_gap_buckets} buckets at "
-                            f"{pd.Timestamp(t)} (key {key[0]!r})"
-                        )
-                    g = last_ns + step_ns
-                    while g < t:
-                        out_t.append(g)
-                        out_v.append(_fill_row(last_vals))
-                        out_gap.append(True)
-                        g += step_ns
-                row = [vals[j][i] for j in range(len(vcols))]
-                out_t.append(t)
-                out_v.append(row)
-                out_gap.append(False)
-                last_ns, last_vals = t, row
-        # a batch of only NULL-timestamp rows leaves no frontier: keep
-        # the state ABSENT rather than storing (None, None), which the
-        # next batch's list(last_vals) would crash on
-        if last_ns is not None:
-            state.update((last_ns, last_vals))
-        if out_t:
-            data = {
-                key_col: [str(key[0])] * len(out_t),
-                time_col: pd.to_datetime(out_t, unit="ns"),
-            }
-            for j, c in enumerate(vcols):
-                data[c] = [r[j] for r in out_v]
-            if mark_gaps:
-                data["is_gap"] = out_gap
-            yield pd.DataFrame(data)
+    return keyed_state_stream(
+        obs.select(key_col, time_col, *vcols),
+        key_col,
+        fill_step,
+        _GAPFILL_STATE,
+        lambda: (None, None),
+        [(time_col, "timestamp"), *[(c, "double") for c in vcols]]
+        + ([("is_gap", "boolean")] if mark_gaps else []),
+        order=[time_col],
+        # NaT poisons the frontier (int64 min) — drop, like the batch
+        # window drops NULL order keys
+        notna=[time_col],
+        key_out=key_col,
+    )
 
-    return (
-        obs.select(key_col, time_col, *vcols)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            proc,
-            outputStructType=out_schema,
-            stateStructType=_GAPFILL_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+
+def _trailing_window_stream(
+    obs: DataFrame,
+    key_col: str,
+    time_col: str,
+    value_col: str,
+    window: int,
+    out_col: str,
+    agg,
+) -> DataFrame:
+    """One output row per in-order observation: ``agg`` of the trailing
+    ``window`` frame SLOTS (nullable doubles, oldest→newest). Every row —
+    NULL value included — takes a slot, the batch ROWS(-window+1, 0)
+    semantics. NULL timestamps and late rows (at or before the key's
+    last bucket) are dropped. State per key: last bucket + ≤window
+    nullable doubles."""
+
+    def step(_key, st, batch, _now):
+        last_ns, tail = st[0], list(st[1])
+        out = []
+        for t, x in zip(
+            batch[time_col].astype("int64").tolist(), batch[value_col].tolist()
+        ):
+            if last_ns is not None and t <= last_ns:
+                continue
+            v = None if pd.isna(x) else float(x)
+            tail.append(v)
+            if len(tail) > window:
+                tail = tail[-window:]
+            out.append((t, v, agg(tail)))
+            last_ns = t
+        return (last_ns, tail), out
+
+    return keyed_state_stream(
+        obs.select(key_col, time_col, value_col),
+        key_col,
+        step,
+        _WINDOW_STATE,
+        lambda: (None, []),
+        [(time_col, "timestamp"), (value_col, "double"), (out_col, "double")],
+        order=[time_col],
+        notna=[time_col],
+        key_out=key_col,
     )
 
 
@@ -237,80 +287,8 @@ def ewma_stream(
     """
     if not 1 <= window <= 52:
         raise ValueError("ewma_stream: window must be in [1, 52]")
-    out_schema = (
-        f"`{key_col}` string, `{time_col}` timestamp,"
-        f" `{value_col}` double, `{out_col}` double"
-    )
-    state_schema = StructType(
-        [
-            StructField("last_ns", LongType()),
-            StructField("tail", ArrayType(DoubleType())),
-        ]
-    )
-
-    def _ewma(slots: list[float | None]) -> float | None:
-        # the frame's non-null values, oldest→newest — exactly what the
-        # batch collect_list yields over the ROWS frame
-        xs = [x for x in slots if x is not None]
-        n = len(xs)
-        if n == 0:
-            return None
-        num = 0.0
-        for i, x in enumerate(xs):  # same fold order as F.aggregate
-            num += x * 2.0 ** -(n - 1 - i)
-        return _round6(num / (2.0 - 2.0 ** -(n - 1)))
-
-    def proc(key, pdfs, state: GroupState):
-        if state.exists:
-            last_ns, tail = state.get
-            tail = list(tail)
-        else:
-            last_ns, tail = None, []
-        chunks = [p for p in pdfs if len(p)]
-        out_t: list[int] = []
-        out_x: list[float | None] = []
-        out_e: list[float | None] = []
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True)
-            batch = batch[batch[time_col].notna()].sort_values(
-                time_col, kind="mergesort"
-            )
-            ts_ns = batch[time_col].astype("int64").tolist()
-            xs = batch[value_col].tolist()
-            for t, x in zip(ts_ns, xs):
-                if last_ns is not None and t <= last_ns:
-                    continue
-                # every row — NULL included — takes a frame SLOT, the
-                # batch ROWS(-window+1, 0) semantics
-                v = None if pd.isna(x) else float(x)
-                tail.append(v)
-                if len(tail) > window:
-                    tail = tail[-window:]
-                out_t.append(t)
-                out_x.append(v)
-                out_e.append(_ewma(tail))
-                last_ns = t
-        state.update((last_ns, tail))
-        if out_t:
-            yield pd.DataFrame(
-                {
-                    key_col: [str(key[0])] * len(out_t),
-                    time_col: pd.to_datetime(out_t, unit="ns"),
-                    value_col: out_x,
-                    out_col: out_e,
-                }
-            )
-
-    return (
-        obs.select(key_col, time_col, value_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            proc,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _trailing_window_stream(
+        obs, key_col, time_col, value_col, window, out_col, _ewma
     )
 
 
@@ -337,80 +315,8 @@ def rolling_median_stream(
     """
     if n_buckets < 1:
         raise ValueError("rolling_median_stream: n_buckets must be >= 1")
-    out_schema = (
-        f"`{key_col}` string, `{time_col}` timestamp,"
-        f" `{value_col}` double, `{out_col}` double"
-    )
-    state_schema = StructType(
-        [
-            StructField("last_ns", LongType()),
-            StructField("tail", ArrayType(DoubleType())),
-        ]
-    )
-
-    def _median(slots: list[float | None]) -> float | None:
-        xs = [x for x in slots if x is not None]
-        n = len(xs)
-        if n == 0:
-            return None
-        s = sorted(xs)
-        # continuous percentile at q=0.5: pos = (n-1)*0.5
-        lo = (n - 1) // 2
-        if n % 2:
-            return _round6(s[lo])
-        return _round6(s[lo] + (s[lo + 1] - s[lo]) * 0.5)
-
-    def proc(key, pdfs, state: GroupState):
-        if state.exists:
-            last_ns, tail = state.get
-            tail = list(tail)
-        else:
-            last_ns, tail = None, []
-        chunks = [p for p in pdfs if len(p)]
-        out_t: list[int] = []
-        out_x: list[float | None] = []
-        out_m: list[float | None] = []
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True)
-            batch = batch[batch[time_col].notna()].sort_values(
-                time_col, kind="mergesort"
-            )
-            for t, x in zip(
-                batch[time_col].astype("int64").tolist(),
-                batch[value_col].tolist(),
-            ):
-                if last_ns is not None and t <= last_ns:
-                    continue
-                # every row — NULL included — takes a frame slot
-                v = None if pd.isna(x) else float(x)
-                tail.append(v)
-                if len(tail) > n_buckets:
-                    tail = tail[-n_buckets:]
-                out_t.append(t)
-                out_x.append(v)
-                out_m.append(_median(tail))
-                last_ns = t
-        state.update((last_ns, tail))
-        if out_t:
-            yield pd.DataFrame(
-                {
-                    key_col: [str(key[0])] * len(out_t),
-                    time_col: pd.to_datetime(out_t, unit="ns"),
-                    value_col: out_x,
-                    out_col: out_m,
-                }
-            )
-
-    return (
-        obs.select(key_col, time_col, value_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            proc,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _trailing_window_stream(
+        obs, key_col, time_col, value_col, n_buckets, out_col, _median
     )
 
 
@@ -445,10 +351,6 @@ def transition_pairs_stream(
     columns must be integral, float, string, or timestamp typed.
     """
     tiebreaks = list(tiebreak_cols or [])
-    out_schema = (
-        f"`{key_col}` string, `{ts_col}` timestamp,"
-        " `prev_state` string, `state` string"
-    )
     # state carries the tiebreak tuple in its NATIVE type domain (a
     # string cast would misorder numerics: "10" < "9")
     import datetime as _dt
@@ -503,81 +405,56 @@ def transition_pairs_stream(
     )
     n_tb = len(tiebreaks)
 
-    def proc(key, pdfs, state: GroupState):
-        if state.exists:
-            st = state.get
-            last_ns, last_state = st[0], st[1]
-            last_tb = tuple(st[2:])
-        else:
-            last_ns, last_state = None, None
-            last_tb = (None,) * n_tb
-        chunks = [p for p in pdfs if len(p)]
-        out_t: list[int] = []
-        out_p: list[str] = []
-        out_s: list[str] = []
-        if chunks:
-            batch = pd.concat(chunks, ignore_index=True)
-            # NULL states are not states (batch transition_matrix drops
-            # them the same way, so neighbors become adjacent)
-            batch = batch[
-                batch[ts_col].notna() & batch[state_col].notna()
-            ].sort_values([ts_col, *tiebreaks], kind="mergesort")
-            ts_ns = batch[ts_col].astype("int64").tolist()
-            sts = batch[state_col].tolist()
-            tb_rows = (
-                zip(
-                    *(
-                        [
-                            None if pd.isna(v) else conv(v)
-                            for v in batch[c].tolist()
-                        ]
-                        for c, conv in zip(tiebreaks, tb_convs)
-                    )
+    def step(_key, st, batch, _now):
+        last_ns, last_state, last_tb = st[0], st[1], tuple(st[2:])
+        out = []
+        ts_ns = batch[ts_col].astype("int64").tolist()
+        sts = batch[state_col].tolist()
+        tb_rows = (
+            zip(
+                *(
+                    [
+                        None if pd.isna(v) else conv(v)
+                        for v in batch[c].tolist()
+                    ]
+                    for c, conv in zip(tiebreaks, tb_convs)
                 )
-                if n_tb
-                else None
             )
-            for t, s in zip(ts_ns, sts):
-                tb = next(tb_rows) if n_tb else ()
-                if last_ns is not None and t < last_ns:
-                    continue  # late arrival: documented drop
-                if (
-                    n_tb
-                    and last_ns is not None
-                    and t == last_ns
-                    and None not in tb
-                    and None not in last_tb
-                    and tb <= last_tb
-                ):
-                    # at-or-before the stored position at the frontier
-                    # ts: re-delivery or out-of-order tie — drop
-                    continue
-                s = None if pd.isna(s) else str(s)
-                if last_state is not None:
-                    out_t.append(t)
-                    out_p.append(last_state)
-                    out_s.append(s)
-                last_ns, last_state = t, s
-                last_tb = tb if n_tb else last_tb
-        state.update((last_ns, last_state, *last_tb))
-        if out_t:
-            yield pd.DataFrame(
-                {
-                    key_col: [str(key[0])] * len(out_t),
-                    ts_col: pd.to_datetime(out_t, unit="ns"),
-                    "prev_state": out_p,
-                    "state": out_s,
-                }
-            )
-
-    return (
-        events.select(key_col, ts_col, state_col, *tiebreaks)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            proc,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+            if n_tb
+            else None
         )
+        for t, s in zip(ts_ns, sts):
+            tb = next(tb_rows) if n_tb else ()
+            if last_ns is not None and t < last_ns:
+                continue  # late arrival: documented drop
+            if (
+                n_tb
+                and last_ns is not None
+                and t == last_ns
+                and None not in tb
+                and None not in last_tb
+                and tb <= last_tb
+            ):
+                # at-or-before the stored position at the frontier
+                # ts: re-delivery or out-of-order tie — drop
+                continue
+            s = None if pd.isna(s) else str(s)
+            if last_state is not None:
+                out.append((t, last_state, s))
+            last_ns, last_state = t, s
+            last_tb = tb if n_tb else last_tb
+        return (last_ns, last_state, *last_tb), out
+
+    return keyed_state_stream(
+        events.select(key_col, ts_col, state_col, *tiebreaks),
+        key_col,
+        step,
+        state_schema,
+        lambda: (None, None, *((None,) * n_tb)),
+        [(ts_col, "timestamp"), ("prev_state", "string"), ("state", "string")],
+        order=[ts_col, *tiebreaks],
+        # NULL states are not states (batch transition_matrix drops
+        # them the same way, so neighbors become adjacent)
+        notna=[ts_col, state_col],
+        key_out=key_col,
     )

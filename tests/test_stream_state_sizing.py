@@ -17,7 +17,9 @@ import os
 
 import pytest
 
+from rspl_spark.dsl import map_sp
 from rspl_spark.session import grouped_map_parallelism
+from rspl_spark.streaming import run_mealy_stream
 from rspl_spark.streaming.sources import (
     _tree_bytes,
     sized_stream_shuffle,
@@ -64,7 +66,14 @@ def test_python_stateful_floors_at_grouped_map_parallelism(spark, tmp_path):
     d.mkdir()
     (d / "part-00000").write_bytes(b"x" * 100)  # tiny: byte width = 1
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    with sized_stream_shuffle(spark, [str(d)], python_stateful=True):
+    keyed = run_mealy_stream(
+        spark.readStream.format("rate").load().selectExpr(
+            "'k' AS key", "value AS seq", "value"
+        ),
+        lambda: map_sp(lambda v: v),
+        "long",
+    )
+    with sized_stream_shuffle(keyed, [str(d)]):
         got = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert got == max(1, grouped_map_parallelism(spark))
     assert spark.conf.get("spark.sql.shuffle.partitions") == old
@@ -76,7 +85,7 @@ def test_conf_restored_after_sized_scope_even_on_error(spark, tmp_path):
     (d / "part-00000").write_bytes(b"x" * 100)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     with pytest.raises(RuntimeError):
-        with sized_stream_shuffle(spark, [str(d)]):
+        with sized_stream_shuffle(spark.range(1), [str(d)]):
             assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
             raise RuntimeError("stream blew up")
     assert spark.conf.get("spark.sql.shuffle.partitions") == old
@@ -84,7 +93,7 @@ def test_conf_restored_after_sized_scope_even_on_error(spark, tmp_path):
 
 def test_none_source_dirs_is_a_noop(spark):
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    with sized_stream_shuffle(spark, None) as n:
+    with sized_stream_shuffle(spark.range(1), None) as n:
         assert n is None
         assert spark.conf.get("spark.sql.shuffle.partitions") == old
 
@@ -109,12 +118,12 @@ def test_concurrent_sized_scopes_serialize(spark, tmp_path):
     widths_inside: list[str] = []
 
     def first():
-        with sized_stream_shuffle(spark, [str(d)]):
+        with sized_stream_shuffle(spark.range(1), [str(d)]):
             entered.set()
             release.wait(timeout=10)
 
     def second():
-        with sized_stream_shuffle(spark, [str(d)]):
+        with sized_stream_shuffle(spark.range(1), [str(d)]):
             widths_inside.append(spark.conf.get("spark.sql.shuffle.partitions"))
         second_done.set()
 
