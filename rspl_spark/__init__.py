@@ -32,6 +32,7 @@ def _register_worker_safe_pickling() -> None:
     try:
         from pyspark import cloudpickle
 
+        from rspl_spark import pyworker
         from rspl_spark.dsl import combinators, core, interpreter
         from rspl_spark.operators import multimodal, similarity
         from rspl_spark.streaming import llm as streaming_llm
@@ -43,6 +44,7 @@ def _register_worker_safe_pickling() -> None:
             combinators,
             interpreter,
             multimodal,
+            pyworker,
             similarity,
             stateful,
             streaming_llm,

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DataType
 
 from rspl_spark.dsl.core import StreamProcessor, eval_sp
+from rspl_spark.pyworker import prepare_worker
 
 _SINGLE_KEY = "__rspl_key__"
 
@@ -91,6 +92,7 @@ def interpret_batch(
     safecheck = spark.conf.get("spark.sql.execution.pandas.convertToArrowArraySafely") == "true"
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        prepare_worker()
         import pandas as pd
 
         ser = GroupPandasUDFSerializer(timezone, safecheck, True, False)

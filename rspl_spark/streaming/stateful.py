@@ -44,6 +44,7 @@ from pyspark.sql.types import (
 )
 
 from rspl_spark.dsl.core import StreamProcessor, run_prefix
+from rspl_spark.pyworker import prepare_worker
 
 STATE_SCHEMA = StructType([StructField("sp", BinaryType())])
 
@@ -151,6 +152,7 @@ def keyed_state_stream(
     out_schema = ", ".join(f"`{name}` {t}" for name, t in fields)
 
     def proc(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
+        prepare_worker()
         if state.exists:
             st = decode(state.get)
         else:
@@ -254,6 +256,7 @@ def run_mealy_stream_tws(
 
     class MealyProcessor(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
+            prepare_worker()
             self._handle = handle
             # state = (continuation term, #outputs so far, worker_free ms)
             self._state = handle.getValueState("mealy", STATE_SCHEMA)
@@ -359,6 +362,9 @@ def run_mealy_stream(
     ``timeout_event``: when a key sees no input for the duration, the
     sentinel is fed to its FSM exactly as if it had arrived on the input
     stream, and the timeout re-arms (SURVEY.md §2.1 "Feedback loop").
+    Because every timeout re-arms, a query with ``timeout_ms`` keeps
+    running no-data batches and never reaches ``availableNow``
+    termination: poll its sink and stop the query.
     """
 
     def advance(st, values):

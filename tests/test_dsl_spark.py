@@ -339,3 +339,19 @@ def test_interpreter_string_and_struct_out_types(spark):
         {"name": "X", "n": 1},
         {"name": "Y", "n": 2},
     ]
+
+
+def test_interpreter_prepares_python_worker(spark):
+    """Every interpret_batch task runs with the stat-keyed zipimport
+    invalidation of ``rspl_spark.pyworker`` installed (a no-op, so no
+    marker, where zipimport is already lazy)."""
+    import zipimport
+
+    from rspl_spark.pyworker import MARKER
+
+    want = not hasattr(zipimport.zipimporter, "_get_files")
+    sp = map_sp(lambda _v: hasattr(zipimport.zipimporter.invalidate_caches, MARKER))
+    rows = [(k, i, i) for k in range(16) for i in range(3)]
+    df = spark.createDataFrame(rows, "key long, seq long, value long")
+    got = [r["value"] for r in interpret_batch(sp, df, "boolean", key_col="key").collect()]
+    assert got == [want] * len(rows)

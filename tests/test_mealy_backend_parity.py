@@ -114,6 +114,23 @@ def test_keyed_filter_map_composition(spark, backend):
     assert got == want  # a: [200, 600], b: [400, 800]
 
 
+@pytest.mark.skipif(not TWS_AVAILABLE, reason="transformWithStateInPandas needs google.protobuf")
+def test_tws_prepares_python_worker(spark):
+    """The TWS processor's init installs the stat-keyed zipimport
+    invalidation of ``rspl_spark.pyworker`` in its worker."""
+    import zipimport
+
+    from rspl_spark.pyworker import MARKER
+
+    want = not hasattr(zipimport.zipimporter, "_get_files")
+    sp = lambda: map_sp(lambda _v: hasattr(zipimport.zipimporter.invalidate_caches, MARKER))
+    chunks = [[("a", 0, 1), ("b", 0, 2)], [("a", 1, 3), ("c", 0, 4)]]
+    with tempfile.TemporaryDirectory() as tmp:
+        out = run_mealy_stream_tws(_chunked(spark, chunks, tmp), sp, "boolean")
+        run_to_memory_sink(out, "t_parity_prepared_tws")
+    assert [r["value"] for r in spark.table("t_parity_prepared_tws").collect()] == [want] * 4
+
+
 @pytest.mark.parametrize("backend", BACKENDS)
 def test_idle_timeout_feedback(spark, backend):
     """The timeout sentinel reaches the FSM on both backends. Expected

@@ -431,9 +431,18 @@ def test_fsm_timeout_feedback(spark):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        rows = spark.table("t_timeout").collect()
-        got = {(r["key"], r["value"]) for r in rows}
+        # Every timeout re-arms, so the availableNow query never ends:
+        # poll the sink for the walk, then stop the query.
+        try:
+            deadline = time.time() + 120
+            while time.time() < deadline:
+                rows = spark.table("t_timeout").collect()
+                got = {(r["key"], r["value"]) for r in rows}
+                if ("a", 99) in got:
+                    break
+                time.sleep(0.25)
+        finally:
+            q.stop()
         assert ("a", 99) in got  # walk emitted via timeout feedback
 
 

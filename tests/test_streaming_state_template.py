@@ -16,7 +16,7 @@ from __future__ import annotations
 import datetime as dt
 import tempfile
 
-from rspl_spark.dsl import eval_sp
+from rspl_spark.dsl import eval_sp, map_sp
 from rspl_spark.dsl.core import Get, Put
 from rspl_spark.streaming import (
     ewma_stream,
@@ -66,6 +66,23 @@ def test_mealy_stream_orders_chunks_and_keeps_null_key(spark):
     assert {r["key"] for r in rows} == {"a", None}
     assert got == {k: list(eval_sp(_swap(), vs)) for k, vs in per_key.items()}
     assert sorted(r["seq"] for r in rows if r["key"] is None) == [0, 1, 2, 3]
+
+
+def test_mealy_stream_prepares_python_worker(spark):
+    """The keyed-state template runs every key with the stat-keyed
+    zipimport invalidation of ``rspl_spark.pyworker`` installed."""
+    import zipimport
+
+    from rspl_spark.pyworker import MARKER
+
+    want = not hasattr(zipimport.zipimporter, "_get_files")
+    sp = map_sp(lambda _v: hasattr(zipimport.zipimporter.invalidate_caches, MARKER))
+    batches = [[("a", 0, 1), ("b", 0, 2)], [("a", 1, 3), ("c", 0, 4)]]
+    rows = _replay(
+        spark, batches, "key string, seq long, value long",
+        lambda s: run_mealy_stream(s, lambda: sp, "boolean"), "t_template_prepared",
+    )
+    assert [r["value"] for r in rows] == [want] * 4
 
 
 def _ewma(xs):
