@@ -37,6 +37,7 @@ from rspl_spark.dsl.combinators import (
     MapSP,
 )
 from rspl_spark.dsl.core import StreamProcessor
+from rspl_spark.plan_stats import shuffle_width
 
 
 class CompileError(Exception):
@@ -137,12 +138,7 @@ def with_dense_ordinal(df: DataFrame, seq_col: str, ord_col: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    spark = df.sparkSession
-    try:
-        # "auto" on AQE-managed platforms (e.g. Databricks) is not an int
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    except ValueError:
-        n_parts = max(df.rdd.getNumPartitions(), 1)
+    n_parts = shuffle_width(df.sparkSession)
     d = df.repartitionByRange(n_parts, F.col(seq_col)).localCheckpoint(eager=False)
     pid = F.spark_partition_id()
     counts = {

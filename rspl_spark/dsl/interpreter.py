@@ -72,7 +72,7 @@ def interpret_batch(
     from pyspark.sql.pandas.serializers import GroupPandasUDFSerializer
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from rspl_spark.session import grouped_map_parallelism
+    from rspl_spark.plan_stats import grouped_map_parallelism
 
     single = key_col is None
     work = df.withColumn(_SINGLE_KEY, F.lit(0)) if single else df
@@ -143,9 +143,8 @@ def interpret_batch(
     # exchange by shuffle-byte size, which is the wrong objective for a
     # Python-compute-bound stage (measured: 1M rows / 1000 keys landed
     # on 8 tasks of a 32-core box). An explicit repartition(N, key) is
-    # exempt from AQE coalescing. N comes from the shared cluster-safe
-    # helper (bare defaultParallelism under-pins with dynamic allocation
-    # and breaks on Spark Connect). A single-key stream is inherently
+    # exempt from AQE coalescing. N comes from the size policy's
+    # cluster-safe grouped-map width. A single-key stream is inherently
     # serial (the reference's totally-ordered semantics): one partition.
     n_parts = 1 if single else grouped_map_parallelism(spark)
     out = (

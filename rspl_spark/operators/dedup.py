@@ -426,17 +426,8 @@ def connected_components(
 # default stops at 262144 — ~4 MB of long pairs, broadcast-class bytes
 # even for string ids — rather than the largest measured win, because
 # the collect's byte size scales with id width the edge count cannot
-# see. spark.rspl.ccDriverMaxEdges overrides (0 disables).
+# see. 0 disables the fast path.
 _CC_DRIVER_MAX_EDGES = 262144
-
-
-def _cc_driver_max_edges(spark) -> int:
-    try:
-        return int(
-            spark.conf.get("spark.rspl.ccDriverMaxEdges", str(_CC_DRIVER_MAX_EDGES))
-        )
-    except Exception:
-        return _CC_DRIVER_MAX_EDGES
 
 
 def _cc_union_find_driver(e: DataFrame) -> DataFrame:
@@ -444,9 +435,9 @@ def _cc_union_find_driver(e: DataFrame) -> DataFrame:
     frame (columns u, v; no self-loops), computed driver-side by
     union-find with path compression. Returns the same (doc_id,
     cluster) rows the star fixpoint yields: one row per node appearing
-    in any edge, labeled with its component's minimum id. Raising
-    spark.rspl.ccDriverMaxEdges grows what this holds in driver memory
-    and the rows it pickles back through createDataFrame."""
+    in any edge, labeled with its component's minimum id. Driver memory
+    and the rows pickled back through createDataFrame grow with the
+    edge count, which ``_CC_DRIVER_MAX_EDGES`` bounds."""
     parent: dict = {}
 
     def find(x):
@@ -534,14 +525,14 @@ def connected_components_star(
     # orders ids with Python's `<`, which matches Spark's ordering for
     # those but not for floats (Spark puts NaN above every number and
     # treats NaN = NaN; Python NaN comparisons are all False).
-    # Crossover measured in docs/bench/r16_cc_path_ab.json; override with
-    # spark.rspl.ccDriverMaxEdges (0 disables).
+    # Crossover measured in docs/bench/r16_cc_path_ab.json
+    # (``_CC_DRIVER_MAX_EDGES``; 0 disables).
     import math as _math
 
     _iters_safe = _math.ceil(_math.log2(max(n_edges, 2))) + 4
     if (
         isinstance(e.schema["u"].dataType, (IntegralType, StringType))
-        and 0 < n_edges <= _cc_driver_max_edges(edges.sparkSession)
+        and 0 < n_edges <= _CC_DRIVER_MAX_EDGES
         and max_iters >= _iters_safe
     ):
         return _cc_union_find_driver(e)

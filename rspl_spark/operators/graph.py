@@ -34,54 +34,17 @@ Scale design (the part that matters at 100 TB):
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# unsafe-row estimates for the adaptive width rule below: a node row is
+from rspl_spark.plan_stats import advisory_width
+
+# unsafe-row estimates for the iteration frames' width: a node row is
 # one short string id (~40B header+payload); an edge row is two ids plus
 # a long degree/weight (~96B). Conservative (errs toward MORE
 # partitions); only the order of magnitude matters.
 _NODE_ROW_BYTES = 64
 _EDGE_ROW_BYTES = 96
-
-
-def _adaptive_width(df: DataFrame, n_rows: int, row_bytes: int) -> int:
-    """Scale-adaptive partition width for the iteration frames: the AQE
-    coalescing rule (ceil(bytes / advisoryPartitionSizeInBytes), clamped
-    to [1, spark.sql.shuffle.partitions]) applied where AQE cannot run —
-    localCheckpoint'd RDDs have no Exchange for AQE to re-plan, so a
-    fixed width is paid as that many tasks per stage per iteration
-    regardless of volume. At cluster scale the byte term saturates at
-    the configured shuffle width, so the 100 TB plan is unchanged; this
-    is NOT a local[32] constant (measured r15: the 4-iteration PageRank
-    gate spent most of its non-setup time launching 32-task stages over
-    ~1 MB frames). ``spark.rspl.graphPartitions`` pins an explicit
-    width."""
-    spark = df.sparkSession
-    explicit = None
-    try:
-        explicit = spark.conf.get("spark.rspl.graphPartitions", None)
-    except Exception:
-        pass
-    if explicit:
-        return int(explicit)
-    try:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        cap = 200
-    try:
-        from rspl_spark.streaming.sources import _parse_bytes
-
-        advisory = _parse_bytes(
-            spark.conf.get(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"
-            )
-        )
-    except Exception:
-        advisory = 64 * 2**20
-    return max(1, min(cap, math.ceil(n_rows * row_bytes / max(advisory, 1))))
 
 
 def pagerank(
@@ -125,7 +88,7 @@ def pagerank(
     frames (every per-iteration stage runs that many tasks); the
     default ``None`` derives it from the counted edge rows via the AQE
     advisory-size rule, clamped to the session shuffle width — see
-    ``_adaptive_width``.
+    :func:`rspl_spark.plan_stats.advisory_width`.
 
     ``tol`` adds convergence stopping: iterate until the L1 rank delta
     (Σ|rank_k − rank_{k−1}|) drops below ``tol`` or ``n_iter`` is
@@ -169,10 +132,13 @@ def pagerank(
     # Per-invocation only — blocks are released when the frame is GC'd.
     e = e.localCheckpoint(eager=False)
     n_edges = e.count()  # materializes e; sizes the widths below
-    width_n = n_partitions or _adaptive_width(
-        e, 2 * n_edges, _NODE_ROW_BYTES
-    )  # |V| <= 2|E|
-    width_e = n_partitions or _adaptive_width(e, n_edges, _EDGE_ROW_BYTES)
+    # AQE cannot re-plan localCheckpoint'd frames (no Exchange), so a
+    # fixed width is paid as that many tasks per stage per iteration
+    # whatever the volume (measured r15: the 4-iteration gate spent most
+    # of its non-setup time launching 32-task stages over ~1 MB frames)
+    spark = e.sparkSession
+    width_n = n_partitions or advisory_width(spark, 2 * n_edges * _NODE_ROW_BYTES)  # |V| <= 2|E|
+    width_e = n_partitions or advisory_width(spark, n_edges * _EDGE_ROW_BYTES)
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))

@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from rspl_spark.plan_stats import grouped_map_parallelism
+
 
 def _sq_dists(M: np.ndarray, C: np.ndarray) -> np.ndarray:
     """(n, k) squared L2 distances, bit-identical to
@@ -312,6 +314,20 @@ def exact_scored_pairs(
 PIN_MIN_ROWS = 65536  # below this, skip the parallelism pin (see below)
 
 
+def _pin_parallelism(
+    df: DataFrame, est_rows: int | None, cols: list[str], cap: int | None = None
+) -> DataFrame:
+    """Repartition ``df`` on ``cols`` to the grouped-map parallelism
+    (at most ``cap``), unless the caller counted fewer than
+    ``PIN_MIN_ROWS`` input rows. Without a count the pin applies."""
+    if est_rows is not None and est_rows < PIN_MIN_ROWS:
+        return df
+    par = grouped_map_parallelism(df.sparkSession)
+    if cap is not None:
+        par = max(1, min(par, cap))
+    return df.repartition(par, *cols)
+
+
 def cell_cosine_pairs(
     prepped: DataFrame,
     cell_col: str = "cid",
@@ -389,13 +405,7 @@ def cell_cosine_pairs(
     # repartition on the cell key satisfies the grouping's distribution
     # requirement (no second Exchange) and is exempt from coalescing.
     # Scale-aware: skipped when the caller counted the input small.
-    if est_rows is None or est_rows >= PIN_MIN_ROWS:
-        from rspl_spark.session import grouped_map_parallelism
-
-        par = grouped_map_parallelism(prepped.sparkSession)
-        if n_cells is not None:
-            par = max(1, min(par, n_cells))
-        prepped = prepped.repartition(par, cell_col)
+    prepped = _pin_parallelism(prepped, est_rows, [cell_col], n_cells)
     return prepped.groupBy(cell_col).applyInPandas(fn, out_schema)
 
 
@@ -503,11 +513,7 @@ def cell_cosine_pairs_blocked(
     # compute, so AQE's byte-size coalescing is the wrong objective;
     # same scale-awareness (small counted inputs skip the pin). No
     # n_cells cap here — the grid multiplies groups past the cell count.
-    if est_rows is None or est_rows >= PIN_MIN_ROWS:
-        from rspl_spark.session import grouped_map_parallelism
-
-        par = grouped_map_parallelism(exploded.sparkSession)
-        exploded = exploded.repartition(par, cell_col, "_bi", "_bj")
+    exploded = _pin_parallelism(exploded, est_rows, [cell_col, "_bi", "_bj"])
     return (
         exploded.groupBy(cell_col, "_bi", "_bj")
         .applyInPandas(fn, out_schema)
@@ -740,13 +746,7 @@ def pq_adc_topk(
     part = encoded.mapInPandas(
         scan, schema=f"query_id long, {id_col} long, adc double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc(id_col))
-    return (
-        part.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= topk)
-        .select("query_id", id_col, F.round("adc", 6).alias("adc"), "rk")
-        .orderBy("query_id", "rk")
-    )
+    return topk_by_score(part, topk, item=id_col, score="adc", out="adc").orderBy("query_id", "rk")
 
 
 # --- IVF cells and SRP bands: candidate search + exact cosine rerank -------
@@ -788,22 +788,36 @@ def rank_cells(prep: DataFrame, centp: DataFrame, id_col: str, n_keep: int) -> D
     )
 
 
+def topk_by_score(
+    scored: DataFrame,
+    k: int,
+    part: str = "query_id",
+    item: str = "vec_id",
+    score: str = "raw_score",
+    out: str = "score",
+) -> DataFrame:
+    """(part, item, out, rk): the ``k`` highest-``score`` rows per
+    ``part`` value, ranked 1..k by ROW_NUMBER with ties to the lowest
+    ``item``, the score rounded to 6dp as ``out``. The rank window sits
+    directly under the filter, so Spark plans it as a WindowGroupLimit."""
+    w = Window.partitionBy(part).orderBy(F.desc(score), F.asc(item))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select(part, item, F.round(score, 6).alias(out), "rk")
+    )
+
+
 def cosine_rerank(cand: DataFrame, topk: int) -> DataFrame:
     """(query_id, vec_id, score, rk): exact cosine top-k over candidate
     (query, stored vector) pairs — columns query_id/q_emb/q_nrm and
     vec_id/emb/nrm — ties to the lowest vec_id, score rounded to 6dp."""
-    w = Window.partitionBy("query_id").orderBy(F.desc("raw_score"), F.asc("vec_id"))
-    return (
-        cand.select(
-            "query_id",
-            "vec_id",
-            (dot(F.col("q_emb"), F.col("emb")) / F.nullif(F.col("q_nrm") * F.col("nrm"), F.lit(0.0))).alias("raw_score"),
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= topk)
-        .select("query_id", "vec_id", F.round("raw_score", 6).alias("score"), "rk")
-        .orderBy("query_id", "rk")
+    scored = cand.select(
+        "query_id",
+        "vec_id",
+        (dot(F.col("q_emb"), F.col("emb")) / F.nullif(F.col("q_nrm") * F.col("nrm"), F.lit(0.0))).alias("raw_score"),
     )
+    return topk_by_score(scored, topk).orderBy("query_id", "rk")
 
 
 def ivf_probe_topk(
@@ -1156,7 +1170,7 @@ def int8_topk(
     int8 codes (deterministic across engines — no float accumulation in
     the selection step), keep ``candidates`` per query, then rerank those
     with the exact float cosine. Output (query_id, vec_id, score, rk),
-    rk <= k by (cosine desc, vec_id).
+    rk <= k by (cosine desc, vec_id), score rounded to 6dp.
 
     Scale shape: the corpus is scanned as CODES ONLY (1 byte/dim — 4x
     less than float32 off disk and through memory); the query codes
@@ -1196,8 +1210,7 @@ def int8_topk(
     )
     a = unit_prep(corpus, "cid", "a_emb", "a_nrm", vec_col, id_col)
     b = unit_prep(queries, "qid", "b_emb", "b_nrm", vec_col, id_col)
-    wk = Window.partitionBy("query_id").orderBy(F.desc("raw_score"), F.asc("vec_id"))
-    return (
+    scored = (
         cand.join(a, "cid")
         .join(F.broadcast(b), "qid")
         .select(
@@ -1208,6 +1221,5 @@ def int8_topk(
                 / F.nullif(F.col("a_nrm") * F.col("b_nrm"), F.lit(0.0))
             ).alias("raw_score"),
         )
-        .withColumn("rk", F.row_number().over(wk))
-        .filter(F.col("rk") <= k)
     )
+    return topk_by_score(scored, k)

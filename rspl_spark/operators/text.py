@@ -266,12 +266,12 @@ def repetition_signals(
 #   268 MB (54M aggregate rows): localCheckpoint blocks EXHAUST the
 #     8 GB local heap (fatal OOM) while the plain plan completes.
 # The upper bound is a LOCAL-MODE memory guard, placed between the
-# largest measured win (80 MB) and the measured failure (268 MB); a
-# cluster deployment with real executor memory should raise it or pin
-# spark.rspl.tfidfMaterialize=on — at 100 TB, avoiding the second full
-# corpus scan is the first-order win (guide §8: decide on small rows,
-# scan heavy bytes once) and the aggregate belongs in durable storage
-# rather than localCheckpoint blocks anyway.
+# largest measured win (80 MB) and the measured failure (268 MB). It is
+# the value to revisit for a cluster with real executor memory: at
+# 100 TB, avoiding the second full corpus scan is the first-order win
+# (guide §8: decide on small rows, scan heavy bytes once) and the
+# aggregate belongs in durable storage rather than localCheckpoint
+# blocks anyway.
 _TFIDF_MAT_MIN_LEAF_BYTES = 2 * 2**20
 _TFIDF_MAT_MAX_LEAF_BYTES = 128 * 2**20
 
@@ -281,31 +281,13 @@ def _tfidf_materialize(df: DataFrame) -> bool:
     the blocks are much smaller than the token-explode recompute they
     save, so the trade loses only while the fixed extra-job constant
     dominates (tiny corpora) or once the blocks threaten local memory
-    (huge corpora; see the sweep table above).
-    ``spark.rspl.tfidfMaterialize`` ∈ {on, off, auto}; auto engages when
-    the corpus frame's leaf input bytes lie in
-    [``spark.rspl.tfidfMaterializeMinBytes``,
-    ``spark.rspl.tfidfMaterializeMaxBytes``). Unknown size (-1) keeps
-    the plain two-scan plan."""
-    spark = df.sparkSession
-    from rspl_spark.plan_stats import leaf_input_bytes, materialize_mode
+    (huge corpora; see the sweep table above). Engages when the corpus
+    frame's leaf input bytes lie in [``_TFIDF_MAT_MIN_LEAF_BYTES``,
+    ``_TFIDF_MAT_MAX_LEAF_BYTES``); unknown size (-1) keeps the plain
+    two-scan plan."""
+    from rspl_spark.plan_stats import leaf_input_bytes
 
-    mode = materialize_mode(spark, "spark.rspl.tfidfMaterialize", "auto")
-    if mode == "off":
-        return False
-    if mode == "on":
-        return True
-
-    def _conf_bytes(key: str, default: int) -> int:
-        try:
-            return int(spark.conf.get(key, str(default)))
-        except Exception:
-            return default
-
-    lo = _conf_bytes("spark.rspl.tfidfMaterializeMinBytes", _TFIDF_MAT_MIN_LEAF_BYTES)
-    hi = _conf_bytes("spark.rspl.tfidfMaterializeMaxBytes", _TFIDF_MAT_MAX_LEAF_BYTES)
-    leaf = leaf_input_bytes(df)
-    return lo <= leaf < hi
+    return _TFIDF_MAT_MIN_LEAF_BYTES <= leaf_input_bytes(df) < _TFIDF_MAT_MAX_LEAF_BYTES
 
 
 def tfidf_top_terms(

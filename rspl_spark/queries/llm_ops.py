@@ -44,6 +44,7 @@ from rspl_spark.operators.similarity import (
     srp_band_rows,
     srp_band_topk,
     srp_sketch_col,
+    topk_by_score,
     unit_prep,
 )
 from rspl_spark.operators.similarity import cosine_expr as cosine
@@ -595,13 +596,7 @@ def q_cosine_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", "raw_score")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("raw_score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "vec_id", F.round("raw_score", 6).alias("score"), "rk")
-        .orderBy("query_id", "rk")
-    )
+    return topk_by_score(scored, 5).orderBy("query_id", "rk")
 
 
 # IVF-style ANN: coarse-quantize every vector to its nearest of 8 fixed
@@ -1229,14 +1224,8 @@ def q_embedding_nearest_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = exact_scored_pairs(
         a, b, "raw_score", allow_quadratic=True, broadcast_probes=False
     ).filter(F.col("vec_id") != F.col("nn_id"))
-    w = Window.partitionBy("vec_id").orderBy(F.desc("raw_score"), F.asc("nn_id"))
-    return (
-        scored.select("vec_id", "nn_id", "raw_score")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "nn_id", F.round("raw_score", 6).alias("score"))
-        .orderBy("vec_id")
-    )
+    nearest = topk_by_score(scored.select("vec_id", "nn_id", "raw_score"), 1, part="vec_id", item="nn_id")
+    return nearest.drop("rk").orderBy("vec_id")
 
 
 # Int8 symmetric quantization of embeddings (the 4x-memory-compression
@@ -2480,13 +2469,7 @@ def _adc_rerank(spark, enc, cbs, queries, e) -> DataFrame:
         )
         .withColumn("ip", dot(F.col("q_emb"), F.col("v_emb")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("ip"), F.asc("vec_id"))
-    return (
-        rer.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select("query_id", "vec_id", F.round("ip", 6).alias("score"), "rk")
-        .orderBy("query_id", "rk")
-    )
+    return topk_by_score(rer, 5, score="ip").orderBy("query_id", "rk")
 
 
 @query("q_ann_pq_adc", oracle=_pq_oracle(), tags=("llm", "similarity", "iterative"))

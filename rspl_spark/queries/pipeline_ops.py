@@ -181,10 +181,7 @@ def q_cosine_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 10)
-    out = int8_topk(e, q, k=_I8_K, candidates=_I8_CAND)
-    return out.select(
-        "query_id", "vec_id", F.round("raw_score", 6).alias("score"), "rk"
-    ).orderBy("query_id", "rk")
+    return int8_topk(e, q, k=_I8_K, candidates=_I8_CAND).orderBy("query_id", "rk")
 
 
 # ---------------------------------------------------------------------------

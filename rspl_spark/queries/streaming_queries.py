@@ -1265,7 +1265,7 @@ def q_pelican_capability_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         from rspl_spark.streaming.sources import sized_stream_shuffle
 
         # hold the sized width until q.stop(): the micro-batch thread
-        # captures spark.sql.shuffle.partitions asynchronously
+        # captures the session's shuffle width asynchronously
         with sized_stream_shuffle(out, [tmp]):
             q = (
                 out.writeStream.format("memory")

@@ -58,37 +58,3 @@ def get_spark(app_name: str = "rspl-spark", cpus: int | str | None = None) -> Sp
     )
     return builder.getOrCreate()
 
-
-def grouped_map_parallelism(spark: SparkSession) -> int:
-    """Partition count to PIN on Python-compute-bound grouped-map
-    stages (applyInPandas with quadratic or heavy per-group work),
-    where AQE's byte-size exchange coalescing is the wrong objective
-    (measured r13: a 1M-row/1000-key stage coalesced onto 8 of 32
-    cores).
-
-    Cluster-safe per r13 ADVICE: ``defaultParallelism`` alone under-pins
-    with dynamic allocation (few executors at PLAN time → a pin far
-    below eventual cluster cores, and AQE-exempt so never corrected)
-    and is unavailable on Spark Connect (no ``sparkContext``). Take
-    max(defaultParallelism, spark.sql.shuffle.partitions) — the larger
-    of "cores now" and "the cluster's configured shuffle width" — and
-    let deployments override both with ``spark.rspl.groupedMapParallelism``.
-    """
-    explicit = None
-    try:
-        explicit = spark.conf.get("spark.rspl.groupedMapParallelism", None)
-    except Exception:
-        pass
-    if explicit:
-        return int(explicit)
-    dp = 0
-    try:
-        dp = spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect sessions have no sparkContext
-        pass
-    sp = 0
-    try:
-        sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:  # e.g. "auto" on some platforms
-        pass
-    return max(dp, sp) or 200

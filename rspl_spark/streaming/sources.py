@@ -15,13 +15,14 @@ each chunk file becomes one micro-batch, processed in mtime order.
 from __future__ import annotations
 
 import contextlib
-import math
 import os
 import tempfile
 import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+
+from rspl_spark.plan_stats import advisory_width, grouped_map_parallelism, tree_bytes
 
 
 def scratch_dir(prefix: str = "rspl_scratch_") -> str:
@@ -351,33 +352,10 @@ def seeded_batch_stream(seed_df: DataFrame, stream_df: DataFrame) -> DataFrame:
     return seed_df.unionByName(stream_df)
 
 
-def _tree_bytes(paths: list[str] | None) -> int:
-    """Total on-disk bytes under the given directories (0 if none)."""
-    total = 0
-    for p in paths or []:
-        for root, _dirs, files in os.walk(p):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
-    return total
-
-
 # parquet -> shuffle/state row-format expansion (zstd/snappy columnar vs
 # unsafe-row bytes); conservative multiplier so the width estimate errs
 # toward MORE partitions, never fewer than the data needs.
 _STATE_BYTES_EXPANSION = 4
-
-
-def _parse_bytes(v: str) -> int:
-    v = v.strip().lower()
-    for suf, mult in (("tb", 2**40), ("gb", 2**30), ("mb", 2**20),
-                      ("kb", 2**10), ("t", 2**40), ("g", 2**30),
-                      ("m", 2**20), ("k", 2**10), ("b", 1)):
-        if v.endswith(suf):
-            return int(float(v[: -len(suf)]) * mult)
-    return int(v)
 
 
 def stream_state_partitions(spark: SparkSession, source_bytes: int) -> int:
@@ -390,37 +368,12 @@ def stream_state_partitions(spark: SparkSession, source_bytes: int) -> int:
     data it holds. Measured r15 at sf0.1: q_stream_stream_join runs
     19.8 s at the session's 32 shuffle partitions vs 6.0 s at 8 and
     4.4 s at 2; the data per batch is well under one advisory
-    partition. Apply the sizing rule AQE itself would use: width =
-    ceil(expanded input bytes / advisoryPartitionSizeInBytes), clamped
-    to [1, spark.sql.shuffle.partitions]. At cluster scale the input
-    volume dwarfs the advisory size, so the width saturates at the
-    configured shuffle width and the scaled plan is unchanged — this
-    is NOT a local[32] constant.
-
-    Deployments can pin an explicit width with
-    ``spark.rspl.streamStatePartitions``.
-    """
-    explicit = None
-    try:
-        explicit = spark.conf.get("spark.rspl.streamStatePartitions", None)
-    except Exception:
-        pass
-    if explicit:
-        return int(explicit)
-    try:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        cap = 200
-    try:
-        advisory = _parse_bytes(
-            spark.conf.get(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"
-            )
-        )
-    except Exception:
-        advisory = 64 * 2**20
-    n = math.ceil(source_bytes * _STATE_BYTES_EXPANSION / max(advisory, 1))
-    return max(1, min(cap, n))
+    partition. So apply the sizing rule AQE itself would use,
+    :func:`rspl_spark.plan_stats.advisory_width`, to the expanded input
+    bytes. At cluster scale the input volume dwarfs the advisory size,
+    so the width saturates at the configured shuffle width and the
+    scaled plan is unchanged — this is NOT a local[32] constant."""
+    return advisory_width(spark, source_bytes * _STATE_BYTES_EXPANSION)
 
 
 # sized_stream_shuffle mutates SESSION-global shuffle width for the
@@ -475,7 +428,7 @@ def sized_stream_shuffle(stream_df: DataFrame, source_dirs: list[str] | None):
 
     A stream whose plan holds a keyed PYTHON stateful operator
     (applyInPandasWithState / transformWithStateInPandas) is floored
-    at :func:`rspl_spark.session.grouped_map_parallelism` — the same
+    at :func:`rspl_spark.plan_stats.grouped_map_parallelism` — the same
     pin the batch grouped-map stages use: there the stage cost is
     per-key Python compute, not per-partition state-store overhead,
     and byte-derived width is the wrong objective (measured r15: the
@@ -486,10 +439,8 @@ def sized_stream_shuffle(stream_df: DataFrame, source_dirs: list[str] | None):
         yield None
         return
     spark = stream_df.sparkSession
-    n = stream_state_partitions(spark, _tree_bytes(source_dirs))
+    n = stream_state_partitions(spark, tree_bytes(source_dirs))
     if _has_python_state(stream_df):
-        from rspl_spark.session import grouped_map_parallelism
-
         n = max(n, grouped_map_parallelism(spark))
     with _SIZED_SHUFFLE_LOCK:
         old = spark.conf.get("spark.sql.shuffle.partitions")
@@ -522,7 +473,7 @@ def run_to_memory_sink(
     ckpt = scratch_dir("rspl_ckpt_")
     try:
         # the width must stay set until the query TERMINATES: the
-        # micro-batch thread reads spark.sql.shuffle.partitions
+        # micro-batch thread reads the session's shuffle width
         # asynchronously after start() returns
         with sized_stream_shuffle(stream_df, source_dirs):
             q = (

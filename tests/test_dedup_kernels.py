@@ -93,14 +93,15 @@ def test_null_text_not_clustered_as_duplicates(spark):
     assert {r["cluster"] for r in cl} == {3}
 
 
-def test_cc_driver_fast_path_parity_and_gating(spark):
+def test_cc_driver_fast_path_parity_and_gating(spark, monkeypatch):
     """r16 size-gated driver union-find in connected_components_star:
     bit-identical to the distributed star fixpoint (same (doc_id,
     cluster=min id) rows, same schema), engaged only under the edge
     cutover AND an iteration budget covering guaranteed star
-    convergence (log2(n_edges)+4), disabled by conf 0."""
+    convergence (log2(n_edges)+4), disabled by a cap of 0."""
     import random
 
+    from rspl_spark.operators import dedup
     from rspl_spark.operators.dedup import connected_components_star
 
     rng = random.Random(11)
@@ -111,12 +112,10 @@ def test_cc_driver_fast_path_parity_and_gating(spark):
     pairs += [(5000, 5000), (6000, 6001), (6001, 6000)]  # self-loop + dup
     df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
 
-    spark.conf.set("spark.rspl.ccDriverMaxEdges", "0")  # force distributed
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)  # force distributed
         want_df = connected_components_star(df)
         want = sorted(map(tuple, want_df.collect()))
-    finally:
-        spark.conf.unset("spark.rspl.ccDriverMaxEdges")
     got_df = connected_components_star(df)  # default: fast path engaged
     got = sorted(map(tuple, got_df.collect()))
     assert got == want
@@ -134,11 +133,12 @@ def test_cc_driver_fast_path_parity_and_gating(spark):
     assert "Union" in slow_plan
 
 
-def test_cc_float_ids_with_nan_stay_on_distributed_path(spark):
+def test_cc_float_ids_with_nan_stay_on_distributed_path(spark, monkeypatch):
     """Float ids are gated off the driver union-find: Python's `<` and
     dict keys treat every NaN as distinct and unordered, while Spark
     treats NaN = NaN and orders it above every number. Default labels
     must equal the forced-distributed ones, NaN node included."""
+    from rspl_spark.operators import dedup
     from rspl_spark.operators.dedup import connected_components_star
 
     nan = float("nan")
@@ -150,17 +150,12 @@ def test_cc_float_ids_with_nan_stay_on_distributed_path(spark):
         key = lambda x: "nan" if x != x else x  # noqa: E731
         return {(key(d), key(c)) for d, c in out.collect()}
 
-    spark.conf.set("spark.rspl.ccDriverMaxEdges", "0")  # force distributed
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)  # force distributed
         want = labels(connected_components_star(df))
-    finally:
-        spark.conf.unset("spark.rspl.ccDriverMaxEdges")
-    spark.conf.set("spark.rspl.ccDriverMaxEdges", "1000000")  # size gate open
-    try:
-        default = connected_components_star(df)
-        got = labels(default)
-    finally:
-        spark.conf.unset("spark.rspl.ccDriverMaxEdges")
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 1000000)  # size gate open
+    default = connected_components_star(df)
+    got = labels(default)
     assert got == want
     assert want == {
         (1.0, 1.0), (2.0, 1.0), (5.0, 1.0), ("nan", 1.0), (7.0, 7.0), (8.0, 7.0), (9.5, 7.0)

@@ -341,22 +341,13 @@ def test_adaptive_width_rule(spark):
     """r15 optimization pin: the materialized-frame width derives from
     counted rows via the AQE advisory rule — tiny graphs get 1
     partition, huge byte estimates saturate at the session shuffle
-    width, and spark.rspl.graphPartitions pins an explicit width."""
-    from rspl_spark.operators.graph import (
-        _EDGE_ROW_BYTES,
-        _adaptive_width,
-        pagerank,
-    )
+    width."""
+    from rspl_spark.operators.graph import _EDGE_ROW_BYTES, pagerank
+    from rspl_spark.plan_stats import advisory_width
 
-    df = spark.range(1)
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert _adaptive_width(df, 10, _EDGE_ROW_BYTES) == 1
-    assert _adaptive_width(df, 10**12, _EDGE_ROW_BYTES) == cap
-    spark.conf.set("spark.rspl.graphPartitions", "7")
-    try:
-        assert _adaptive_width(df, 10, _EDGE_ROW_BYTES) == 7
-    finally:
-        spark.conf.unset("spark.rspl.graphPartitions")
+    assert advisory_width(spark, 10 * _EDGE_ROW_BYTES) == 1
+    assert advisory_width(spark, 10**12 * _EDGE_ROW_BYTES) == cap
     # the rule is live in pagerank (tiny graph -> 1-partition frames):
     # ranks on a 3-node chain still come out exact (semantics pinned by
     # test_pagerank_* above; this run just exercises the width path)

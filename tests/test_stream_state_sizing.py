@@ -6,9 +6,9 @@ volume (bytes / advisory partition size, clamped to the configured
 shuffle width), with a compute-parallelism floor for Python-stateful
 streams. These tests pin the sizing rule's edges: tiny input → 1,
 large input → saturates at the session width (the cluster plan is
-unchanged), Python-stateful floors at grouped-map parallelism, the
-explicit conf override wins, and the session conf is restored after a
-sized run — including when the stream raises.
+unchanged), Python-stateful floors at grouped-map parallelism, and
+the session conf is restored after a sized run — including when the
+stream raises.
 """
 
 from __future__ import annotations
@@ -18,13 +18,9 @@ import os
 import pytest
 
 from rspl_spark.dsl import map_sp
-from rspl_spark.session import grouped_map_parallelism
+from rspl_spark.plan_stats import grouped_map_parallelism, tree_bytes
 from rspl_spark.streaming import run_mealy_stream
-from rspl_spark.streaming.sources import (
-    _tree_bytes,
-    sized_stream_shuffle,
-    stream_state_partitions,
-)
+from rspl_spark.streaming.sources import sized_stream_shuffle, stream_state_partitions
 
 
 def _advisory_and_cap(spark):
@@ -50,15 +46,6 @@ def test_width_scales_with_bytes_between_extremes(spark):
     got = stream_state_partitions(spark, bytes_for_two)
     assert 1 <= got <= cap
     assert got == min(cap, 2)
-
-
-def test_explicit_override_wins(spark):
-    spark.conf.set("spark.rspl.streamStatePartitions", "5")
-    try:
-        assert stream_state_partitions(spark, 10_000) == 5
-        assert stream_state_partitions(spark, 2**40) == 5
-    finally:
-        spark.conf.unset("spark.rspl.streamStatePartitions")
 
 
 def test_python_stateful_floors_at_grouped_map_parallelism(spark, tmp_path):
@@ -148,6 +135,6 @@ def test_tree_bytes_walks_nested_dirs(tmp_path):
     (tmp_path / "a" / "f1").write_bytes(b"x" * 10)
     (tmp_path / "a" / "b").mkdir()
     (tmp_path / "a" / "b" / "f2").write_bytes(b"y" * 20)
-    assert _tree_bytes([str(tmp_path)]) == 30
-    assert _tree_bytes(None) == 0
-    assert _tree_bytes([os.path.join(str(tmp_path), "missing")]) == 0
+    assert tree_bytes([str(tmp_path)]) == 30
+    assert tree_bytes(None) == 0
+    assert tree_bytes([os.path.join(str(tmp_path), "missing")]) == 0

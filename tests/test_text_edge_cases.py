@@ -24,11 +24,12 @@ from rspl_spark.operators.text import (
 ROWS = [(0, ""), (1, "   "), (2, "x"), (3, "a a a a a"), (4, "\t\n "), (5, "normal text here")]
 
 
-def test_tfidf_materialize_window_and_result_identity(spark, tmp_path):
+def test_tfidf_materialize_window_and_result_identity(spark, tmp_path, monkeypatch):
     """r16 scale-gated materialization of the (doc, term) aggregate:
-    the auto policy engages only inside the measured leaf-bytes window
-    (docs/bench/r16_tfidf_mat_sweep.json), the explicit modes win, and
-    the materialized result is IDENTICAL to the plain two-scan plan."""
+    the policy engages only inside the measured leaf-bytes window
+    (docs/bench/r16_tfidf_mat_sweep.json), and the materialized result
+    is IDENTICAL to the plain two-scan plan."""
+    from rspl_spark.operators import text
     from rspl_spark.operators.text import (
         _TFIDF_MAT_MAX_LEAF_BYTES,
         _TFIDF_MAT_MIN_LEAF_BYTES,
@@ -52,27 +53,21 @@ def test_tfidf_materialize_window_and_result_identity(spark, tmp_path):
     ).write.parquet(path)
     df = spark.read.parquet(path)
     assert _tfidf_materialize(df) is False
-    # window edges via conf (same frame, thresholds moved around it)
-    spark.conf.set("spark.rspl.tfidfMaterializeMinBytes", "1")
-    try:
+    # window edges (same frame, thresholds moved around it)
+    with monkeypatch.context() as m:
+        m.setattr(text, "_TFIDF_MAT_MIN_LEAF_BYTES", 1)
         assert _tfidf_materialize(df) is True  # now >= min and < max
-        spark.conf.set("spark.rspl.tfidfMaterializeMaxBytes", "2")
+        m.setattr(text, "_TFIDF_MAT_MAX_LEAF_BYTES", 2)
         assert _tfidf_materialize(df) is False  # above the window
-    finally:
-        spark.conf.unset("spark.rspl.tfidfMaterializeMinBytes")
-        spark.conf.unset("spark.rspl.tfidfMaterializeMaxBytes")
-    # explicit modes override the window
-    spark.conf.set("spark.rspl.tfidfMaterialize", "on")
-    try:
+    # on: window [1, max); off: max 0
+    with monkeypatch.context() as m:
+        m.setattr(text, "_TFIDF_MAT_MIN_LEAF_BYTES", 1)
         assert _tfidf_materialize(df) is True
         got_on = sorted(map(tuple, tfidf_top_terms(df, k=2).collect()))
-    finally:
-        spark.conf.set("spark.rspl.tfidfMaterialize", "off")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(text, "_TFIDF_MAT_MAX_LEAF_BYTES", 0)
         assert _tfidf_materialize(df) is False
         got_off = sorted(map(tuple, tfidf_top_terms(df, k=2).collect()))
-    finally:
-        spark.conf.unset("spark.rspl.tfidfMaterialize")
     assert got_on == got_off and len(got_on) == 400
     # defaults sane: window is non-empty and ordered
     assert 0 < _TFIDF_MAT_MIN_LEAF_BYTES < _TFIDF_MAT_MAX_LEAF_BYTES

@@ -41,6 +41,7 @@ import tempfile
 import time
 import uuid
 from typing import Callable
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -170,17 +171,27 @@ def cc_graph(spark, n_edges: int) -> DataFrame:
     return chains.unionByName(clusters)
 
 
+def patched(build: Build, target, **consts) -> Build:
+    """``build`` run with ``target``'s module constants set to ``consts``:
+    the size policy decides a path while the frame is built, so a
+    variant that forces a path patches the operator's cutover."""
+    def run() -> DataFrame:
+        with mock.patch.multiple(target, **consts):
+            return build()
+    return run
+
+
 def cc_path(spark, args, emit) -> None:
     """connected_components_star forced distributed vs forced driver."""
-    from rspl_spark.operators.dedup import connected_components_star
+    from rspl_spark.operators import dedup
 
-    key = "spark.rspl.ccDriverMaxEdges"
     for n in args.edges:
         df = cc_graph(spark, n).localCheckpoint()  # isolate CC from generation
-        emit(str(n), block(
-            spark, dict.fromkeys(("distributed", "driver"), lambda: connected_components_star(df)),
-            args.reps, conf={"distributed": {key: "0"}, "driver": {key: str(2**31)}},
-        ))
+        build = lambda: dedup.connected_components_star(df)  # noqa: E731
+        emit(str(n), block(spark, {
+            "distributed": patched(build, dedup, _CC_DRIVER_MAX_EDGES=0),
+            "driver": patched(build, dedup, _CC_DRIVER_MAX_EDGES=2**31),
+        }, args.reps))
 
 
 # -- tfidf_mat: (doc, term) aggregate plain vs materialized
@@ -206,15 +217,17 @@ def synth_corpus(spark, n_docs: int, path: str) -> DataFrame:
 
 
 def tfidf_mat(spark, args, emit) -> None:
-    """tfidf_top_terms with spark.rspl.tfidfMaterialize off vs on."""
-    from rspl_spark.operators.text import tfidf_top_terms
+    """tfidf_top_terms with the (doc, term) aggregate materialized off
+    (empty window) vs on (a window holding every known corpus size)."""
+    from rspl_spark.operators import text
     from rspl_spark.plan_stats import leaf_input_bytes
 
     def measure(label: str, corpus: DataFrame) -> None:
-        res = block(
-            spark, dict.fromkeys(("off", "on"), lambda: tfidf_top_terms(corpus, k=3)), args.reps,
-            conf={v: {"spark.rspl.tfidfMaterialize": v} for v in ("off", "on")},
-        )
+        build = lambda: text.tfidf_top_terms(corpus, k=3)  # noqa: E731
+        res = block(spark, {
+            "off": patched(build, text, _TFIDF_MAT_MAX_LEAF_BYTES=0),
+            "on": patched(build, text, _TFIDF_MAT_MIN_LEAF_BYTES=0, _TFIDF_MAT_MAX_LEAF_BYTES=2**64),
+        }, args.reps)
         emit(label, {"leaf_bytes": leaf_input_bytes(corpus), **res})
 
     if args.gate_sf:
